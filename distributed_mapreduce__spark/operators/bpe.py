@@ -44,6 +44,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, IntegerType, StringType
 
+from ..sources.tables import local_frame
+
 #: pre-tokenizer — the single source: text_analysis.bpe_ish_token_count
 #: imports this constant, so its count is this tokenizer's zero-merge
 #: upper bound by construction.
@@ -249,7 +251,8 @@ def save_merges(spark, merges: list[tuple[str, str]], path: str) -> None:
     """Persist the merge table as (rank, left, right) parquet — the
     train-once/apply-everywhere artifact (the analog of a tokenizer's
     merges.txt). Rank order IS the tokenizer; the loader restores it."""
-    spark.createDataFrame(
+    local_frame(
+        spark,
         [(i, a, b) for i, (a, b) in enumerate(merges)],
         "rank int, left string, right string",
     ).write.mode("overwrite").parquet(path)

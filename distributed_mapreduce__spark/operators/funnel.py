@@ -29,6 +29,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 
 def apply_filters(
     df: DataFrame, rules: Sequence[tuple[str, Column]]
@@ -85,7 +87,8 @@ def funnel_report(
     )
 
     names = [n for n, _ in rules]
-    rule_df = tagged.sparkSession.createDataFrame(
+    rule_df = local_frame(
+        tagged.sparkSession,
         [(i + 1, n) for i, n in enumerate(names)],
         "rule_idx int, rule string",
     )

@@ -129,13 +129,19 @@ def fuzzy_key_join(
     # shares every char they agree on); the common suffix is the same
     # computation over reversed keys. One driver-side row per side —
     # the per-side min LENGTH also answers the short-core fallback
-    # gate below, replacing what used to be two probe jobs.
+    # gate below, replacing what used to be two probe jobs. The lemma
+    # needs Spark's min/max to order by code point, as the Python
+    # commonprefix below compares: a session default collation such as
+    # UTF8_LCASE orders 'a' and 'B' otherwise and would trim characters
+    # some keys do not share. So the extremes are taken over the keys
+    # collated UTF8_BINARY, whatever the session default.
     def affix_stats(keys: DataFrame, side: str):
+        b = F.collate(F.col(side), "UTF8_BINARY")
         return keys.agg(
-            F.min(side),
-            F.max(side),
-            F.min(F.reverse(side)),
-            F.max(F.reverse(side)),
+            F.min(b),
+            F.max(b),
+            F.min(F.reverse(b)),
+            F.max(F.reverse(b)),
             F.min(F.length(side)),
         ).first()
 

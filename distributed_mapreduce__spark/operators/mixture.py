@@ -39,6 +39,7 @@ from collections.abc import Mapping
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
 from .sampling import hash_uniform
 
 
@@ -63,7 +64,8 @@ def mixture_rates(
     pass when the group inventory is already known."""
     spark = df.sparkSession
     total = float(sum(weights.values()))
-    wdf = spark.createDataFrame(
+    wdf = local_frame(
+        spark,
         [(g, w / total) for g, w in weights.items()],
         f"{group_col} string, p double",
     )

@@ -24,6 +24,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 
 def _as_double(col: Column) -> Column:
     return F.transform(col, lambda x: x.cast("double"))
@@ -130,8 +132,8 @@ def pq_train(
             (sub, code, [float(x) for x in c])
             for code, c in enumerate(model.clusterCenters())
         ]
-    return spark.createDataFrame(
-        rows, "sub int, code int, centroid array<double>"
+    return local_frame(
+        spark, rows, "sub int, code int, centroid array<double>"
     )
 
 

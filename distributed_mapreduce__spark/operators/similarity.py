@@ -27,6 +27,7 @@ import math
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
 from .relational import top_k_per_group
 
 N_PLANES = 8
@@ -491,7 +492,8 @@ def ivf_topk(
     assign, model = quantizer or ivf_assignments(
         corpus, k=n_cells, vec_col=vec_col
     )
-    centroid_df = spark.createDataFrame(
+    centroid_df = local_frame(
+        spark,
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
         "cell int, centroid array<double>",
     )

@@ -16,6 +16,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 # Tiny per-language signature-word profiles for the n-gram/word heuristic
 # language identifier. Deliberately minimal — the operator's shape (profile
 # join + per-doc argmax) is what scales; production swaps in real profiles.
@@ -97,7 +99,7 @@ def bpe_ish_token_count(col: str = "text") -> Column:
 def language_profiles_df(spark) -> DataFrame:
     """(plang, pword) long-form profile table (broadcast-sized)."""
     rows = [(lang, w) for lang, words in LANG_PROFILES.items() for w in words]
-    return spark.createDataFrame(rows, ["plang", "pword"])
+    return local_frame(spark, rows, "plang string, pword string")
 
 
 def lang_id(docs: DataFrame, profiles: DataFrame) -> DataFrame:

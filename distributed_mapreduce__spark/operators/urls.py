@@ -34,6 +34,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 #: scheme://host[:port]/path[?query][#fragment] — each piece extracted
 #: by group from the same anchored pattern in both engines.
 _SCHEME_RE = r"^([A-Za-z][A-Za-z0-9+.-]*)://"
@@ -371,8 +373,8 @@ def blocklist_filter(
     ``isin`` literal): correct plan shape for real blocklists with
     millions of entries, zero extra shuffle of the corpus."""
     spark = df.sparkSession
-    blk = spark.createDataFrame(
-        [(d.lower(),) for d in blocked_domains], "domain_blocked string"
+    blk = local_frame(
+        spark, [(d.lower(),) for d in blocked_domains], "domain_blocked string"
     )
     withd = df.withColumn("_dom", registered_domain(url_host(F.col(url_col))))
     return (

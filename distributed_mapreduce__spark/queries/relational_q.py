@@ -19,7 +19,7 @@ from pyspark.sql import functions as F
 
 from ..operators.relational import anti_join, charge, dec, disc_price, semi_join
 from ..registry import register, register_local
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_frame
 
 
 # --- O1/O4 analog: pushdown scan ------------------------------------------
@@ -671,9 +671,10 @@ def orders_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     the interval table is small. (Many/overlapping intervals at scale:
     bucketize the range key and equi-join on bucket first.)"""
     orders = load_table(spark, sf_dir, "orders")
-    bands = spark.createDataFrame(
+    bands = local_frame(
+        spark,
         [("small", 0.0, 50_000.0), ("mid", 50_000.0, 200_000.0), ("big", 200_000.0, 1e9)],
-        ["band_name", "lo", "hi"],
+        "band_name string, lo double, hi double",
     )
     return (
         orders.join(

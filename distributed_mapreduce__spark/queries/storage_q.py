@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..registry import register, register_local
-from ..sources.tables import load_table
+from ..sources.tables import load_table, local_frame
 
 _TX_ORACLE = """
 SELECT l_returnflag,
@@ -298,7 +298,7 @@ def cdc_rollup_view_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     tx_write(events.filter(F.col("event_id") % 2 == 0), table)
     tx_write(events.filter(F.col("event_id") % 2 == 1), table)
     tx_delete(
-        spark.createDataFrame([("click",)], "event_type string"),
+        local_frame(spark, [("click",)], "event_type string"),
         table,
         "event_type",
         mode="merge_on_read",

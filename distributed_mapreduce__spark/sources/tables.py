@@ -189,6 +189,46 @@ def register_views(spark: SparkSession, sf_dir: str, *names: str) -> None:
         df.createOrReplaceTempView(name)
 
 
+def local_frame(spark: SparkSession, rows, schema) -> DataFrame:
+    """A DataFrame over driver-side ``rows`` — tuples in ``schema``'s
+    field order, or dicts keyed by field name (missing keys are NULL)
+    — that Spark plans as a ``LocalRelation``.
+
+    ``schema`` is a DDL string or a ``StructType``; it is required, so
+    the column types never depend on the values. The rows go to the
+    JVM once, as one Arrow table, and live in the plan. Handing
+    ``createDataFrame`` a Python list instead plans a ``LogicalRDD``
+    over a parallelized Python RDD, so EVERY execution of a plan that
+    holds it starts Python workers to unpickle a few rows (every txlog
+    positional scan, hence every UPDATE and DELETE, paid for them).
+    The Arrow path is independent of
+    ``spark.sql.execution.arrow.pyspark.enabled``, so a caller-supplied
+    session with Arrow off still gets the local plan. This is the
+    package's only ``createDataFrame`` call (pinned by
+    tests/test_local_frame.py).
+    """
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    struct = (
+        schema if isinstance(schema, StructType)
+        else _parse_datatype_string(schema)
+    )
+    names = struct.fieldNames()
+    tuples = [
+        tuple(r.get(n) for n in names) if isinstance(r, dict) else r
+        for r in rows
+    ]
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*tuples)) or [()] * len(names)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
+    )
+    return spark.createDataFrame(table, struct)
+
+
 def read_parquet_evolving(spark: SparkSession, *paths: str) -> DataFrame:
     """Read parquet written across schema generations as ONE DataFrame.
 

@@ -40,6 +40,7 @@ import re
 
 from pyspark.sql import DataFrame, SparkSession
 
+from .tables import local_frame
 from .txlog import (
     tx_add_constraint,
     tx_compact,
@@ -612,7 +613,8 @@ def _history_frame(spark, path: str) -> DataFrame:
         + tuple(_ex(h.get(c)) for c in extras)
         for h in reversed(hist)
     ]
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "version long, action string, n_added long, n_removed long, "
         "txn string, ts double"
@@ -664,17 +666,18 @@ def _history_views(spark, sql: str) -> str:
 
 
 def _one_row_frame(spark, d: dict) -> DataFrame:
+    """``d`` as one row, columns in sorted key order: bool, int and str
+    values keep their type, anything else is JSON-encoded into a string
+    (None -> "null", lists/dicts -> JSON)."""
     import json as _json
 
+    types = {bool: "boolean", int: "bigint", str: "string"}
     flat = {
-        k: (
-            v
-            if isinstance(v, (int, bool, str))
-            else _json.dumps(v)  # None -> "null", lists/dicts -> JSON
-        )
-        for k, v in d.items()
+        k: v if type(v) in types else _json.dumps(v)
+        for k, v in sorted(d.items())
     }
-    return spark.createDataFrame([flat])
+    ddl = ", ".join(f"`{k}` {types[type(v)]}" for k, v in flat.items())
+    return local_frame(spark, [tuple(flat.values())], ddl)
 
 
 def tx_sql(spark: SparkSession, sql: str):

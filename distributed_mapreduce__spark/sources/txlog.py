@@ -90,6 +90,7 @@ from urllib.parse import unquote
 from pyspark.sql import DataFrame, SparkSession
 
 from .sinks import hadoop_fs
+from .tables import local_frame
 
 #: Write a full-snapshot checkpoint every this many commits; log replay
 #: per read is bounded by this, not by table age.
@@ -2103,7 +2104,7 @@ def _footer_minmax(
                     lo = mn if lo is None or mn < lo else lo
                     hi = mx if hi is None or mx > hi else hi
                 ent[c] = [lo, hi]
-            out["data/" + p.rsplit("/data/", 1)[-1]] = ent
+            out[f] = ent  # the caller's own name: the add list's key
         return out
     except Exception:
         return None
@@ -3160,8 +3161,8 @@ def tx_read(
         if snap.schema is not None:
             from pyspark.sql.types import StructType
 
-            return spark.createDataFrame(
-                [], StructType.fromJson(json.loads(snap.schema))
+            return local_frame(
+                spark, [], StructType.fromJson(json.loads(snap.schema))
             )
         all_files = _all_data_files(spark, path)
         if all_files:
@@ -3238,8 +3239,8 @@ def _pos_name_map(spark, files: list[str]) -> DataFrame:
                 "attribute rows"
             )
         base_map[b] = f
-    return spark.createDataFrame(
-        list(base_map.items()), "__dv_base string, _file string"
+    return local_frame(
+        spark, base_map.items(), "__dv_base string, _file string"
     )
 
 
@@ -3574,7 +3575,8 @@ def tx_files(
                 spec_at(snap.eps[f], tuple(part)),
             )
         )
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         rows,
         "file string, add_version long, size_bytes long, "
         "partition_values string, stats string, dv_targeted boolean, "
@@ -6113,7 +6115,7 @@ def _attach_row_ids_map(spark, base_map: dict, df: DataFrame) -> DataFrame:
     ]
     if not items:
         return df
-    bases = spark.createDataFrame(items, "_file string, __rb long")
+    bases = local_frame(spark, items, "_file string, __rb long")
     return (
         df.join(F.broadcast(bases), "_file", "left")
         .withColumn(
@@ -6169,7 +6171,8 @@ def tx_scan_with_row_ids(
         from pyspark.sql.types import LongType, StructField, StructType
 
         base = json.loads(snap.schema)["fields"] if snap.schema else []
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             StructType(
                 [StructField(_ROW_ID, LongType())]
@@ -6232,7 +6235,8 @@ def tx_scan_with_pos(
         base = (
             json.loads(snap.schema)["fields"] if snap.schema else []
         )
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [],
             StructType(
                 [

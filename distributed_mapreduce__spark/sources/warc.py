@@ -53,6 +53,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .tables import local_frame
+
 #: Parsed-record schema (the quarantine rows use warc_type='_malformed').
 WARC_SCHEMA = (
     "warc_file string, record_offset long, warc_type string, "
@@ -256,11 +258,10 @@ def read_warc(
     readable, oversized = _split_oversized(spark, list(paths), max_file_bytes)
     quarantine = None
     if oversized:
-        cols = [f.split()[0] for f in WARC_SCHEMA.split(", ")]
-        quarantine = spark.createDataFrame(
+        quarantine = local_frame(
+            spark,
             [
                 {
-                    **{c: None for c in cols},
                     "warc_file": p,
                     "warc_type": "_malformed",
                     "error": (
@@ -272,12 +273,12 @@ def read_warc(
                 }
                 for p, size in oversized
             ],
-            schema=WARC_SCHEMA,
+            WARC_SCHEMA,
         )
     if not readable:
         if quarantine is not None:
             return quarantine
-        return spark.createDataFrame([], schema=WARC_SCHEMA)
+        return local_frame(spark, [], WARC_SCHEMA)
     files = spark.read.format("binaryFile").load(readable)
     keep = set(record_types) if record_types is not None else None
 

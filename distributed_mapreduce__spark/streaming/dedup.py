@@ -359,6 +359,7 @@ def tx_dedup_table(
     given snapshot; ``verify='exact'`` makes the near-dup drop
     estimator-noise-free (same trade as the pipe — see
     :func:`intra_batch_dedup`)."""
+    from ..sources.tables import local_frame
     from ..sources.txlog import (
         _replay,
         tx_delete_positions,
@@ -366,9 +367,7 @@ def tx_dedup_table(
     )
 
     snap = _replay(spark, path)
-    vmap = spark.createDataFrame(
-        [(f, v) for f, v in snap.eps.items()], "_file string, __v long"
-    )
+    vmap = local_frame(spark, snap.eps.items(), "_file string, __v long")
     pos = tx_scan_with_pos(spark, path)
     docs = pos.join(F.broadcast(vmap), "_file").select(
         F.concat_ws(

@@ -44,6 +44,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 
 def build_ann_index(
     corpus: DataFrame,
@@ -75,8 +77,8 @@ def build_ann_index(
         lsh_buckets(corpus, planes, vec_col=vec_col), "vec_id"
     ).select("vec_id", "bucket", F.col(vec_col).alias("embedding"), "vnorm")
     indexed.write.mode("overwrite").parquet(index_path)
-    spark.createDataFrame(
-        [(n_planes, dim)], "n_planes int, dim int"
+    local_frame(
+        spark, [(n_planes, dim)], "n_planes int, dim int"
     ).write.mode("overwrite").parquet(_meta_path(index_path))
     return n_planes
 

@@ -124,3 +124,37 @@ def test_short_keys_complete(spark):
         assert got == want, (d, got ^ want)
     # the canonical gap pair is really found (zero shared grams)
     assert ("a", "b", 1) in got
+
+
+def test_affix_trim_ignores_session_collation(spark):
+    """The affix trim reasons in code-point order; neither a
+    case-insensitive session default collation nor keys that arrive
+    UTF8_LCASE-collated may change the pairs found. (Spark 4.1 has no
+    ``spark.sql.session.collation.default``; setting it is then inert,
+    and the test still pins the result for versions that honour it.)"""
+    keys = ["abcd1", "ABcd2", "abcd3", "Abcd4", "abce1", "ABCD1", "xbcd1", "aBcd9"]
+    df = spark.createDataFrame([(k,) for k in keys], "k string")
+
+    def pairs(frame):
+        out = fuzzy_key_join(frame, frame, "k", "k", max_distance=1)
+        return sorted(
+            map(tuple, out.filter(F.col("k_l") < F.col("k_r")).collect())
+        )
+
+    base = pairs(df)
+    conf = "spark.sql.session.collation.default"
+    old = spark.conf.get(conf, None)
+    spark.conf.set(conf, "UTF8_LCASE")
+    try:
+        lcase = pairs(df)
+    finally:
+        if old is None:
+            spark.conf.unset(conf)
+        else:
+            spark.conf.set(conf, old)
+    assert lcase == base
+    assert pairs(df.select(F.collate("k", "UTF8_LCASE").alias("k"))) == base
+    brute = {
+        (a, b, d) for a, b, d in _brute_force(keys, keys, 1) if a < b
+    }
+    assert set(base) == brute

@@ -160,3 +160,33 @@ def test_happy_path_append_runs_no_post_write_jobs(spark, tmp_path):
     assert stats and min(e["i"][0] for e in stats.values()) == -3
     assert max(e["i"][1] for e in stats.values()) == 11
     assert _commit_bases(t, 2)
+
+
+def test_footer_stats_keyed_by_staged_name(spark, tmp_path):
+    """Stats key on the caller's relative name, never on a split of the
+    absolute path: a table under a ``/data/`` directory keeps its
+    commit stats, and with them its pruning."""
+    table = str(tmp_path / "data" / "warehouse" / "data" / "t")
+    txlog.tx_write(
+        spark.range(0, 10).selectExpr("id AS k").coalesce(1), table,
+        stats_cols=["k"],
+    )
+    txlog.tx_write(
+        spark.range(100, 110).selectExpr("id AS k").coalesce(1), table,
+        stats_cols=["k"],
+    )
+    snap = txlog._replay(spark, table)
+    files = sorted(snap.eps)
+    assert files and set(snap.stats) == set(files)
+    kept = txlog._prune_files(spark, table, snap, files, [("k", 100, 105)])
+    assert kept and set(kept) < set(files)
+    assert all(snap.stats[f]["k"][0] >= 100 for f in kept)
+
+    # a staged name outside data/ keeps its own key too
+    src = next(
+        os.path.join(table, f) for f in files if f.endswith(".parquet")
+    )
+    os.makedirs(os.path.join(table, "other"))
+    os.link(src, os.path.join(table, "other", "x.parquet"))
+    foot = txlog._footer_minmax(table, ["other/x.parquet"], ["k"])
+    assert list(foot) == ["other/x.parquet"]
