@@ -79,6 +79,7 @@ and small JSON I/O only — no row ever passes through it.
 from __future__ import annotations
 
 import bisect
+import contextlib
 import dataclasses
 import json
 import re
@@ -3064,15 +3065,38 @@ def _prunable(file_stats: dict, conjuncts: "list[tuple]") -> bool:
     return False
 
 
+def _conjuncts(where: "tuple | list[tuple] | None") -> "list[tuple]":
+    """``where``: one ``(col, lo, hi)`` conjunct, a list, or None."""
+    if where is None:
+        return []
+    return [where] if isinstance(where, tuple) else list(where)
+
+
+def _filter_where(df: DataFrame, where) -> DataFrame:
+    """The residual filter of a pruned read: correctness never
+    depends on stats coverage."""
+    from pyspark.sql import functions as F
+
+    for col, lo, hi in _conjuncts(where):
+        if lo is not None:
+            df = df.filter(F.col(col) >= F.lit(lo))
+        if hi is not None:
+            df = df.filter(F.col(col) <= F.lit(hi))
+    return df
+
+
 def _prune_files(
     spark, path: str, snap: "_Snapshot", files: list[str],
-    conjuncts: "list[tuple]",
+    where: "tuple | list[tuple] | None",
 ) -> list[str]:
     """Log-stats + bloom data skipping for ``(col, lo, hi)`` conjuncts
-    — the shared prune core of tx_read and tx_scan_with_row_ids.
-    Column mapping: stats and blooms key on stable PHYSICAL names, so
-    the predicate column translates here; the caller's residual
-    filter stays logical."""
+    — the shared prune core of tx_read, tx_scan_with_row_ids and the
+    row-level mutations. Column mapping: stats and blooms key on
+    stable PHYSICAL names, so the predicate column translates here;
+    the caller's residual filter stays logical."""
+    conjuncts = _conjuncts(where)
+    if not conjuncts or not files:
+        return files
     logged = snap.stats
     pm = _phys_map(snap.schema) if snap.schema else {}
     prune = (
@@ -3145,15 +3169,7 @@ def tx_read(
     ``version``."""
     version = _resolve_version(spark, path, version, as_of_ts)
     snap = _replay(spark, path, version)
-    eps, mor = snap.eps, snap.mor
-    files = sorted(eps)
-    conjuncts = (
-        [] if where is None
-        else [where] if isinstance(where, tuple)
-        else list(where)
-    )
-    if conjuncts:
-        files = _prune_files(spark, path, snap, files, conjuncts)
+    files = _prune_files(spark, path, snap, sorted(snap.eps), where)
     if not files:
         # an overwrite with an empty DataFrame is a legal empty table:
         # the recorded schema builds the empty frame directly; tables
@@ -3168,16 +3184,9 @@ def tx_read(
         if all_files:
             return spark.read.parquet(*all_files).limit(0)
         raise FileNotFoundError(f"table {path} has no data files at all")
-    out = _read_with_mor(spark, path, snap, files, eps, mor, merge_schema)
-    if conjuncts:
-        from pyspark.sql import functions as F
-
-        for col, lo, hi in conjuncts:
-            if lo is not None:
-                out = out.filter(F.col(col) >= F.lit(lo))
-            if hi is not None:
-                out = out.filter(F.col(col) <= F.lit(hi))
-    return out
+    return _filter_where(
+        _read_with_mor(spark, path, snap, files, merge_schema), where
+    )
 
 
 def _read_table_files(
@@ -3248,7 +3257,7 @@ def _row_struct(schema_json: str, keep_row_col: bool):
     """The physical read struct, optionally extended with the
     ``_row_id`` LongType field — explicit-schema parquet reads
     null-fill it for files that don't materialize ids, which is
-    exactly the coalesce contract :func:`_attach_row_ids` needs."""
+    exactly the coalesce contract :func:`_attach_row_ids_map` needs."""
     struct = _physical_struct(schema_json)
     if keep_row_col:
         from pyspark.sql.types import LongType, StructField
@@ -3400,9 +3409,28 @@ def _reader_for(spark, path: str, snap: _Snapshot, merge_schema: bool = False):
     return reader
 
 
+def _drop_dv_positions(
+    spark, path: str, snap: _Snapshot, df: DataFrame
+) -> DataFrame:
+    """A positional scan (``_file``/``_pos`` columns) minus every live
+    deletion-vector position: ONE broadcast anti-join against the
+    union of the live DV sidecars (a position pair matches at most its
+    own file, so one join covers every DV). The only place the
+    sidecars are read for this — readers, settlement and the mutation
+    prelude all go through it."""
+    if not snap.dv:
+        return df
+    from pyspark.sql import functions as F
+
+    pos = spark.read.parquet(
+        *[_abs(path, sf) for d in snap.dv for sf in d["files"]]
+    )
+    return df.join(F.broadcast(pos), ["_file", "_pos"], "left_anti")
+
+
 def _read_with_mor(
-    spark, path: str, snap: _Snapshot, files: list[str], eps: dict,
-    mor: list, merge_schema: bool = False,
+    spark, path: str, snap: _Snapshot, files: list[str],
+    merge_schema: bool = False, with_ids: bool = False,
 ) -> DataFrame:
     """Scan ``files`` honoring live merge-on-read tombstones. Files
     sharing the same applicable tombstone suffix form one epoch group
@@ -3420,59 +3448,60 @@ def _read_with_mor(
     position pair matches at most its own file, so one join covers
     every DV); untargeted files scan plain. Equality tombstones and
     DVs never coexist (both write fronts refuse), so the two
-    mechanisms never stack on one file."""
+    mechanisms never stack on one file.
+
+    ``with_ids=True`` (tracked tables) keeps each row's stable
+    ``_row_id``: settlement (:func:`tx_apply_deletes`) writes the
+    survivors back under their identity."""
     from pyspark.sql import functions as F
 
+    def scan(group: list[str], dv: bool = False) -> DataFrame:
+        if not (dv or with_ids):
+            return _scan_files(spark, path, snap, group, merge_schema)
+        df = _scan_files(
+            spark, path, snap, group, merge_schema,
+            with_pos=True, keep_row_col=with_ids,
+        )
+        if dv:
+            df = _drop_dv_positions(spark, path, snap, df)
+        if with_ids:  # the stable ids of the snapshot's live files
+            df = _attach_row_ids_map(spark, {
+                f: b for f, b in snap.row_bases.items() if f in snap.eps
+            }, df)
+        return df.drop("_file", "_pos")
+
+    if snap.dv and snap.mor:  # unreachable (write fronts refuse)
+        raise RuntimeError(
+            f"table {path} carries BOTH equality tombstones and "
+            "deletion vectors; run tx_apply_deletes"
+        )
+    parts = []
     if snap.dv:
-        if mor:  # unreachable (write fronts refuse) — never misread
-            raise RuntimeError(
-                f"table {path} carries BOTH equality tombstones and "
-                "deletion vectors; run tx_apply_deletes"
-            )
-        targeted: set = set()
-        for d in snap.dv:
-            targeted.update(d["targets"])
+        targeted = {f for d in snap.dv for f in d["targets"]}
         dirty = [f for f in files if f in targeted]
         clean = [f for f in files if f not in targeted]
-        parts = []
         if dirty:
-            df = _scan_files(
-                spark, path, snap, dirty, merge_schema, with_pos=True
-            )
-            sidecars = [
-                _abs(path, sf) for d in snap.dv for sf in d["files"]
-            ]
-            pos = spark.read.parquet(*sidecars)
-            parts.append(
-                df.join(
-                    F.broadcast(pos), ["_file", "_pos"], "left_anti"
-                ).drop("_file", "_pos")
-            )
+            parts.append(scan(dirty, dv=True))
         if clean:
-            parts.append(_scan_files(spark, path, snap, clean, merge_schema))
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
-    if not mor:
-        return _scan_files(spark, path, snap, files, merge_schema)
-
-    tomb_versions = [t["version"] for t in mor]
-    groups: dict[int, list[str]] = {}
-    for f in files:
-        i = bisect.bisect_right(tomb_versions, eps[f])
-        groups.setdefault(i, []).append(f)
-    parts = []
-    for i in sorted(groups):
-        df = _scan_files(spark, path, snap, groups[i], merge_schema)
-        for t in mor[i:]:
-            if not t["files"]:
-                continue
-            keys = spark.read.parquet(
-                *[_abs(path, f) for f in t["files"]]
-            )
-            df = df.join(F.broadcast(keys), t["col"], "left_anti")
-        parts.append(df)
+            parts.append(scan(clean))
+    elif snap.mor:
+        tomb_versions = [t["version"] for t in snap.mor]
+        groups: dict[int, list[str]] = {}
+        for f in files:
+            i = bisect.bisect_right(tomb_versions, snap.eps[f])
+            groups.setdefault(i, []).append(f)
+        for i in sorted(groups):
+            df = scan(groups[i])
+            for t in snap.mor[i:]:
+                if not t["files"]:
+                    continue
+                keys = spark.read.parquet(
+                    *[_abs(path, f) for f in t["files"]]
+                )
+                df = df.join(F.broadcast(keys), t["col"], "left_anti")
+            parts.append(df)
+    else:
+        return scan(files)
     out = parts[0]
     for p in parts[1:]:
         out = out.unionByName(p)
@@ -5137,21 +5166,12 @@ def tx_compact(
     chosen = [f for _, f in sized[:max_input_files]]
     if len(chosen) <= target_files:
         return None
+    # a pure rewrite: on tracked tables rows keep their STABLE ids —
+    # read them and materialize _row_id into the compacted bytes
     preserve_ids = _row_tracking_on(snap.properties)
-    if preserve_ids:
-        # a pure rewrite: rows keep their STABLE ids — read them and
-        # materialize _row_id into the compacted bytes
-        merged = _attach_row_ids(
-            spark, snap,
-            _scan_files(
-                spark, path, snap, chosen,
-                with_pos=True, keep_row_col=True,
-            ),
-        ).drop("_file", "_pos").coalesce(target_files)
-    else:
-        merged = _read_table_files(spark, path, chosen, snap).coalesce(
-            target_files
-        )
+    merged = _read_with_mor(
+        spark, path, snap, chosen, with_ids=preserve_ids
+    ).coalesce(target_files)
     added = _stage_and_place(
         _to_physical(merged, snap.schema), path, snap.partition_by
     )
@@ -5450,10 +5470,14 @@ def tx_changes_cdf(
     - DV UPDATE frames carry id-complete pre- AND post-images
       (positions give the pre side, the commit's bases the post side);
     - ``'overwrite'`` frames are the id-scan of the snapshot;
-    - merge / copy-on-write frames and mor key-frames carry a NULL
-      ``_row_id`` (their sidecars are key-addressed; identity is
-      unknowable post-hoc) — consumers keyed on ids must treat NULL
-      as reprocess-by-key."""
+    - merge and copy-on-write DELETE / UPDATE frames carry the
+      pre-images' stable ``_row_id``, read when the rewrite staged its
+      sidecar; merge post-images take theirs from the commit's own
+      bases through the merge key;
+    - copy-on-write UPDATE post-images, ambiguous merge keys, mor
+      key-frames and sidecars written before ids were recorded carry
+      a NULL ``_row_id`` (identity is unknowable post-hoc) —
+      consumers keyed on ids must treat NULL as reprocess-by-key."""
     from pyspark.sql import functions as F
 
     raw, _ = _change_commits(spark, path, since_version)
@@ -5469,23 +5493,30 @@ def tx_changes_cdf(
             F.lit(None).cast("long").alias(_ROW_ID), "*"
         )
 
+    def _id_rows(s, files: list[str], bases: dict, pos=None):
+        """``files`` under snapshot ``s`` as ``_row_id`` + table
+        columns, ids from ``bases``; ``pos`` keeps only the rows at
+        those coordinates."""
+        df = _scan_files(
+            spark, path, s, files, with_pos=True, keep_row_col=True
+        )
+        if pos is not None:
+            df = df.join(F.broadcast(pos), ["_file", "_pos"], "semi")
+        df = _attach_row_ids_map(spark, bases, df)
+        return df.select(
+            _ROW_ID,
+            *[x for x in df.columns if x not in ("_file", "_pos", _ROW_ID)],
+        )
+
     def _dv_preimages(v: int, c: dict) -> DataFrame:
         """Id-complete DV victims, purely from coordinates."""
         snap_v = _replay(spark, path, v)
         pos = spark.read.parquet(
             *[_abs(path, sf) for sf in c["dv"]["files"]]
         )
-        targets = [f for f in c["dv"]["targets"]]
-        pre = _scan_files(
-            spark, path, snap_v, targets,
-            with_pos=True, keep_row_col=True,
-        ).join(F.broadcast(pos), ["_file", "_pos"], "semi")
-        pre = _attach_row_ids_map(spark, snap_v.row_bases, pre)
-        data = [
-            x for x in pre.columns
-            if x not in ("_file", "_pos", _ROW_ID)
-        ]
-        return pre.select(_ROW_ID, *data)
+        return _id_rows(
+            snap_v, c["dv"]["targets"], snap_v.row_bases, pos
+        )
 
     for v, c in raw:
         if c is None or c["action"] in (
@@ -5524,25 +5555,14 @@ def tx_changes_cdf(
             if c["action"] == "delete":
                 yield v, "delete", pre
                 continue
-            ct = "_change_type"
-            out = pre.withColumn(ct, F.lit("update_preimage"))
-            if c.get("add"):
-                post = _scan_files(
-                    spark, path, snap, c["add"],
-                    with_pos=True, keep_row_col=True,
+            if not c.get("add"):
+                yield v, "cdf", pre.withColumn(
+                    "_change_type", F.lit("update_preimage")
                 )
-                post = _attach_row_ids_map(
-                    spark, c.get("row_bases") or {}, post
-                )
-                data = [
-                    x for x in post.columns
-                    if x not in ("_file", "_pos", _ROW_ID)
-                ]
-                out = out.unionByName(
-                    post.select(_ROW_ID, *data)
-                    .withColumn(ct, F.lit("update_postimage"))
-                )
-            yield v, "cdf", out
+                continue
+            yield v, "cdf", _change_rows(
+                pre, _id_rows(snap, c["add"], c.get("row_bases") or {})
+            )
             continue
         if (
             c["action"] in ("merge", "delete", "update")
@@ -5614,16 +5634,9 @@ def tx_changes_cdf(
         elif with_row_ids:
             # the commit's OWN recorded bases: replays below later
             # checkpoints reconstruct exactly (no fold dependency)
-            ins = _scan_files(
-                spark, path, snap, files,
-                with_pos=True, keep_row_col=True,
+            yield v, "insert", _id_rows(
+                snap, files, c.get("row_bases") or {}
             )
-            ins = _attach_row_ids_map(spark, c.get("row_bases") or {}, ins)
-            data = [
-                x for x in ins.columns
-                if x not in ("_file", "_pos", _ROW_ID)
-            ]
-            yield v, "insert", ins.select(_ROW_ID, *data)
         else:
             # same read contract as snapshots: evolved footer merge +
             # partition-column reconstruction (see _reader_for)
@@ -5689,47 +5702,27 @@ def tx_delete(
     ).collect()[0]
     if _kprof["__nn"] < _kprof["__n"]:
         raise ValueError(f"keys carry NULL {key_col}")
-    snap = _replay(spark, path)  # also the existence check
-    _check_writer_features(snap.properties, path)
-    if txn is not None and (prior := snap.txns.get(txn)) is not None:
+    # never stack the two merge-on-read mechanisms: a DV-targeted file
+    # takes the positional read path, which must not also owe an
+    # equality anti-join (CoW would orphan DV positions too)
+    snap, cdf, prior = _mutation_prelude(
+        spark, path, "tx_delete", txn, cdf,
+        refuse_mor=False, refuse_dv="tx_delete",
+    )
+    if prior is not None:
         return prior
-    if snap.dv:
-        # never stack the two merge-on-read mechanisms: a DV-targeted
-        # file takes the positional read path, which must not also owe
-        # an equality anti-join (CoW would orphan DV positions too)
-        raise ValueError(
-            f"tx_delete on {path} with live deletion vectors (versions "
-            f"{[d['version'] for d in snap.dv]}); run tx_apply_deletes "
-            "first"
-        )
-    if cdf is None:
-        cdf = _cdf_props_default(snap.properties)
     if mode == "merge_on_read":
         tomb_files = _stage_deletes(keys.select(key_col).distinct(), path)
-        fs = hadoop_fs(spark, path)[0]
+        fields = {"mor": {"col": key_col, "files": tomb_files}, "reader": 2}
         # a live tombstone obligates later writers to honor/settle it
         delta = _writer_feature_delta(snap.properties, {"mor"})
-
-        def build(next_v: int) -> dict:
-            payload = {
-                "version": next_v,
-                "action": "delete",
-                "add": [],
-                "remove": [],
-                "txn": txn,
-                "mor": {"col": key_col, "files": tomb_files},
-                "reader": 2,
-            }
-            if delta:
-                payload["properties"] = delta
-            return payload
-
-        return _commit_with_retries(spark, path, fs, build, txn, 20)
-    files, snap_version = sorted(snap.eps), snap.version
+        if delta:
+            fields["properties"] = delta
+        return _commit_noop(spark, path, txn, False, fields=fields)
     lo, hi = _json_stat(_kprof["__lo"]), _json_stat(_kprof["__hi"])
     phys_key = _phys_map(snap.schema).get(key_col, key_col)
     touched = _files_overlapping_keys(
-        spark, path, files, lo, hi, phys_key, snap
+        spark, path, sorted(snap.eps), lo, hi, phys_key, snap
     )
     touched = _bloom_refine_touched(
         spark, path, snap, touched, phys_key, keys.select(key_col)
@@ -5743,53 +5736,21 @@ def tx_delete(
         # lets the change feed checkpoint past this as a no-op instead
         # of raising on the 'delete' action.
         return _commit_rewrite(
-            spark, path, [], [], snap_version, txn, "delete",
+            spark, path, [], [], snap.version, txn, "delete",
             conflict_keys=None if lo is None else (phys_key, lo, hi),
             extra={"cdf": {"files": [], "key": key_col}} if cdf else None,
             planned_rt=_row_tracking_on(snap.properties),
         )
     key_set = keys.select(key_col).distinct()
-    old = _read_table_files(spark, path, touched, snap)
-    if cdf and not _row_tracking_on(snap.properties):
-        # round 16 (guide §1.2): with CDF on (and no id-scan), the
-        # touched-file read feeds both the survivor rewrite and the
-        # CDF delete frame — one materialization serves both
-        old = old.localCheckpoint(eager=False)
-    survivors = old.join(key_set, key_col, "left_anti")
-    extra = None
-    if cdf:
-        # tracked tables: the sidecar's deleted rows carry their
-        # stable _row_id (VERDICT r13 #3 — id-complete delete frames)
-        pre_src = (
-            _id_scan_touched(spark, path, snap, touched)
-            if _row_tracking_on(snap.properties)
-            else old
-        )
-        deleted_rows = pre_src.join(key_set, key_col, "semi").withColumn(
-            "_change_type", F.lit("delete")
-        )
-        extra = {
-            "cdf": {
-                "files": _stage_cdf(
-                    _to_physical(deleted_rows, snap.schema), path
-                ),
-                "key": key_col,
-                "keys_phys": [phys_key],
-            }
-        }
-        delta = _writer_feature_delta(snap.properties, {"cdf"})
-        if delta:
-            extra["properties"] = delta
-    added = _stage_and_place(
-        _to_physical(survivors, snap.schema), path, snap.partition_by
-    )
-    return _commit_rewrite(
-        spark, path, added, touched, snap_version, txn, "delete",
-        stats=_rewrite_stats(spark, path, touched, added, key_col, snap),
-        blooms=_rewrite_blooms(spark, path, touched, added, snap),
+    return _cow_tail(
+        spark, path, snap, txn, cdf, touched, "delete",
+        lambda old: (
+            old.join(key_set, key_col, "left_anti"),
+            old.join(key_set, key_col, "semi"),
+            None,
+        ),
+        key_col=key_col,
         conflict_keys=(phys_key, lo, hi),
-        extra=extra,
-        planned_rt=_row_tracking_on(snap.properties),
     )
 
 
@@ -5813,102 +5774,45 @@ def tx_apply_deletes(spark: SparkSession, path: str) -> int | None:
     snap = _replay(spark, path)
     _check_writer_features(snap.properties, path)
     if snap.dv:
-        # settle positional deletion vectors: rewrite exactly the
-        # targeted files without their DV'd positions (the same ONE
-        # broadcast anti-join the reader runs), clear the DVs in the
-        # commit. mor and dv never coexist (both write fronts refuse).
-        from pyspark.sql import functions as F
-
-        dv_versions = [d["version"] for d in snap.dv]
-        targeted = sorted(
+        # positional deletion vectors settle the same way: rewrite
+        # exactly the targeted files without their DV'd positions,
+        # clear the DVs in the commit. mor and dv never coexist (both
+        # write fronts refuse).
+        touched = sorted(
             {f for d in snap.dv for f in d["targets"] if f in snap.eps}
         )
-        if not targeted:
-            # DVs outlived every targeted file (e.g. overwritten away
-            # mid-retention): clear them with a metadata-only commit
-            return _commit_rewrite(
-                spark, path, [], [], snap.version, None, "apply_deletes",
-                extra={"dv_clears": dv_versions, "reader": 4},
-                planned_rt=_row_tracking_on(snap.properties),
-            )
-        preserve_ids = _row_tracking_on(snap.properties)
-        df = _scan_files(
-            spark, path, snap, targeted,
-            with_pos=True, keep_row_col=preserve_ids,
-        )
-        pos = spark.read.parquet(
-            *[_abs(path, sf) for d in snap.dv for sf in d["files"]]
-        )
-        survivors = df.join(
-            F.broadcast(pos), ["_file", "_pos"], "left_anti"
-        )
-        if preserve_ids:
-            # settling deletes must not re-identify the survivors
-            survivors = _attach_row_ids(spark, snap, survivors)
-        survivors = survivors.drop("_file", "_pos")
-        added = _stage_and_place(
-            _to_physical(survivors, snap.schema), path, snap.partition_by
-        )
-        return _commit_rewrite(
-            spark, path, added, targeted, snap.version, None,
-            "apply_deletes",
-            stats=_rewrite_stats(spark, path, targeted, added, None, snap),
-            blooms=_rewrite_blooms(spark, path, targeted, added, snap),
-            row_ids_materialized=preserve_ids,
-            extra={"dv_clears": dv_versions, "reader": 4},
-            planned_rt=preserve_ids,
-        )
-    eps, mor, snap_version = snap.eps, snap.mor, snap.version
-    if not mor:
+        extra = {"dv_clears": [d["version"] for d in snap.dv], "reader": 4}
+    elif snap.mor:
+        tomb_versions = [t["version"] for t in snap.mor]
+        # files added before the newest tombstone: at least one applies
+        touched = [
+            f for f in sorted(snap.eps) if snap.eps[f] < tomb_versions[-1]
+        ]
+        extra = {"mor_clears": tomb_versions, "reader": 2}
+    else:
         return None
-    tomb_versions = [t["version"] for t in mor]
-    groups: dict[int, list[str]] = {}
-    for f in sorted(eps):
-        i = bisect.bisect_right(tomb_versions, eps[f])
-        if i < len(mor):  # at least one tombstone applies
-            groups.setdefault(i, []).append(f)
-    touched = [f for fl in groups.values() for f in fl]
-    if not touched:
-        # tombstones outlived every applicable file (e.g. the files
-        # were CoW-deleted): clear them with a metadata-only commit
-        return _commit_rewrite(
-            spark, path, [], [], snap_version, None, "apply_deletes",
-            extra={"mor_clears": tomb_versions, "reader": 2},
-            planned_rt=_row_tracking_on(snap.properties),
-        )
-    from pyspark.sql import functions as F
-
+    # settling deletes must not re-identify the survivors
     preserve_ids = _row_tracking_on(snap.properties)
-    parts = []
-    for i in sorted(groups):
-        if preserve_ids:
-            df = _attach_row_ids(
-                spark, snap,
-                _scan_files(
-                    spark, path, snap, groups[i],
-                    with_pos=True, keep_row_col=True,
-                ),
-            ).drop("_file", "_pos")
-        else:
-            df = _read_table_files(spark, path, groups[i], snap)
-        for t in mor[i:]:
-            if not t["files"]:
-                continue
-            keys = spark.read.parquet(*[_abs(path, f) for f in t["files"]])
-            df = df.join(F.broadcast(keys), t["col"], "left_anti")
-        parts.append(df)
-    survivors = parts[0]
-    for p in parts[1:]:
-        survivors = survivors.unionByName(p)
+    if not touched:
+        # the deletes outlived every file they apply to (e.g. the files
+        # were CoW-deleted or overwritten away): clear them with a
+        # metadata-only commit
+        return _commit_rewrite(
+            spark, path, [], [], snap.version, None, "apply_deletes",
+            extra=extra, planned_rt=preserve_ids,
+        )
+    survivors = _read_with_mor(
+        spark, path, snap, touched, with_ids=preserve_ids
+    )
     added = _stage_and_place(
         _to_physical(survivors, snap.schema), path, snap.partition_by
     )
     return _commit_rewrite(
-        spark, path, added, touched, snap_version, None, "apply_deletes",
+        spark, path, added, touched, snap.version, None, "apply_deletes",
         stats=_rewrite_stats(spark, path, touched, added, None, snap),
         blooms=_rewrite_blooms(spark, path, touched, added, snap),
         row_ids_materialized=preserve_ids,
-        extra={"mor_clears": tomb_versions, "reader": 2},
+        extra=extra,
         planned_rt=preserve_ids,
     )
 
@@ -6126,13 +6030,16 @@ def _attach_row_ids_map(spark, base_map: dict, df: DataFrame) -> DataFrame:
     )
 
 
-def _attach_row_ids(spark, snap: "_Snapshot", df: DataFrame) -> DataFrame:
-    """:func:`_attach_row_ids_map` over the snapshot's LIVE files."""
-    return _attach_row_ids_map(
-        spark,
-        {f: b for f, b in snap.row_bases.items() if f in snap.eps},
-        df,
-    )
+def _no_rows(spark, snap: _Snapshot, prefix: str) -> DataFrame:
+    """Zero rows: the ``prefix`` columns (DDL) before the recorded
+    table schema."""
+    from pyspark.sql.types import StructField, StructType
+
+    base = json.loads(snap.schema)["fields"] if snap.schema else []
+    return local_frame(spark, [], StructType(
+        StructType.fromDDL(prefix).fields
+        + [StructField.fromJson(f) for f in base]
+    ))
 
 
 def tx_scan_with_row_ids(
@@ -6146,8 +6053,6 @@ def tx_scan_with_row_ids(
     follow one row through maintenance. ``where=(col, lo, hi)``
     conjuncts prune files from the log exactly like ``tx_read``
     (stats + blooms + transforms) and re-apply as residual filters."""
-    from pyspark.sql import functions as F
-
     snap = _replay(spark, path, version)
     if not _row_tracking_on(snap.properties):
         raise ValueError(
@@ -6159,43 +6064,13 @@ def tx_scan_with_row_ids(
             f"tx_scan_with_row_ids on {path} with live equality "
             "tombstones; run tx_apply_deletes first"
         )
-    files = sorted(snap.eps)
-    conjuncts = (
-        [] if where is None
-        else [where] if isinstance(where, tuple)
-        else list(where)
-    )
-    if conjuncts and files:
-        files = _prune_files(spark, path, snap, files, conjuncts)
+    files = _prune_files(spark, path, snap, sorted(snap.eps), where)
     if not files:
-        from pyspark.sql.types import LongType, StructField, StructType
-
-        base = json.loads(snap.schema)["fields"] if snap.schema else []
-        return local_frame(
-            spark,
-            [],
-            StructType(
-                [StructField(_ROW_ID, LongType())]
-                + [StructField.fromJson(f) for f in base]
-            ),
-        )
-    df = _scan_files(
-        spark, path, snap, files, with_pos=True, keep_row_col=True
+        return _no_rows(spark, snap, f"{_ROW_ID} long")
+    df = _read_with_mor(spark, path, snap, files, with_ids=True)
+    return _filter_where(
+        df.select(_ROW_ID, *[c for c in df.columns if c != _ROW_ID]), where
     )
-    if snap.dv:
-        pos = spark.read.parquet(
-            *[_abs(path, sf) for d in snap.dv for sf in d["files"]]
-        )
-        df = df.join(F.broadcast(pos), ["_file", "_pos"], "left_anti")
-    df = _attach_row_ids(spark, snap, df)
-    data = [c for c in df.columns if c not in ("_file", "_pos", _ROW_ID)]
-    out = df.select(_ROW_ID, *data)
-    for col, lo, hi in conjuncts:  # residual filters own correctness
-        if lo is not None:
-            out = out.filter(F.col(col) >= F.lit(lo))
-        if hi is not None:
-            out = out.filter(F.col(col) <= F.lit(hi))
-    return out
 
 
 def tx_scan_with_pos(
@@ -6217,8 +6092,6 @@ def tx_scan_with_pos(
     victims are key-addressed, and surfacing them WITH coordinates
     would invite double-delete bookkeeping — settle with
     ``tx_apply_deletes`` first."""
-    from pyspark.sql import functions as F
-
     snap = _replay(spark, path, version)
     if snap.mor:
         raise ValueError(
@@ -6228,31 +6101,233 @@ def tx_scan_with_pos(
         )
     files = sorted(snap.eps)
     if not files:
-        from pyspark.sql.types import (
-            LongType, StringType, StructField, StructType,
-        )
+        return _no_rows(spark, snap, "_file string, _pos long")
+    return _drop_dv_positions(
+        spark, path, snap,
+        _scan_files(spark, path, snap, files, with_pos=True),
+    )
 
-        base = (
-            json.loads(snap.schema)["fields"] if snap.schema else []
+
+# --- row-level mutations -----------------------------------------------------
+#
+# UPDATE, DELETE WHERE, DELETE by key and DELETE by position share one
+# prelude and end in the deletion-vector tail or the copy-on-write tail.
+
+
+@contextlib.contextmanager
+def _checkpointed(df: DataFrame):
+    """``df.localCheckpoint(eager=False)`` whose cached blocks are
+    released on exit, so a long-lived session does not keep one per
+    mutation. Exit only after the commit: its revalidation may still
+    read the frame."""
+    ck = df.localCheckpoint(eager=False)
+    try:
+        yield ck
+    finally:
+        ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
+
+
+def _mutation_prelude(
+    spark, path: str, op: str, txn: str | None, cdf: "bool | None",
+    refuse_mor: bool = True, refuse_dv: "str | None" = None,
+) -> "tuple[_Snapshot, bool | None, int | None]":
+    """``(snapshot, cdf, prior)``: ``prior`` is the version ``txn``
+    already committed at (the caller returns it). Otherwise checks
+    writer features, refuses live equality tombstones (``refuse_mor``)
+    and live deletion vectors (``refuse_dv``: the caller's name in the
+    message) and resolves ``cdf=None`` from the table property."""
+    snap = _replay(spark, path)  # also the existence check
+    _check_writer_features(snap.properties, path)
+    if txn is not None and (prior := snap.txns.get(txn)) is not None:
+        return snap, cdf, prior
+    for who, live, what in (
+        (op, refuse_mor and snap.mor, "equality tombstones"),
+        (refuse_dv, refuse_dv and snap.dv, "deletion vectors"),
+    ):
+        if live:
+            raise ValueError(
+                f"{who} on {path} with live {what} (versions "
+                f"{[e['version'] for e in live]}); run tx_apply_deletes "
+                "first"
+            )
+    if cdf is None:
+        cdf = _cdf_props_default(snap.properties)
+    return snap, cdf, None
+
+
+def _matched_rows(
+    spark, path: str, snap: _Snapshot, condition: str,
+    prune: "tuple | list[tuple] | None",
+) -> "DataFrame | None":
+    """The positional scan of the live files ``prune`` keeps, minus
+    live DV positions, filtered by ``condition`` (NULL: not matched);
+    None when no file is left. The condition must be deterministic —
+    the tails evaluate the matched set more than once, so ``rand()``
+    would delete one set of rows and report another. Checked on the
+    analyzed plan, no job runs."""
+    from pyspark.sql import functions as F
+
+    files = _prune_files(spark, path, snap, sorted(snap.eps), prune)
+    if not files:
+        return None
+    scan = _drop_dv_positions(
+        spark, path, snap,
+        _scan_files(spark, path, snap, files, with_pos=True),
+    )
+    matched = scan.filter(F.expr(condition))
+    analyzed = matched._jdf.queryExecution().analyzed()
+    if not analyzed.condition().deterministic():
+        raise ValueError(
+            f"condition {condition!r} is not deterministic; a row-level "
+            "mutation evaluates it more than once and must match the "
+            "same rows each time"
         )
-        return local_frame(
-            spark,
-            [],
-            StructType(
-                [
-                    StructField("_file", StringType()),
-                    StructField("_pos", LongType()),
-                ]
-                + [StructField.fromJson(f) for f in base]
+    return matched
+
+
+def _files_of(matched: "DataFrame | None") -> "list[str]":
+    """Sorted distinct ``_file`` values ([] for no frame)."""
+    if matched is None:
+        return []
+    return sorted(
+        r[0] for r in matched.select("_file").distinct().collect()
+    )
+
+
+def _change_rows(
+    pre: DataFrame, post: "DataFrame | None" = None
+) -> DataFrame:
+    """One CDF frame: ``pre`` as ``delete`` rows, or with ``post`` the
+    ``update_preimage`` and ``update_postimage`` rows (post-images
+    carry no ``_row_id``: the commit mints theirs)."""
+    from pyspark.sql import functions as F
+
+    if post is None:
+        return pre.withColumn("_change_type", F.lit("delete"))
+    return pre.withColumn(
+        "_change_type", F.lit("update_preimage")
+    ).unionByName(
+        post.withColumn("_change_type", F.lit("update_postimage")),
+        allowMissingColumns=True,
+    )
+
+
+def _dv_tail(
+    spark, path: str, snap: _Snapshot, txn: str | None, cdf: bool,
+    matched: "DataFrame | None", assign=None,
+    pos: "DataFrame | None" = None,
+) -> int:
+    """Stage the victims' positions as a DV, collect the targets,
+    stage post-images (UPDATE: ``assign``) and one CDF frame, commit.
+    ``matched`` (DELETE WHERE, UPDATE) is checkpointed once and all of
+    that derives from it. ``pos`` (DELETE by position) is staged as
+    given and read back, so the targets are what the sidecar holds;
+    the CDF frame re-reads the victims from the targeted files."""
+    from pyspark.sql import functions as F
+
+    action = "delete" if assign is None else "update"
+    if matched is None and pos is None:
+        return _commit_noop(spark, path, txn, cdf, action)
+    with (
+        _checkpointed(matched) if pos is None
+        else contextlib.nullcontext(matched)
+    ) as matched:
+        updated = None
+        if assign is not None:
+            updated = assign(matched.drop("_file", "_pos"))
+            _check_constraints(updated, snap.properties, path, "tx_update")
+        if pos is None:
+            sidecars = _stage_dv(matched, path)
+            placed = matched
+        else:
+            sidecars = _stage_dv(
+                pos.select("_file", "_pos").distinct(), path
+            )
+            placed = spark.read.parquet(*[_abs(path, f) for f in sidecars])
+        targets = _files_of(placed)
+        if not targets:
+            return _commit_noop(spark, path, txn, cdf, action)
+        # only caller coordinates can name a file that is not live
+        missing = [f for f in targets if f not in snap.eps]
+        if missing:
+            raise ValueError(
+                f"positions reference files not live at {path}: "
+                f"{missing[:3]}... (stale scan? vacuumed snapshot?)"
+            )
+        if matched is None:
+            matched = _scan_files(
+                spark, path, snap, targets, with_pos=True
+            ).join(F.broadcast(placed), ["_file", "_pos"], "semi")
+        added = [] if updated is None else _stage_and_place(
+            _to_physical(updated, snap.schema), path, snap.partition_by
+        )
+        cdf_files = None
+        if cdf:
+            rows = _change_rows(matched.drop("_file", "_pos"), updated)
+            cdf_files = _stage_cdf(_to_physical(rows, snap.schema), path)
+        return _commit_dv(
+            spark, path, snap, sidecars, targets, txn, cdf_files,
+            action=action, added=added,
+            stats=_rewrite_stats(spark, path, targets, added, None, snap),
+            blooms=_rewrite_blooms(spark, path, targets, added, snap),
+            extra_revalidate=None if updated is None else (
+                lambda props: _check_constraints(
+                    updated, props, path, "tx_update"
+                )
             ),
         )
-    df = _scan_files(spark, path, snap, files, with_pos=True)
-    if snap.dv:
-        pos = spark.read.parquet(
-            *[_abs(path, sf) for d in snap.dv for sf in d["files"]]
+
+
+def _cow_tail(
+    spark, path: str, snap: _Snapshot, txn: str | None, cdf: bool,
+    touched: "list[str]", action: str, split,
+    key_col: "str | None" = None, conflict_keys: "tuple | None" = None,
+    revalidate=None,
+) -> int:
+    """Read the ``touched`` files, ``split(old)`` them into the rows
+    to write back, the pre-images and the post-images (None for a
+    delete), stage them, commit the rewrite.
+    With CDF on the read is materialized once, and on tracked tables
+    it carries ``_row_id`` so pre-images keep their identity (the rows
+    written back drop it: a rewrite mints fresh ids). ``key_col``
+    (DELETE by key) keys the CDF entry and the stats."""
+    if not touched:
+        return _commit_noop(spark, path, txn, cdf, action)
+    with_ids = cdf and _row_tracking_on(snap.properties)
+    old = _read_with_mor(spark, path, snap, touched, with_ids=with_ids)
+    with (
+        _checkpointed(old) if cdf else contextlib.nullcontext(old)
+    ) as old:
+        keep, pre, post = split(old)
+        extra = None
+        if cdf:
+            rows = _change_rows(pre, post)
+            entry = {
+                "files": _stage_cdf(_to_physical(rows, snap.schema), path),
+                "key": key_col,
+            }
+            if key_col is not None:
+                entry["keys_phys"] = [
+                    _phys_map(snap.schema).get(key_col, key_col)
+                ]
+            extra = {"cdf": entry}
+            delta = _writer_feature_delta(snap.properties, {"cdf"})
+            if delta:
+                extra["properties"] = delta
+        if with_ids:
+            keep = keep.drop(_ROW_ID)
+        added = _stage_and_place(
+            _to_physical(keep, snap.schema), path, snap.partition_by
         )
-        df = df.join(F.broadcast(pos), ["_file", "_pos"], "left_anti")
-    return df
+        return _commit_rewrite(
+            spark, path, added, touched, snap.version, txn, action,
+            stats=_rewrite_stats(spark, path, touched, added, key_col, snap),
+            blooms=_rewrite_blooms(spark, path, touched, added, snap),
+            conflict_keys=conflict_keys,
+            extra=extra,
+            revalidate=revalidate,
+            planned_rt=_row_tracking_on(snap.properties),
+        )
 
 
 def _commit_dv(
@@ -6363,31 +6438,33 @@ def _commit_dv(
     )
 
 
-def _dv_empty_delete(
-    spark, path: str, snap: "_Snapshot", txn: str | None, cdf: bool,
-    action: str = "delete",
+def _commit_noop(
+    spark, path: str, txn: str | None, cdf: bool, action: str = "delete",
+    fields: "dict | None" = None,
 ) -> int:
-    """Nothing matched: commit an empty delete/update so the txn id is
-    still recorded for idempotence and change feeds checkpoint past a
-    no-op (same contract as tx_delete's no-touch path). Commits
-    directly — NOT via ``_commit_rewrite`` — because an empty commit
-    adds and removes nothing, so the rewrite conflict checks (notably
-    the planned-DV/tombstone set rule, which refuses while delete
-    debt is live) do not apply to it: a no-match delete on a table
-    carrying DVs must be a clean no-op, not a conflict."""
+    """Commit a version that adds and removes no data file: an empty
+    delete/update when nothing matched (the txn id is still recorded
+    for idempotence, and with ``cdf`` an empty CDF entry lets change
+    feeds checkpoint past the no-op), or a merge-on-read tombstone
+    carried in ``fields``. Commits directly — NOT via
+    ``_commit_rewrite`` — because such a commit adds and removes
+    nothing, so the rewrite conflict checks (notably the
+    planned-DV/tombstone set rule, which refuses while delete debt is
+    live) do not apply to it: a no-match delete on a table carrying
+    DVs must be a clean no-op, not a conflict."""
     fs = hadoop_fs(spark, path)[0]
+    if cdf:
+        fields = {"cdf": {"files": [], "key": None}}
 
     def build(next_v: int) -> dict:
-        payload = {
+        return {
             "version": next_v,
             "action": action,
             "add": [],
             "remove": [],
             "txn": txn,
+            **(fields or {}),
         }
-        if cdf:
-            payload["cdf"] = {"files": [], "key": None}
-        return payload
 
     return _commit_with_retries(spark, path, fs, build, txn, 20)
 
@@ -6401,9 +6478,11 @@ def tx_delete_where(
     cdf: "bool | None" = None,
     prune: "tuple | list[tuple] | None" = None,
 ) -> int:
-    """DELETE FROM ... WHERE ``condition`` (any Spark SQL boolean
-    expression over the table's columns; rows where it is NULL
-    survive, SQL semantics). Two physical strategies:
+    """DELETE FROM ... WHERE ``condition`` (any deterministic Spark
+    SQL boolean expression over the table's columns; rows where it is
+    NULL survive, SQL semantics — ``rand()``/``uuid()`` conditions
+    raise ValueError, since the delete and its change rows each
+    evaluate the condition). Two physical strategies:
 
     ``mode='merge_on_read'`` (default): commit a POSITIONAL DELETION
     VECTOR — KB-scale (file, row-ordinal) sidecars naming the exact
@@ -6447,115 +6526,24 @@ def tx_delete_where(
         raise ValueError(
             f"mode must be copy_on_write|merge_on_read, got {mode!r}"
         )
-    snap = _replay(spark, path)
-    _check_writer_features(snap.properties, path)
-    if txn is not None and (prior := snap.txns.get(txn)) is not None:
+    snap, cdf, prior = _mutation_prelude(
+        spark, path, "tx_delete_where", txn, cdf,
+        refuse_dv="tx_delete_where(mode='copy_on_write')"
+        if mode == "copy_on_write" else None,
+    )
+    if prior is not None:
         return prior
-    if snap.mor:
-        raise ValueError(
-            f"tx_delete_where on {path} with live equality tombstones "
-            f"(versions {[t['version'] for t in snap.mor]}); run "
-            "tx_apply_deletes first"
-        )
-    if mode == "copy_on_write" and snap.dv:
-        raise ValueError(
-            f"tx_delete_where(mode='copy_on_write') on {path} with "
-            f"live deletion vectors (versions "
-            f"{[d['version'] for d in snap.dv]}); run tx_apply_deletes "
-            "first"
-        )
-    if cdf is None:
-        cdf = _cdf_props_default(snap.properties)
-    files = sorted(snap.eps)
-    if prune is not None:
-        conjuncts = [prune] if isinstance(prune, tuple) else list(prune)
-        pm = _phys_map(snap.schema) if snap.schema else {}
-        pr = [(pm.get(c, c), lo, hi) for c, lo, hi in conjuncts]
-        files = [
-            f for f in files if not _prunable(snap.stats.get(f) or {}, pr)
-        ]
-        if files and snap.blooms:
-            # equality prune conjuncts consult blooms, same as tx_read
-            eqs = [
-                (c, lo) for c, lo, hi in pr
-                if lo is not None and lo == hi
-            ]
-            if eqs:
-                files = _bloom_prune(spark, path, snap, files, eqs)
-    if not files:
-        return _dv_empty_delete(spark, path, snap, txn, cdf)
-    scan = _scan_files(spark, path, snap, files, with_pos=True)
-    if snap.dv:
-        # don't re-mark already-deleted positions (idempotent stacking)
-        live_pos = spark.read.parquet(
-            *[_abs(path, sf) for d in snap.dv for sf in d["files"]]
-        )
-        scan = scan.join(
-            F.broadcast(live_pos), ["_file", "_pos"], "left_anti"
-        )
-    cond = F.expr(condition)
-    matched = scan.filter(cond)  # IS TRUE: NULLs survive
+    matched = _matched_rows(spark, path, snap, condition, prune)
     if mode == "merge_on_read":
-        # round 16 (guide §1.2): one evaluation of the matched set
-        # serves the DV stage, the target list and the CDF delete
-        # frame (the frame previously re-scanned the target files and
-        # semi-joined the sidecar read-back; the predicate is
-        # deterministic over this snapshot, the assumption the old
-        # independent evaluations already made)
-        matched = matched.localCheckpoint(eager=False)
-        sidecars = _stage_dv(matched.select("_file", "_pos"), path)
-        targets = sorted(
-            r[0]
-            for r in matched.select("_file").distinct().collect()
-        )
-        if not targets:
-            return _dv_empty_delete(spark, path, snap, txn, cdf)
-        cdf_files = None
-        if cdf:
-            deleted = (
-                matched.drop("_file", "_pos")
-                .withColumn("_change_type", F.lit("delete"))
-            )
-            cdf_files = _stage_cdf(_to_physical(deleted, snap.schema), path)
-        return _commit_dv(
-            spark, path, snap, sidecars, targets, txn, cdf_files
-        )
-    touched = sorted(
-        r[0] for r in matched.select("_file").distinct().collect()
-    )
-    if not touched:
-        return _dv_empty_delete(spark, path, snap, txn, cdf)
-    old = _read_table_files(spark, path, touched, snap)
-    if cdf:
-        # round 16: survivor rewrite + CDF delete frame share one
-        # materialization of the touched-file read
-        old = old.localCheckpoint(eager=False)
-    survivors = old.filter(~F.coalesce(cond, F.lit(False)))
-    extra = None
-    if cdf:
-        deleted_rows = old.filter(cond).withColumn(
-            "_change_type", F.lit("delete")
-        )
-        extra = {
-            "cdf": {
-                "files": _stage_cdf(
-                    _to_physical(deleted_rows, snap.schema), path
-                ),
-                "key": None,
-            }
-        }
-        delta = _writer_feature_delta(snap.properties, {"cdf"})
-        if delta:
-            extra["properties"] = delta
-    added = _stage_and_place(
-        _to_physical(survivors, snap.schema), path, snap.partition_by
-    )
-    return _commit_rewrite(
-        spark, path, added, touched, snap.version, txn, "delete",
-        stats=_rewrite_stats(spark, path, touched, added, None, snap),
-        blooms=_rewrite_blooms(spark, path, touched, added, snap),
-        extra=extra,
-        planned_rt=_row_tracking_on(snap.properties),
+        return _dv_tail(spark, path, snap, txn, cdf, matched)
+    cond = F.expr(condition)
+    return _cow_tail(
+        spark, path, snap, txn, cdf, _files_of(matched), "delete",
+        lambda old: (
+            old.filter(~F.coalesce(cond, F.lit(False))),
+            old.filter(cond),
+            None,
+        ),
     )
 
 
@@ -6577,46 +6565,12 @@ def tx_delete_positions(
     ``tx_delete_where(mode='merge_on_read')``); raises if any
     referenced file is not live in the current snapshot."""
     spark = pos.sparkSession
-    from pyspark.sql import functions as F
-
-    snap = _replay(spark, path)
-    _check_writer_features(snap.properties, path)
-    if txn is not None and (prior := snap.txns.get(txn)) is not None:
+    snap, cdf, prior = _mutation_prelude(
+        spark, path, "tx_delete_positions", txn, cdf
+    )
+    if prior is not None:
         return prior
-    if snap.mor:
-        raise ValueError(
-            f"tx_delete_positions on {path} with live equality "
-            f"tombstones (versions "
-            f"{[t['version'] for t in snap.mor]}); run "
-            "tx_apply_deletes first"
-        )
-    if cdf is None:
-        cdf = _cdf_props_default(snap.properties)
-    sidecars = _stage_dv(
-        pos.select("_file", "_pos").distinct(), path
-    )
-    placed = spark.read.parquet(*[_abs(path, f) for f in sidecars])
-    targets = sorted(
-        r[0] for r in placed.select("_file").distinct().collect()
-    )
-    if not targets:
-        return _dv_empty_delete(spark, path, snap, txn, cdf)
-    missing = [f for f in targets if f not in snap.eps]
-    if missing:
-        raise ValueError(
-            f"positions reference files not live at {path}: "
-            f"{missing[:3]}... (stale scan? vacuumed snapshot?)"
-        )
-    cdf_files = None
-    if cdf:
-        deleted = (
-            _scan_files(spark, path, snap, targets, with_pos=True)
-            .join(F.broadcast(placed), ["_file", "_pos"], "semi")
-            .drop("_file", "_pos")
-            .withColumn("_change_type", F.lit("delete"))
-        )
-        cdf_files = _stage_cdf(_to_physical(deleted, snap.schema), path)
-    return _commit_dv(spark, path, snap, sidecars, targets, txn, cdf_files)
+    return _dv_tail(spark, path, snap, txn, cdf, None, pos=pos)
 
 
 def tx_dedup_rows(
@@ -6687,7 +6641,11 @@ def tx_update(
 ) -> int:
     """UPDATE ... SET col = expr WHERE ``condition`` (Spark SQL
     expressions over the pre-update row; rows where the condition is
-    NULL are untouched, SQL semantics). Two physical strategies:
+    NULL are untouched, SQL semantics). The condition must be
+    deterministic (``rand()``/``uuid()`` raise ValueError); a SET
+    expression may not be — it is evaluated once per row, so the
+    table and the CDF post-images hold the same values. Two physical
+    strategies:
 
     ``mode='merge_on_read'`` (default): Delta's deletion-vector
     UPDATE — ONE atomic commit that (a) marks the matched rows'
@@ -6728,59 +6686,23 @@ def tx_update(
         )
     if not set:
         raise ValueError("tx_update needs at least one SET assignment")
-    snap = _replay(spark, path)
-    _check_writer_features(snap.properties, path)
-    if txn is not None and (prior := snap.txns.get(txn)) is not None:
+    snap, cdf, prior = _mutation_prelude(
+        spark, path, "tx_update", txn, cdf,
+        refuse_dv="tx_update(mode='copy_on_write')"
+        if mode == "copy_on_write" else None,
+    )
+    if prior is not None:
         return prior
-    if snap.mor:
-        raise ValueError(
-            f"tx_update on {path} with live equality tombstones "
-            f"(versions {[t['version'] for t in snap.mor]}); run "
-            "tx_apply_deletes first"
-        )
-    if mode == "copy_on_write" and snap.dv:
-        raise ValueError(
-            f"tx_update(mode='copy_on_write') on {path} with live "
-            f"deletion vectors (versions "
-            f"{[d['version'] for d in snap.dv]}); run tx_apply_deletes "
-            "first"
-        )
-    if cdf is None:
-        cdf = _cdf_props_default(snap.properties)
-    files = sorted(snap.eps)
-    if prune is not None:
-        conjuncts = [prune] if isinstance(prune, tuple) else list(prune)
-        pm = _phys_map(snap.schema) if snap.schema else {}
-        pr = [(pm.get(c, c), lo, hi) for c, lo, hi in conjuncts]
-        files = [
-            f for f in files if not _prunable(snap.stats.get(f) or {}, pr)
-        ]
-        if files and snap.blooms:
-            eqs = [
-                (c, lo) for c, lo, hi in pr
-                if lo is not None and lo == hi
-            ]
-            if eqs:
-                files = _bloom_prune(spark, path, snap, files, eqs)
-    if not files:
-        return _dv_empty_delete(spark, path, snap, txn, cdf, "update")
-    scan = _scan_files(spark, path, snap, files, with_pos=True)
-    if snap.dv:
-        live_pos = spark.read.parquet(
-            *[_abs(path, sf) for d in snap.dv for sf in d["files"]]
-        )
-        scan = scan.join(
-            F.broadcast(live_pos), ["_file", "_pos"], "left_anti"
-        )
-    data_cols = [c for c in scan.columns if c not in ("_file", "_pos")]
+    matched = _matched_rows(spark, path, snap, condition, prune)
+    if matched is None:
+        return _commit_noop(spark, path, txn, cdf, "update")
+    data_cols = [c for c in matched.columns if c not in ("_file", "_pos")]
     bad = [c for c in set if c not in data_cols]
     if bad:
         raise ValueError(
             f"tx_update SET columns {bad} not in the table "
             f"(has {data_cols})"
         )
-    cond = F.expr(condition)
-    matched = scan.filter(cond)
 
     def _assign(df):
         return df.select(
@@ -6790,7 +6712,7 @@ def tx_update(
             ]
         )
 
-    before_types = dict(scan.select(*data_cols).dtypes)
+    before_types = dict(matched.select(*data_cols).dtypes)
     updated = _assign(matched.drop("_file", "_pos"))
     retyped = {
         c: (before_types[c], t)
@@ -6803,102 +6725,37 @@ def tx_update(
             "cast the expression back to the column's type"
         )
     if mode == "merge_on_read":
-        # round 16 (guide §1.2): the matched-row set fed FOUR separate
-        # evaluations of the pruned-file scan — the DV position stage,
-        # the post-image data write, the CDF pre-image (via a sidecar
-        # read-back + semi-join re-scan) and the CDF post-image.
-        # Checkpoint it once (per-run intermediate; the predicate is
-        # deterministic over this snapshot, the same assumption the
-        # old independent re-evaluations already made) and derive all
-        # four from the materialized rows.
-        matched = matched.localCheckpoint(eager=False)
-        updated = _assign(matched.drop("_file", "_pos"))
-        _check_constraints(updated, snap.properties, path, "tx_update")
-        sidecars = _stage_dv(matched.select("_file", "_pos"), path)
-        targets = sorted(
-            r[0]
-            for r in matched.select("_file").distinct().collect()
-        )
-        if not targets:
-            return _dv_empty_delete(spark, path, snap, txn, cdf, "update")
-        added = _stage_and_place(
-            _to_physical(updated, snap.schema), path, snap.partition_by
-        )
-        cdf_files = None
-        if cdf:
-            pre = (
-                matched.drop("_file", "_pos")
-                .withColumn("_change_type", F.lit("update_preimage"))
-            )
-            post = updated.withColumn(
-                "_change_type", F.lit("update_postimage")
-            )
-            cdf_files = _stage_cdf(
-                _to_physical(pre.unionByName(post), snap.schema), path
-            )
-        return _commit_dv(
-            spark, path, snap, sidecars, targets, txn, cdf_files,
-            action="update", added=added,
-            stats=_rewrite_stats(spark, path, targets, added, None, snap),
-            blooms=_rewrite_blooms(spark, path, targets, added, snap),
-            extra_revalidate=lambda props: _check_constraints(
-                updated, props, path, "tx_update"
-            ),
-        )
+        return _dv_tail(spark, path, snap, txn, cdf, matched, _assign)
     _check_constraints(updated, snap.properties, path, "tx_update")
-    touched = sorted(
-        r[0] for r in matched.select("_file").distinct().collect()
-    )
-    if not touched:
-        return _dv_empty_delete(spark, path, snap, txn, cdf, "update")
-    old = _read_table_files(spark, path, touched, snap)
-    if cdf:
-        # round 16: with CDF on, the touched-file read fed THREE
-        # evaluations (full rewrite, pre-image, post-image) — one
-        # materialization serves all three (per-run intermediate)
-        old = old.localCheckpoint(eager=False)
+    cond = F.expr(condition)
     hit = F.coalesce(cond, F.lit(False))
-    rewritten = old.select(
-        *[
-            F.when(hit, F.expr(set[c]).cast(before_types[c]))
-            .otherwise(F.col(c))
-            .alias(c)
-            if c in set
-            else F.col(c)
-            for c in data_cols
-        ]
-    )
-    extra = None
-    if cdf:
-        pre = old.filter(cond).withColumn(
-            "_change_type", F.lit("update_preimage")
+
+    def split(old):
+        # the assignments run once per row, in ONE projection both the
+        # rewritten files and the post-images read — a rand() SET
+        # writes exactly what the change feed reports
+        rw = old.select(
+            hit.alias("__hit"),
+            *[
+                F.when(hit, F.expr(set[c]).cast(before_types[c]))
+                .otherwise(F.col(c))
+                .alias(c)
+                if c in set
+                else F.col(c)
+                for c in old.columns
+            ],
         )
-        post = _assign(old.filter(cond)).withColumn(
-            "_change_type", F.lit("update_postimage")
+        return (
+            rw.drop("__hit"),
+            old.filter(cond),
+            rw.filter("__hit").drop("__hit", _ROW_ID),
         )
-        extra = {
-            "cdf": {
-                "files": _stage_cdf(
-                    _to_physical(pre.unionByName(post), snap.schema), path
-                ),
-                "key": None,
-            }
-        }
-        delta = _writer_feature_delta(snap.properties, {"cdf"})
-        if delta:
-            extra["properties"] = delta
-    added = _stage_and_place(
-        _to_physical(rewritten, snap.schema), path, snap.partition_by
-    )
-    return _commit_rewrite(
-        spark, path, added, touched, snap.version, txn, "update",
-        stats=_rewrite_stats(spark, path, touched, added, None, snap),
-        blooms=_rewrite_blooms(spark, path, touched, added, snap),
-        extra=extra,
+
+    return _cow_tail(
+        spark, path, snap, txn, cdf, _files_of(matched), "update", split,
         revalidate=lambda props: _check_constraints(
             updated, props, path, "tx_update"
         ),
-        planned_rt=_row_tracking_on(snap.properties),
     )
 
 
@@ -6950,18 +6807,10 @@ def tx_optimize_zorder(
         files = [f for f in files if marks.get(f) != spec]
         if not files:
             return None  # everything live is already clustered
+    # re-clustering moves rows between files arbitrarily — exactly the
+    # case stable ids exist for: materialize them on tracked tables
     preserve_ids = _row_tracking_on(snap.properties)
-    if preserve_ids:
-        # re-clustering moves rows between files arbitrarily — exactly
-        # the case stable ids exist for: materialize them
-        df = _attach_row_ids(
-            spark, snap,
-            _scan_files(
-                spark, path, snap, files, with_pos=True, keep_row_col=True
-            ),
-        ).drop("_file", "_pos")
-    else:
-        df = _read_table_files(spark, path, files, snap)
+    df = _read_with_mor(spark, path, snap, files, with_ids=preserve_ids)
     clustered = zorder_by(df, list(cols), n_files=n_files, bits=bits)
     added = _stage_and_place(
         _to_physical(clustered, snap.schema), path, snap.partition_by

@@ -1,0 +1,234 @@
+"""The row-level mutation family (sources/txlog.py: tx_update,
+tx_delete_where, tx_delete, tx_delete_positions) shares one prelude,
+one deletion-vector tail and one copy-on-write tail. These tests pin
+what the shared pieces promise: a WHERE condition is deterministic
+(the single-evaluation checkpoints rely on it), copy-on-write change
+rows carry stable row ids on tracked tables, the checkpoints are
+released when the op returns, the Spark job count of each verb, and
+that the DV sidecar read and the stats prune each stay in one place."""
+
+from __future__ import annotations
+
+import inspect
+import os
+import re
+
+import pytest
+from pyspark.sql import functions as F
+
+import distributed_mapreduce__spark as pkg
+from distributed_mapreduce__spark.sources import txlog
+from distributed_mapreduce__spark.sources.tx_sql import (
+    tx_register_table,
+    tx_sql,
+)
+from distributed_mapreduce__spark.sources.txlog import (
+    _replay,
+    tx_changes_cdf,
+    tx_delete,
+    tx_delete_positions,
+    tx_delete_where,
+    tx_enable_row_tracking,
+    tx_read,
+    tx_scan_with_pos,
+    tx_scan_with_row_ids,
+    tx_update,
+    tx_write,
+)
+
+MODES = ["merge_on_read", "copy_on_write"]
+
+
+def _df(spark, n=1000):
+    return spark.range(n).select(
+        "id",
+        (F.col("id") % 10).alias("v"),
+        F.lit("x").alias("tag"),
+        F.lit(0.0).alias("x"),
+    )
+
+
+@pytest.fixture()
+def table(spark, tmp_path):
+    t = str(tmp_path / "t")
+    tx_write(_df(spark).repartition(4), t, stats_cols=["id"])
+    return t
+
+
+def _delete_where(spark, t, cond, mode):
+    return tx_delete_where(spark, t, cond, mode=mode)
+
+
+def _update(spark, t, cond, mode):
+    return tx_update(spark, t, cond, {"tag": "'u'"}, mode=mode)
+
+
+@pytest.mark.parametrize("mode", MODES)
+@pytest.mark.parametrize("verb", [_delete_where, _update])
+@pytest.mark.parametrize("cond", ["rand() < 0.5", "uuid() < '8'"])
+def test_nondeterministic_condition_refused(spark, table, verb, mode, cond):
+    v0 = _replay(spark, table).version
+    with pytest.raises(ValueError, match="not deterministic"):
+        verb(spark, table, cond, mode)
+    assert _replay(spark, table).version == v0
+    assert tx_read(spark, table).count() == 1000
+
+
+def test_nondeterministic_sql_delete_refused(spark, table):
+    tx_register_table(spark, "t_nondet", table)
+    v0 = _replay(spark, table).version
+    with pytest.raises(ValueError, match="not deterministic"):
+        tx_sql(spark, "DELETE FROM t_nondet WHERE rand() < 0.5")
+    assert _replay(spark, table).version == v0
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_current_timestamp_condition_accepted(spark, table, mode):
+    """current_timestamp() is one value per query, which Spark treats
+    as deterministic — it must stay usable in a WHERE."""
+    tx_delete_where(
+        spark, table, "v = 3 AND current_timestamp() IS NOT NULL", mode=mode
+    )
+    assert tx_read(spark, table).count() == 900
+
+
+@pytest.mark.parametrize("mode", MODES)
+def test_random_set_post_images_match_table(spark, table, mode):
+    """SET x = rand(): the assignment is evaluated once, so the CDF
+    post-images are exactly the rows the table now holds."""
+    v = tx_update(spark, table, "v = 3", {"x": "rand()"}, mode=mode)
+    frames = {
+        ver: df for ver, _, df in tx_changes_cdf(
+            spark, table, since_version=v - 1
+        )
+    }
+    post = frames[v].filter("_change_type = 'update_postimage'")
+    got = sorted((r.id, r.x) for r in post.select("id", "x").collect())
+    want = sorted(
+        (r.id, r.x)
+        for r in tx_read(spark, table).filter("v = 3").select("id", "x")
+        .collect()
+    )
+    assert len(want) == 100 and got == want
+    assert len({x for _, x in want}) > 1
+
+
+def _tracked(spark, tmp_path):
+    t = str(tmp_path / "tracked")
+    tx_write(_df(spark, 200).repartition(4), t, stats_cols=["id"])
+    tx_enable_row_tracking(spark, t)
+    return t
+
+
+@pytest.mark.parametrize("verb", [_delete_where, _update])
+def test_copy_on_write_cdf_carries_row_ids(spark, tmp_path, verb):
+    t = _tracked(spark, tmp_path)
+    ids = {
+        r.id: r._row_id for r in tx_scan_with_row_ids(spark, t).collect()
+    }
+    v = verb(spark, t, "v = 3", "copy_on_write")
+    frames = {
+        ver: df for ver, _, df in tx_changes_cdf(
+            spark, t, since_version=v - 1, with_row_ids=True
+        )
+    }
+    pre = frames[v]
+    if "_change_type" in pre.columns:
+        pre = pre.filter("_change_type = 'update_preimage'")
+    rows = pre.select("id", "_row_id").collect()
+    assert len(rows) == 20
+    assert {r.id: r._row_id for r in rows} == {
+        i: ids[i] for i in ids if i % 10 == 3
+    }
+
+
+def test_checkpoints_released_after_each_op(spark, table):
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for i in range(5):
+        tx_update(spark, table, f"v = {i}", {"tag": "'u'"})
+    # copy_on_write needs a DV-free table: settle, then delete
+    txlog.tx_apply_deletes(spark, table)
+    for i in range(5, 10):
+        tx_delete_where(spark, table, f"v = {i}", mode="copy_on_write")
+    # <=: the context cleaner may release RDDs earlier tests left behind
+    assert jsc.getPersistentRDDs().size() <= before
+
+
+def _jobs(spark, fn):
+    tracker = spark.sparkContext._jsc.sc().statusTracker()
+    before = len(tracker.getJobIdsForGroup(None))
+    fn()
+    return len(tracker.getJobIdsForGroup(None)) - before
+
+
+def _pos_delete(spark, t):
+    return tx_delete_positions(
+        tx_scan_with_pos(spark, t).filter("v = 3"), t
+    )
+
+
+#: (op, Spark jobs) on a 4-file, 1,000-row table with CDF on. Each
+#: count was taken while every verb still carried its own copy of the
+#: prelude and tails; sharing them must not change it.
+JOB_PINS = {
+    "update/merge_on_read": (
+        lambda s, t: tx_update(s, t, "v = 3", {"tag": "'u'"}), 10),
+    "update/copy_on_write": (
+        lambda s, t: tx_update(
+            s, t, "v = 3", {"tag": "'u'"}, mode="copy_on_write"), 10),
+    "delete_where/merge_on_read": (
+        lambda s, t: tx_delete_where(s, t, "v = 3"), 6),
+    "delete_where/copy_on_write": (
+        lambda s, t: tx_delete_where(s, t, "v = 3", mode="copy_on_write"),
+        10),
+    "delete/copy_on_write": (
+        lambda s, t: tx_delete(
+            s.range(100, 200).select("id"), t, "id"), 10),
+    "delete_positions": (_pos_delete, 11),
+}
+
+
+@pytest.mark.parametrize("case", sorted(JOB_PINS))
+def test_mutation_job_counts_pinned(spark, table, case):
+    fn, want = JOB_PINS[case]
+    got = _jobs(spark, lambda: fn(spark, table))
+    assert got == want, f"{case}: {got} jobs (pinned {want})"
+
+
+def _package_hits(pattern: str) -> "set[tuple[str, int]]":
+    root = os.path.dirname(os.path.abspath(pkg.__file__))
+    hits = set()
+    for d, _, names in os.walk(root):
+        for n in names:
+            if not n.endswith(".py"):
+                continue
+            p = os.path.join(d, n)
+            with open(p, encoding="utf-8") as fh:
+                for i, line in enumerate(fh, 1):
+                    if re.search(pattern, line):
+                        hits.add((os.path.relpath(p, root), i))
+    return hits
+
+
+def _lines_of(fn, pattern: str) -> "set[tuple[str, int]]":
+    lines, start = inspect.getsourcelines(fn)
+    rel = os.path.join("sources", "txlog.py")
+    return {
+        (rel, start + k) for k, line in enumerate(lines)
+        if re.search(pattern, line)
+    }
+
+
+def test_dv_sidecar_read_and_prune_live_in_one_place():
+    """A new copy of either cannot come back unnoticed: the live DV
+    sidecar read lives only in ``_drop_dv_positions``, and stats
+    pruning is called only from ``_prune_files``."""
+    dv_read = r'for d in snap\.dv for sf in d\["files"\]'
+    allowed = _lines_of(txlog._drop_dv_positions, dv_read)
+    assert allowed, "_drop_dv_positions no longer reads the DV sidecars"
+    assert _package_hits(dv_read) == allowed
+    prune_call = r"(?<!def )_prunable\("
+    allowed = _lines_of(txlog._prune_files, prune_call)
+    assert allowed, "_prune_files no longer calls _prunable"
+    assert _package_hits(prune_call) == allowed
