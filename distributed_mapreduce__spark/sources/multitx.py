@@ -88,35 +88,25 @@ from .txlog import (
     _check_constraints,
     _check_writer_features,
     _collect_stats,
+    _commit,
     _commit_rewrite,
-    _commit_with_retries,
     _committed_txns,
-    _list_commits,
-    _load,
     _multi_record_path,
-    _multi_status,
+    _pending_multi,
     _merge_keys,
     _phys_map,
     _prepare_merge,
     _prepare_merge_into,
-    _read_small,
+    _read_record,
     _replay,
     _Snapshot,
     _stage_and_place,
     _write_atomic,
-    _PAD,
 )
 
 
 class MultiTxAborted(RuntimeError):
     """The transaction's coordinator slot holds an abort tombstone."""
-
-
-def _read_record(spark, coordinator: str, txid: str) -> dict | None:
-    fs, p = hadoop_fs(spark, _multi_record_path(coordinator, txid))
-    if not fs.exists(p):
-        return None
-    return json.loads(_read_small(spark, fs, p).decode("utf-8"))
 
 
 def tx_multi(
@@ -297,8 +287,6 @@ def tx_multi(
             if stat_cols and added
             else None
         )
-        fs = hadoop_fs(spark, path)[0]
-
         def build(
             next_v: int, added=added, stats=stats, mode=mode,
             schema_json=schema_json, part_by=part_by,
@@ -318,8 +306,8 @@ def tx_multi(
                 payload["stats"] = stats
             return payload
 
-        versions[path] = _commit_with_retries(
-            spark, path, fs, build, table_txn, max_retries
+        versions[path] = _commit(
+            spark, path, build, table_txn, max_retries
         )
 
     # the atomic commit point: one put-if-absent record resolves every
@@ -374,19 +362,12 @@ def tx_multi_pending(spark: SparkSession, path: str) -> "list[dict]":
     transactions are still unresolved — each blocks checkpoint folding
     and log truncation until its writer finishes or an operator
     aborts it."""
-    out = []
-    for v, kind in _list_commits(spark, path):
-        if kind != "commit":
-            continue
-        c = _load(spark, path, f"{v:0{_PAD}d}.json")
-        m = c.get("multi")
-        if m and _multi_status(spark, m["coordinator"], m["txid"]) == "pending":
-            out.append(
-                {
-                    "version": v,
-                    "txid": m["txid"],
-                    "coordinator": m["coordinator"],
-                    "n_added": len(c.get("add", [])),
-                }
-            )
-    return out
+    return [
+        {
+            "version": v,
+            "txid": c["multi"]["txid"],
+            "coordinator": c["multi"]["coordinator"],
+            "n_added": len(c.get("add", [])),
+        }
+        for v, c in _pending_multi(spark, path)
+    ]

@@ -35,7 +35,13 @@ Protocol (everything readers trust is reached by atomic rename):
   never a local-disk assumption.
 - **Read**: replay commits 0..v (or from the newest checkpoint ≤ v —
   replay cost is bounded by CHECKPOINT_EVERY, not table age) into the
-  live file set, then ``spark.read.parquet(*files)``. A crash between
+  live file set, then ``spark.read.parquet(*files)``. The log protocol
+  itself — listing, loading, the fold, multi-table visibility, the
+  claimers and the claim loop — lives in :mod:`.txlog_core`, which
+  needs no session: local and ``file:`` paths read and publish with
+  plain ``os`` calls, and only a non-local path (``scheme://``, or a
+  scheme-less path under a non-local ``fs.defaultFS``) goes through
+  the session's Hadoop FileSystem over py4j. A crash between
   staging and commit leaves invisible files; a crash mid-commit leaves
   a ``.tmp`` readers ignore (and ``tx_vacuum`` sweeps). Torn or
   unparseable commits are impossible by construction: the only
@@ -92,29 +98,43 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .sinks import hadoop_fs
 from .tables import local_frame
+from .txlog_core import (  # noqa: F401 — re-exported log protocol
+    _CLAIMERS,
+    _MULTI_CACHE,
+    _PAD,
+    _PENDING,
+    _RENAME_UNSAFE_SCHEMES,
+    READER_VERSION,
+    AbfsIfNoneMatchClaimer,
+    CommitClaimer,
+    GcsGenerationMatchClaimer,
+    HardLinkClaimer,
+    HdfsRenameClaimer,
+    S3ConditionalPutClaimer,
+    _change_commits,
+    _check_reader,
+    _claimer_for,
+    _commit_with_retries,
+    _commits,
+    _committed_txns,
+    _list_commits,
+    _load,
+    _log_fs,
+    _multi_record_path,
+    _multi_status,
+    _pending_multi,
+    _read_record,
+    _read_small,
+    _replay,
+    _schema_fields,
+    _Snapshot,
+    _write_atomic,
+    register_claimer,
+)
 
 #: Write a full-snapshot checkpoint every this many commits; log replay
 #: per read is bounded by this, not by table age.
 CHECKPOINT_EVERY = 10
-
-#: Table-format feature level this build can READ (the Delta protocol
-#: minReaderVersion idea): 1 = base log (append/overwrite/rewrites/
-#: stats/multi-table), 2 = merge-on-read delete tombstones. Commits
-#: and checkpoints that USE a level-2 feature are stamped
-#: ``"reader": 2``; replay refuses any stamp above this constant
-#: instead of silently misreading — a level-1 reader replaying a
-#: tombstone commit would see "no files changed" and resurrect every
-#: logically-deleted row. Time travel to versions below the first
-#: stamped commit keeps working regardless. Level 3: hidden
-#: partitioning (transform specs like ``days(ts)``) — the placement
-#: directories carry DERIVED columns that are NOT table columns, and a
-#: level-2 reader scanning them would surface the derived column as
-#: data (wrong schema) instead of dropping it. Level 4: positional
-#: deletion vectors (``tx_delete_where`` / ``tx_delete_positions``) —
-#: a ``dv`` commit names (file, row position) pairs as logically
-#: deleted; a lower-level reader replaying it would see "no files
-#: changed" and resurrect every DV-deleted row.
-READER_VERSION = 5
 
 #: Write-side table features this build maintains (the Delta
 #: table-features model, writer half): a table whose
@@ -135,11 +155,40 @@ WRITER_FEATURES = frozenset(
      "row-tracking"}
 )
 
-_PAD = 20  # zero-padded version filenames sort lexicographically
-
 #: commit-timestamp source, a seam so tests can drive wall-clock
 #: retention (tx_vacuum retain_hours) deterministically
 _now = time.time
+
+
+def _commit(
+    spark,
+    path: str,
+    build_payload,
+    txn: str | None,
+    max_retries: int,
+    revalidate=None,
+    checked_at: "int | None" = None,
+) -> int:
+    """Commit through the core claim loop
+    (:func:`~.txlog_core._commit_with_retries`), stamping each payload
+    with :data:`_now` and writing a checkpoint every
+    ``CHECKPOINT_EVERY`` versions; returns the committed version (or
+    the one ``txn`` already committed at)."""
+
+    def stamped(next_v: int) -> dict:
+        payload = build_payload(next_v)
+        # wall-clock commit stamp: feeds time-based vacuum retention
+        # (and operator forensics); correctness never depends on it
+        payload.setdefault("ts", _now())
+        return payload
+
+    version, published = _commit_with_retries(
+        spark, path, stamped, txn, max_retries,
+        revalidate=revalidate, checked_at=checked_at,
+    )
+    if published and (version + 1) % CHECKPOINT_EVERY == 0:
+        _write_checkpoint(spark, path, version)
+    return version
 
 
 def _abs(path: str, f: str) -> str:
@@ -152,717 +201,15 @@ def _abs(path: str, f: str) -> str:
     return f"{path}/{f}"
 
 
-def _read_small(spark, fs, p) -> bytes:
-    raw = fs.open(p)
-    try:
-        return bytes(
-            spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray(
-                raw
-            )
-        )
-    finally:
-        raw.close()
-
-
-class CommitClaimer:
-    """Pluggable commit-publish arm: how exactly ONE writer comes to
-    own a log filename, per filesystem semantics. ``publish`` must
-    guarantee (a) readers never observe a torn file and (b) of any
-    number of concurrent publishers of the same path, at most one
-    returns True and its payload is what readers see.
-
-    Arms shipped here: :class:`HardLinkClaimer` (local FS — POSIX
-    ``link(2)`` is an atomic put-if-absent: it fails with ``EEXIST``
-    when the destination exists, with no replace variant, so the link
-    result IS the claim and there is no separate claim file to
-    orphan) and :class:`HdfsRenameClaimer` (HDFS — rename itself is
-    atomic and does not replace, so the rename result is the claim).
-    An object-store port registers a put-if-absent arm for its scheme
-    (S3 ``If-None-Match:*``, GCS ``ifGenerationMatch=0``) via
-    :func:`register_claimer` — one function, nothing else changes."""
-
-    def publish(self, spark, fs, final_path_str: str, payload: bytes) -> bool:
-        raise NotImplementedError
-
-
-#: test seam: called by HardLinkClaimer between writing the payload
-#: tmp and the link(2) that publishes it (race tests widen the window
-#: here and prove the link's atomicity, not timing, decides the winner)
-_prepublish_hook = None
-
-
-class HardLinkClaimer(CommitClaimer):
-    """Local-filesystem arm. The payload is written whole-file (and
-    fsynced) to a unique ``.tmp``, then published by
-    ``os.link(tmp, final)`` — POSIX ``link(2)`` atomically fails with
-    ``EEXIST`` if the destination exists and has no replace mode, so
-    of any number of racing publishers exactly one's link lands and
-    that one's bytes are what readers see. Readers never observe a
-    torn commit (the tmp was complete before the link), and a writer
-    that crashes at ANY point leaves only an ignorable unique
-    ``.tmp`` hardlink — there is no claim file whose orphan could
-    wedge the version (the round-8 claim-file protocol had exactly
-    that hazard: a crash between claim and rename required manual
-    recovery). RawLocalFileSystem's REPLACING rename is never used as
-    a publish step here."""
-
-    def publish(self, spark, fs, final_path_str: str, payload: bytes) -> bool:
-        import os
-
-        local = final_path_str
-        if local.startswith("file://"):
-            local = local[7:]
-        elif local.startswith("file:"):
-            local = local[5:]
-        os.makedirs(os.path.dirname(local), exist_ok=True)
-        tmp = local + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "wb") as f:
-            f.write(payload)
-            f.flush()
-            os.fsync(f.fileno())
-        if _prepublish_hook is not None:
-            _prepublish_hook()
-        try:
-            os.link(tmp, local)
-            won = True
-        except FileExistsError:
-            won = False  # another writer published this version first
-        finally:
-            os.unlink(tmp)
-        if won:
-            # make the new directory entry durable
-            dfd = os.open(os.path.dirname(local), os.O_RDONLY)
-            try:
-                os.fsync(dfd)
-            finally:
-                os.close(dfd)
-        return won
-
-
-class HdfsRenameClaimer(CommitClaimer):
-    """HDFS arm: tmp + rename, where HDFS's rename is atomic and
-    FAILS when the destination exists — the rename result itself is
-    the binding claim (the exists() pre-check is only a fast path).
-    Correct on HDFS and any FS with no-replace rename semantics;
-    NOT correct on raw local FS (use HardLinkClaimer) or
-    object stores (register a put-if-absent arm)."""
-
-    def publish(self, spark, fs, final_path_str: str, payload: bytes) -> bool:
-        tmp = hadoop_fs(spark, final_path_str + f".tmp-{uuid.uuid4().hex}")[1]
-        out = fs.create(tmp, True)
-        try:
-            out.write(bytearray(payload))
-        finally:
-            out.close()
-        final = hadoop_fs(spark, final_path_str)[1]
-        if fs.exists(final):
-            fs.delete(tmp, False)
-            return False
-        ok = fs.rename(tmp, final)
-        if not ok:
-            fs.delete(tmp, False)
-        return ok
-
-
-def _split_object_uri(path: str) -> tuple[str, str]:
-    """``s3a://bucket/a/b.json`` -> ``("bucket", "a/b.json")``."""
-    rest = path.split("://", 1)[1]
-    bucket, _, key = rest.partition("/")
-    if not bucket or not key:
-        raise ValueError(f"not a bucket/key object URI: {path!r}")
-    return bucket, key
-
-
-class S3ConditionalPutClaimer(CommitClaimer):
-    """Object-store arm: S3 conditional PUT — ``If-None-Match: *``
-    (public S3 API since 2024-08; also honored by GCS's XML interop
-    layer and MinIO) makes the object write ITSELF the atomic
-    put-if-absent claim. Single request: no claim files, no rename,
-    nothing to vacuum on crash — of any number of racing publishers of
-    one log filename, S3 persists exactly one body and answers the
-    rest ``412 PreconditionFailed``, which maps to "lost the version
-    race, re-read the log and retry at v+1".
-
-    ``client`` is anything with boto3's
-    ``put_object(Bucket=, Key=, Body=, IfNoneMatch=) -> dict`` shape,
-    raising an error that carries ``.response["Error"]["Code"]`` on
-    failure (botocore's ClientError). Injected for tests (see
-    tests/test_txlog.py's FakeS3 race harness — this sandbox has no
-    network); default lazily constructs ``boto3.client("s3")``.
-
-    Two non-success codes are protocol, not errors:
-
-    - ``412 PreconditionFailed`` — the object exists: lost the race.
-    - ``409 ConditionalRequestConflict`` — S3 detected CONCURRENT
-      conditional writes of the same key and rejected this one
-      without deciding a winner; the documented client contract is
-      retry, after which the request resolves to success (we won) or
-      412 (someone else did). Bounded retries, then raise.
-
-    Opt in per scheme (never silently):
-    ``register_claimer("s3a", S3ConditionalPutClaimer())``."""
-
-    #: bounded retries for 409 ConditionalRequestConflict storms
-    MAX_CONFLICT_RETRIES = 8
-
-    def __init__(self, client=None):
-        self._client = client
-
-    def _c(self):
-        if self._client is None:
-            import boto3  # soft dep: only reached on a real S3 path
-
-            self._client = boto3.client("s3")
-        return self._client
-
-    def publish(self, spark, fs, final_path_str: str, payload: bytes) -> bool:
-        bucket, key = _split_object_uri(final_path_str)
-        for _ in range(self.MAX_CONFLICT_RETRIES):
-            try:
-                self._c().put_object(
-                    Bucket=bucket, Key=key, Body=payload, IfNoneMatch="*"
-                )
-                return True
-            except Exception as e:  # noqa: BLE001 — code-dispatch below
-                code = str(
-                    (getattr(e, "response", None) or {})
-                    .get("Error", {})
-                    .get("Code", "")
-                )
-                if code in ("PreconditionFailed", "412"):
-                    return False  # object exists: lost the race
-                if code in ("ConditionalRequestConflict", "409"):
-                    continue  # concurrent writers collided: retry
-                raise
-        raise RuntimeError(
-            f"S3 conditional PUT of {final_path_str} kept answering "
-            f"ConditionalRequestConflict after "
-            f"{self.MAX_CONFLICT_RETRIES} retries"
-        )
-
-
-class GcsGenerationMatchClaimer(CommitClaimer):
-    """GCS arm: upload with ``if_generation_match=0`` — generation 0
-    means "the object must not exist yet", GCS's native single-request
-    atomic put-if-absent (the JSON-API precondition the
-    google-cloud-storage client exposes on every upload method).
-    Exactly one of any number of racing publishers lands; the rest get
-    ``412 PreconditionFailed`` = lost the version race.
-
-    ``client`` is anything with google-cloud-storage's
-    ``bucket(name).blob(key).upload_from_string(payload,
-    if_generation_match=0)`` shape, raising an error whose ``code``
-    attribute (or class name) says 412/PreconditionFailed on loss —
-    injected for tests; default lazily constructs
-    ``google.cloud.storage.Client()``. Concurrent-write 429/503
-    backoff is the client library's own documented retry behavior, so
-    unlike S3's 409 there is no conflict loop here.
-
-    Opt in per scheme: ``register_claimer("gs",
-    GcsGenerationMatchClaimer())``."""
-
-    def __init__(self, client=None):
-        self._client = client
-
-    def _c(self):
-        if self._client is None:
-            from google.cloud import storage  # soft dep
-
-            self._client = storage.Client()
-        return self._client
-
-    def publish(self, spark, fs, final_path_str: str, payload: bytes) -> bool:
-        bucket, key = _split_object_uri(final_path_str)
-        try:
-            self._c().bucket(bucket).blob(key).upload_from_string(
-                payload, if_generation_match=0
-            )
-            return True
-        except Exception as e:  # noqa: BLE001 — code-dispatch below
-            code = getattr(e, "code", None)
-            if code == 412 or type(e).__name__ == "PreconditionFailed":
-                return False  # object exists: lost the race
-            raise
-
-
-class AbfsIfNoneMatchClaimer(CommitClaimer):
-    """Azure Blob / ADLS Gen2 arm: ``upload_blob(..., overwrite=False)``
-    — the azure-storage-blob client sends ``If-None-Match: *`` on Put
-    Blob, making the upload itself the atomic put-if-absent claim; a
-    loser gets ``ResourceExistsError`` (HTTP 409 BlobAlreadyExists,
-    which for Azure means "exists", not S3's retry-me conflict).
-
-    ``client`` is anything with BlobServiceClient's
-    ``get_blob_client(container=, blob=).upload_blob(data,
-    overwrite=False)`` shape — injected for tests; default lazily
-    constructs ``BlobServiceClient`` from the
-    ``AZURE_STORAGE_CONNECTION_STRING`` environment variable. Opt in:
-    ``register_claimer("abfss", AbfsIfNoneMatchClaimer())``."""
-
-    def __init__(self, client=None):
-        self._client = client
-
-    def _c(self):
-        if self._client is None:
-            import os
-
-            from azure.storage.blob import BlobServiceClient  # soft dep
-
-            self._client = BlobServiceClient.from_connection_string(
-                os.environ["AZURE_STORAGE_CONNECTION_STRING"]
-            )
-        return self._client
-
-    def publish(self, spark, fs, final_path_str: str, payload: bytes) -> bool:
-        container, key = _split_object_uri(final_path_str)
-        # abfss://container@account.dfs.core.windows.net/path → the
-        # authority carries "@account..."; the container is the part
-        # before the @ and the blob is the path
-        if "@" in container:
-            container = container.split("@", 1)[0]
-        try:
-            self._c().get_blob_client(
-                container=container, blob=key
-            ).upload_blob(payload, overwrite=False)
-            return True
-        except Exception as e:  # noqa: BLE001 — code-dispatch below
-            if (
-                type(e).__name__ == "ResourceExistsError"
-                or getattr(e, "status_code", None) == 409
-            ):
-                return False  # blob exists: lost the race
-            raise
-
-
-#: scheme -> claimer. Scheme-less paths are resolved through the
-#: Hadoop FileSystem object actually serving them (never assumed
-#: local: on a cluster whose fs.defaultFS is hdfs://, a scheme-less
-#: table path IS an HDFS path, and publishing via os.link on the
-#: driver's local disk would silently drop the commit).
-_CLAIMERS: dict = {
-    "file": HardLinkClaimer(),
-    "hdfs": HdfsRenameClaimer(),
-    "viewfs": HdfsRenameClaimer(),
-}
-
-#: object-store schemes where rename is copy+delete (neither atomic
-#: nor exclusive): refuse loudly until a put-if-absent claimer is
-#: registered, instead of silently dropping racing commits
-_RENAME_UNSAFE_SCHEMES = {"s3", "s3a", "s3n", "gs", "abfs", "abfss", "wasb", "oss"}
-
-
-def register_claimer(scheme: str, claimer: CommitClaimer) -> None:
-    """Install the commit-publish arm for a filesystem scheme (the
-    one-function object-store port: put-if-absent for s3a/gs/abfs).
-
-    Two arms ship here, both race-tested against in-memory stores
-    implementing the same semantics (no network in this sandbox):
-    ``register_claimer("s3a", S3ConditionalPutClaimer())``
-    (conditional PUT with ``If-None-Match: *``) and
-    ``register_claimer("gs", GcsGenerationMatchClaimer())``
-    (``if_generation_match=0``). An ABFS port sends
-    ``If-None-Match: *`` on Put Blob — the identical shape. All are
-    single-request atomic put-if-absent — no claim files, no rename,
-    nothing to vacuum on crash. Registration is deliberately explicit
-    (opt-in per deployment): a wrong-but-silent default on an object
-    store would drop racing commits."""
-    _CLAIMERS[scheme] = claimer
-
-
-def _claimer_for(path_str: str, fs=None) -> CommitClaimer:
-    scheme = None
-    if ":" in path_str.split("/", 1)[0]:
-        scheme = path_str.split(":", 1)[0]
-    if scheme is None and fs is not None:
-        # scheme-less path: dispatch on the filesystem ACTUALLY
-        # serving it (fs.defaultFS), not a local-disk assumption
-        scheme = fs.getUri().getScheme() or "file"
-    if scheme is None:
-        scheme = "file"  # no fs handle: direct local-path use (tests)
-    if scheme in _CLAIMERS:
-        return _CLAIMERS[scheme]
-    if scheme in _RENAME_UNSAFE_SCHEMES:
-        raise NotImplementedError(
-            f"scheme {scheme!r} has copy+delete rename semantics; register "
-            "a put-if-absent CommitClaimer for it (register_claimer) — "
-            "see the protocol note at the top of this module"
-        )
-    return _CLAIMERS["hdfs"]  # no-replace-rename FS family default
-
-
-def _write_atomic(spark, fs, final_path_str: str, payload: bytes) -> bool:
-    """Publish a commit file; False = lost the version race. Atomicity
-    is delegated to the scheme's :class:`CommitClaimer`."""
-    return _claimer_for(final_path_str, fs).publish(
-        spark, fs, final_path_str, payload
-    )
-
-
-def _list_commits(spark, path: str) -> list[tuple[int, str]]:
-    """Sorted [(version, kind)] where kind is 'commit' or 'checkpoint'."""
-    fs, logp = hadoop_fs(spark, f"{path}/_txlog")
-    if not fs.exists(logp):
-        return []
-    out = []
-    for st in fs.listStatus(logp):
-        name = st.getPath().getName()
-        if name.endswith(".checkpoint.json"):
-            out.append((int(name.split(".")[0]), "checkpoint"))
-        elif name.endswith(".json") and not name.endswith(".tmp"):
-            try:
-                out.append((int(name.split(".")[0]), "commit"))
-            except ValueError:
-                continue
-    return sorted(out)
-
-
-def _load(spark, path: str, name: str) -> dict:
-    fs, p = hadoop_fs(spark, f"{path}/_txlog/{name}")
-    return json.loads(_read_small(spark, fs, p).decode("utf-8"))
-
-
-# --- multi-table transaction resolution (see sources/multitx.py) ---------
-#
-# A commit carrying {"multi": {"coordinator", "txid"}} is PROVISIONAL:
-# it applies to the snapshot only once the coordinator record
-# <coordinator>/_multitx/<txid>.json exists and is not an abort
-# tombstone. Commit and abort race put-if-absent on that ONE filename,
-# so the scheme's CommitClaimer arbitrates and the transaction resolves
-# atomically for every participant table at once.
-
-#: terminal resolutions only ((coordinator, txid) -> committed|aborted);
-#: 'pending' is never cached — it can still flip either way
-_MULTI_CACHE: dict = {}
-
-
-def _multi_record_path(coordinator: str, txid: str) -> str:
-    return f"{coordinator}/_multitx/{txid}.json"
-
-
-def _multi_status(spark, coordinator: str, txid: str) -> str:
-    """'committed' | 'aborted' | 'pending' for a multi-table txn."""
-    key = (coordinator, txid)
-    if key in _MULTI_CACHE:
-        return _MULTI_CACHE[key]
-    fs, p = hadoop_fs(spark, _multi_record_path(coordinator, txid))
-    if not fs.exists(p):
-        return "pending"
-    rec = json.loads(_read_small(spark, fs, p).decode("utf-8"))
-    status = "aborted" if rec.get("aborted") else "committed"
-    _MULTI_CACHE[key] = status
-    return status
-
-
-def _has_pending_multi(spark, path: str, version: int) -> bool:
-    """Any provisional multi-txn commit ≤ version still unresolved?"""
-    for v, kind in _list_commits(spark, path):
-        if kind != "commit" or v > version:
-            continue
-        m = _load(spark, path, f"{v:0{_PAD}d}.json").get("multi")
-        if m and _multi_status(spark, m["coordinator"], m["txid"]) == "pending":
-            return True
-    return False
-
-
-def _pending_multi_adds(spark, path: str) -> list[str]:
-    """Data files added by still-PENDING multi-txn commits — invisible
-    to snapshots, but must survive vacuum: the transaction may yet
-    resolve committed."""
-    out: list[str] = []
-    for v, kind in _list_commits(spark, path):
-        if kind != "commit":
-            continue
-        c = _load(spark, path, f"{v:0{_PAD}d}.json")
-        m = c.get("multi")
-        if m and _multi_status(spark, m["coordinator"], m["txid"]) == "pending":
-            out.extend(c.get("add", []))
-    return out
-
-
-def _check_reader(record: dict, path: str, version: int) -> None:
-    """Refuse to replay a commit/checkpoint stamped with a feature
-    level above what this build understands (see READER_VERSION)."""
-    needs = record.get("reader", 1)
-    if needs > READER_VERSION:
-        raise RuntimeError(
-            f"version {version} of the table at {path} requires reader "
-            f"version {needs}; this build supports {READER_VERSION} — "
-            "reading anyway could silently misinterpret the log"
-        )
-
-
-@dataclasses.dataclass
-class _Snapshot:
-    """Everything ONE log replay establishes about a table as of a
-    version — live files, tombstones, schema, properties, stats, txn
-    ids, partitioning. Folding all of it in a single pass is the
-    metadata-I/O contract at scale: a read costs one checkpoint + the
-    commits above it, never a second replay per concern (the round-10
-    shape paid one replay for eps/mor plus another for schema and a
-    third for properties on every rewrite)."""
-
-    #: live data file -> version that ADDED it (the epoch that scopes
-    #: merge-on-read tombstones, Iceberg's data-sequence-number rule)
-    eps: dict
-    #: live merge-on-read tombstones {"version","col","files"}, commit order
-    mor: list
-    #: live positional deletion vectors {"version","files","targets"},
-    #: commit order — files are _dv/ sidecars of (_file, _pos) pairs,
-    #: targets the data files they apply to (DVs pin to exact files,
-    #: so unlike mor they need no epoch scoping)
-    dv: list
-    #: bloom-filter sidecar refs {"version","files","cols"} — pure
-    #: read OPTIMIZATION (a missing/ignored bloom only costs skipping,
-    #: never correctness), so no reader stamp or writer feature guards
-    blooms: list
-    #: effective version of this snapshot
-    version: int
-    #: latest recorded write-schema json (None = pre-schema-recording)
-    schema: "str | None"
-    #: True = live files span >1 write schema (reads need footer merge)
-    evolved: bool
-    #: folded table properties (meta-commit deltas, overwrites keep them)
-    properties: dict
-    #: hive-style partition columns of the live layout (None = unpartitioned)
-    partition_by: "list[str] | None"
-    #: file -> {col: [lo, hi]} folded from checkpoint + commits (may
-    #: include dead files; callers filter by eps when it matters)
-    stats: dict
-    #: idempotence txn id -> version that committed it
-    txns: dict
-    #: ROW TRACKING (the Delta row-tracking shape): file -> base row
-    #: id, where a row's stable id is ``base + row_index`` — or the
-    #: sentinel -1 meaning the file MATERIALIZES ``_row_id`` as a
-    #: column (preserving rewrites: compact/zorder/apply_deletes).
-    #: Empty until tx_enable_row_tracking; folded like stats
-    row_bases: dict = dataclasses.field(default_factory=dict)
-    #: PARTITION-SPEC LINEAGE (Iceberg's spec-id registry, round 14):
-    #: one entry per spec CHANGE, in commit order —
-    #: ``{"spec_id": n, "partition_by": [...] | None, "version": v}``.
-    #: Derived during the fold and persisted in checkpoints, so the
-    #: registry survives log truncation; empty = never partitioned
-    spec_history: list = dataclasses.field(default_factory=list)
-
-
-def _replay(spark, path: str, version: int | None = None) -> _Snapshot:
-    """Replay commits 0..version (from the newest checkpoint at/below
-    ``version`` when one exists) into a full :class:`_Snapshot`.
-
-    Folding rules, per commit (after multi-table visibility):
-
-    - files: ``overwrite`` resets eps+mor (whole-table replacement
-      obsoletes pending tombstones too); removes then adds apply; a
-      tombstone at version v applies to exactly the files with
-      ``eps[f] < v`` — rows appended AFTER a delete are never its
-      targets.
-    - schema: overwrites RESET it (their file set is homogeneous);
-      schema-carrying appends union-by-name and set ``evolved`` when
-      the field set actually changed, so reads know to merge footers.
-    - properties: key-deltas merge in version order; ``None`` unsets;
-      overwrites do NOT reset them (properties belong to the table,
-      not a snapshot).
-    - partition_by: overwrites reset it to their own (or None);
-      appends carrying one adopt it (writers enforce consistency).
-    - stats / txns: first writer wins (``setdefault``) — both are
-      folded into checkpoints so they survive log truncation.
-
-    Txn ids fold BEFORE the visibility check (a pending or aborted
-    multi-table commit still owns its idempotence key — a retry must
-    not double-commit while the coordinator is undecided)."""
-    commits = _list_commits(spark, path)
-    versions = sorted({v for v, _ in commits})
-    if not versions:
-        raise FileNotFoundError(f"no transactional table at {path}")
-    if version is None:
-        version = versions[-1]
-    if version not in versions:
-        raise ValueError(
-            f"version {version} does not exist at {path} "
-            f"(have {versions[0]}..{versions[-1]})"
-        )
-    ckpts = [v for v, kind in commits if kind == "checkpoint" and v <= version]
-    s = _Snapshot(
-        eps={}, mor=[], dv=[], blooms=[], version=version, schema=None,
-        evolved=False, properties={}, partition_by=None, stats={},
-        txns={},
-    )
-    start = 0
-    if ckpts:
-        ck = _load(spark, path, f"{ckpts[-1]:0{_PAD}d}.checkpoint.json")
-        _check_reader(ck, path, ckpts[-1])
-        # pre-eps checkpoints default every folded file to the
-        # checkpoint version: safe, because such checkpoints cannot
-        # carry live tombstones (mor absent too) and any FUTURE
-        # tombstone v > ckpt applies to all of them regardless
-        s.eps = dict(ck.get("eps") or {f: ckpts[-1] for f in ck["files"]})
-        s.mor = list(ck.get("mor") or [])
-        s.dv = list(ck.get("dv") or [])
-        s.blooms = list(ck.get("blooms") or [])
-        s.schema = ck.get("schema")
-        s.evolved = bool(ck.get("schema_evolved"))
-        s.properties = dict(ck.get("properties") or {})
-        s.partition_by = ck.get("partition_by")
-        s.stats = dict(ck.get("stats") or {})
-        s.txns = dict(ck.get("txns") or {})
-        s.row_bases = dict(ck.get("row_bases") or {})
-        s.spec_history = list(
-            ck.get("spec_history")
-            or (
-                # legacy checkpoint: pre-truncation lineage is gone;
-                # seed with the folded spec as entry 0 so ids stay
-                # monotonic from here on. Stamped at version 0, not
-                # the checkpoint version (ADVICE r14): the folded spec
-                # applied to every pre-checkpoint add too, so
-                # tx_files' spec_at must resolve those files to spec
-                # 0 instead of NULL
-                [{
-                    "spec_id": 0,
-                    "partition_by": ck["partition_by"],
-                    "version": 0,
-                }]
-                if ck.get("partition_by") is not None
-                else []
-            )
-        )
-        start = ckpts[-1] + 1
-    commit_versions = [v for v, kind in commits if kind == "commit"]
-    for v in commit_versions:
-        if v < start or v > version:
-            continue
-        c = _load(spark, path, f"{v:0{_PAD}d}.json")
-        _check_reader(c, path, v)
-        if c.get("txn"):
-            s.txns.setdefault(c["txn"], v)
-        for f, st in (c.get("stats") or {}).items():
-            s.stats.setdefault(f, st)
-        for f, b in (c.get("row_bases") or {}).items():
-            s.row_bases.setdefault(f, b)
-        m = c.get("multi")
-        if m is not None and (
-            _multi_status(spark, m["coordinator"], m["txid"]) != "committed"
-        ):
-            # provisional multi-table commit: pending or aborted →
-            # invisible (it becomes visible atomically, for every
-            # participant table, when the coordinator record lands)
-            continue
-        if c.get("properties") is not None:
-            for k, val in c["properties"].items():
-                if val is None:
-                    s.properties.pop(k, None)
-                elif k == "writer.features":
-                    # union-merge, not last-write-wins: two concurrent
-                    # writers auto-stamping DIFFERENT features (one
-                    # 'cdf', one 'partitioning') each computed their
-                    # delta from the same pre-commit snapshot; a LWW
-                    # fold would let the later commit silently
-                    # un-require the earlier one's feature. Features
-                    # are monotonic (Delta's rule); dropping them all
-                    # takes an explicit unset (val None).
-                    have = set(s.properties.get(k) or [])
-                    s.properties[k] = sorted(have | set(val))
-                else:
-                    s.properties[k] = val
-        if c["action"] == "overwrite":
-            s.eps = {}
-            s.mor = []
-            s.dv = []
-            s.blooms = []
-            s.schema = c.get("schema")
-            s.evolved = False
-            s.partition_by = c.get("partition_by")
-        else:
-            if c.get("schema_replace") is not None:
-                # rename/drop meta commit: the logical schema is
-                # REPLACED wholesale (never unioned — union-by-name is
-                # for evolution appends); physical names inside the
-                # field metadata keep every existing file readable
-                s.schema = c["schema_replace"]
-            sc = c.get("schema")
-            if sc is not None:
-                if s.schema is not None and _schema_fields(
-                    sc
-                ) != _schema_fields(s.schema):
-                    s.evolved = True
-                    # union by name: existing fields keep their slot,
-                    # new ones append — the merged shape parquet
-                    # mergeSchema produces
-                    merged = json.loads(s.schema)
-                    have = {f["name"] for f in merged["fields"]}
-                    for f in json.loads(sc)["fields"]:
-                        if f["name"] not in have:
-                            merged["fields"].append(f)
-                    s.schema = json.dumps(merged)
-                elif s.schema is None:
-                    s.schema = sc
-            if c.get("partition_by") is not None:
-                s.partition_by = c["partition_by"]
-        # partition-spec lineage: one registry entry per CHANGE (set,
-        # evolve, un-partition, overwrite/restore reset) — spec ids
-        # are ordinal in commit order, Iceberg's spec-id model
-        prev_pb = (
-            s.spec_history[-1]["partition_by"] if s.spec_history else None
-        )
-        if (s.partition_by or None) != (prev_pb or None):
-            s.spec_history.append(
-                {
-                    "spec_id": len(s.spec_history),
-                    "partition_by": s.partition_by,
-                    "version": v,
-                }
-            )
-        for f in c.get("remove", []):
-            s.eps.pop(f, None)
-        for f in c.get("add", []):
-            s.eps[f] = v
-        if c.get("mor"):
-            s.mor.append(
-                {"version": v, "col": c["mor"]["col"], "files": c["mor"]["files"]}
-            )
-        if c.get("mor_clears"):
-            cleared = set(c["mor_clears"])
-            s.mor = [t for t in s.mor if t["version"] not in cleared]
-        if c.get("dv"):
-            s.dv.append(
-                {
-                    "version": v,
-                    "files": c["dv"]["files"],
-                    "targets": c["dv"]["targets"],
-                }
-            )
-        if c.get("dv_clears"):
-            cleared = set(c["dv_clears"])
-            s.dv = [d for d in s.dv if d["version"] not in cleared]
-        if c.get("blooms"):
-            s.blooms.append(
-                {
-                    "version": v,
-                    "files": c["blooms"]["files"],
-                    "cols": c["blooms"]["cols"],
-                }
-            )
-    return s
-
-
-def _snapshot_state(
-    spark, path: str, version: int | None = None
-) -> tuple[dict, list, int]:
-    """``(eps, mor, effective version)`` — thin view over
-    :func:`_replay` kept for the many call sites that only need the
-    file-level snapshot."""
-    s = _replay(spark, path, version)
-    return s.eps, s.mor, s.version
-
-
 def _snapshot_files(
     spark, path: str, version: int | None = None
 ) -> tuple[list[str], int]:
     """(live data files, effective version) by replaying the log —
     from the newest checkpoint at/below ``version`` when one exists.
     NOTE: file-level only; callers that READ rows must honor live
-    merge-on-read tombstones (see :func:`_snapshot_state` /
-    :func:`_require_no_mor`)."""
-    eps, _, version = _snapshot_state(spark, path, version)
-    return sorted(eps), version
+    merge-on-read tombstones (see :func:`_refuse_mor`)."""
+    s = _replay(spark, path, version)
+    return sorted(s.eps), s.version
 
 
 def _refuse_mor(snap: "_Snapshot", path: str, op: str) -> None:
@@ -886,38 +233,6 @@ def _refuse_mor(snap: "_Snapshot", path: str, op: str) -> None:
             f"{op} on {path} with live deletion vectors "
             f"(versions {vs}); run tx_apply_deletes first"
         )
-
-
-def _require_no_mor(spark, path: str, op: str, version: int | None = None):
-    """:func:`_refuse_mor` behind its own replay — for call sites that
-    don't already hold a :class:`_Snapshot`."""
-    _refuse_mor(_replay(spark, path, version), path, op)
-
-
-def _schema_fields(schema_json: str) -> dict:
-    """{field name: type json} from a StructType json string —
-    nullability and metadata deliberately ignored (parquet readers
-    reconcile those; name/type is what decides data loss)."""
-    import json as _json
-
-    return {
-        f["name"]: _json.dumps(f["type"], sort_keys=True)
-        for f in _json.loads(schema_json).get("fields", [])
-    }
-
-
-def _live_schema_info(
-    spark, path: str, version: int | None = None
-) -> "tuple[str | None, bool]":
-    """(latest recorded schema json | None, evolved) — thin view over
-    :func:`_replay`. ``evolved=True`` means live files were written
-    under more than one schema, so a correct read needs parquet
-    footer merging (:func:`tx_read` turns it on automatically, and
-    every rewrite path reads touched files the same way). ``None`` =
-    the table predates schema recording; enforcement is impossible and
-    reads keep their historical behavior."""
-    s = _replay(spark, path, version)
-    return s.schema, s.evolved
 
 
 def _check_append_schema(
@@ -998,7 +313,6 @@ def tx_set_properties(
     back)."""
     snap = _replay(spark, path)  # table must exist; anchors versioning
     _check_writer_features(snap.properties, path)
-    fs = hadoop_fs(spark, path)[0]
 
     def build(next_v: int) -> dict:
         return {
@@ -1010,7 +324,7 @@ def tx_set_properties(
             "properties": dict(props),
         }
 
-    return _commit_with_retries(spark, path, fs, build, txn, max_retries)
+    return _commit(spark, path, build, txn, max_retries)
 
 
 def tx_properties(
@@ -1098,7 +412,6 @@ def tx_set_partitioning(
     if has_transforms:
         used.add("partition-transforms")
     delta = _writer_feature_delta(snap.properties, used)
-    fs = hadoop_fs(spark, path)[0]
 
     def build(next_v: int) -> dict:
         payload = {
@@ -1115,7 +428,7 @@ def tx_set_partitioning(
             payload["properties"] = delta
         return payload
 
-    return _commit_with_retries(spark, path, fs, build, None, max_retries)
+    return _commit(spark, path, build, None, max_retries)
 
 
 def tx_constraints(spark: SparkSession, path: str) -> "dict[str, str]":
@@ -1313,55 +626,6 @@ def _cdf_props_default(props: dict) -> bool:
     if isinstance(val, str):
         return val.strip().lower() not in ("false", "0", "no")
     return bool(val)
-
-
-def _cdf_default(spark, path: str) -> bool:
-    """:func:`_cdf_props_default` behind its own replay."""
-    try:
-        return _cdf_props_default(_replay(spark, path).properties)
-    except FileNotFoundError:
-        return True
-
-
-def _zorder_marks(spark, path: str, eps: dict, version: int) -> dict:
-    """{live file: clustering spec} — which live files were PRODUCED
-    by a zorder rewrite, and under what spec. Folds through
-    checkpoints (the marks must survive log truncation, or the next
-    incremental OPTIMIZE would re-cluster the whole table); a file
-    rewritten by any later commit gets a fresh uuid name, so stale
-    marks drop out via the ``f in eps`` / ``eps[f] == v`` guards."""
-    commits = _list_commits(spark, path)
-    marks: dict = {}
-    ckpts = [v for v, k in commits if k == "checkpoint" and v <= version]
-    start = 0
-    if ckpts:
-        ck = _load(spark, path, f"{ckpts[-1]:0{_PAD}d}.checkpoint.json")
-        marks = {
-            f: s for f, s in (ck.get("zmarks") or {}).items() if f in eps
-        }
-        start = ckpts[-1] + 1
-    for v, kind in commits:
-        if kind != "commit" or v < start or v > version:
-            continue
-        c = _load(spark, path, f"{v:0{_PAD}d}.json")
-        spec = c.get("zorder")
-        if spec:
-            for f in c.get("add", []):
-                if eps.get(f) == v:
-                    marks[f] = spec
-    return marks
-
-
-def _committed_txns(spark, path: str) -> dict[str, int]:
-    """txn id -> version that committed it (idempotent-retry dedup).
-    The log entries stay until tx_vacuum truncates — vacuum keeps this
-    map by folding retained txns into the checkpoint. {} when the
-    table doesn't exist yet (a first tx_write consults this)."""
-    try:
-        return _replay(spark, path).txns
-    except FileNotFoundError:
-        return {}
-
 
 
 # --- hidden partitioning (Iceberg's partition transforms) -------------------
@@ -1731,7 +995,6 @@ def _mapping_commit(
     the mapping) and reader level 3 (an old reader would surface
     physical names)."""
     delta = _writer_feature_delta(snap.properties, {"column-mapping"})
-    fs = hadoop_fs(spark, path)[0]
 
     def build(next_v: int) -> dict:
         payload = {
@@ -1747,7 +1010,7 @@ def _mapping_commit(
             payload["properties"] = delta
         return payload
 
-    return _commit_with_retries(spark, path, fs, build, None, max_retries)
+    return _commit(spark, path, build, None, max_retries)
 
 
 def _mapping_prereqs(spark, path: str, op: str) -> "_Snapshot":
@@ -2405,19 +1668,10 @@ def _bloom_prune(
 
 
 def _log_stats(spark, path: str) -> dict[str, dict[str, list]]:
-    """file -> {col: [lo, hi]} folded from checkpoints + commits.
-    Files written without ``stats_cols`` simply have no entry (callers
-    must treat absence as cannot-prune)."""
-    out: dict[str, dict[str, list]] = {}
-    for v, kind in _list_commits(spark, path):
-        name = (
-            f"{v:0{_PAD}d}.checkpoint.json"
-            if kind == "checkpoint"
-            else f"{v:0{_PAD}d}.json"
-        )
-        for f, st in (_load(spark, path, name).get("stats") or {}).items():
-            out.setdefault(f, st)
-    return out
+    """file -> {col: [lo, hi]} as :func:`_replay` folds them. Files
+    written without ``stats_cols`` simply have no entry (callers must
+    treat absence as cannot-prune)."""
+    return _replay(spark, path).stats
 
 
 def tx_write(
@@ -2650,7 +1904,6 @@ def tx_write(
             ),
             "cols": phys_b,
         }
-    fs = hadoop_fs(spark, path)[0]
     # row tracking: every commit on a tracked table records a row-id
     # base per added file (ids are version-scoped, so the bases are
     # recomputed per commit attempt inside build())
@@ -2758,65 +2011,9 @@ def tx_write(
                         "re-run the append"
                     )
 
-    return _commit_with_retries(
-        spark, path, fs, build, txn, max_retries,
+    return _commit(
+        spark, path, build, txn, max_retries,
         revalidate=revalidate, checked_at=checked_at,
-    )
-
-
-def _commit_with_retries(
-    spark,
-    path: str,
-    fs,
-    build_payload,
-    txn: str | None,
-    max_retries: int,
-    revalidate=None,
-    checked_at: "int | None" = None,
-) -> int:
-    """Optimistic commit loop shared by tx_write and tx_multi:
-    ``build_payload(next_v) -> dict`` is called fresh per attempt;
-    returns the committed version.
-
-    ``revalidate`` re-runs the caller's pre-stage invariant checks
-    (schema-on-write, partition-layout consistency) whenever the log
-    has advanced past ``checked_at`` — the version those checks were
-    anchored at — so a commit that lands during the version race can
-    never invalidate them unseen (the commit-time metadata conflict
-    re-check Delta does; mirrors _commit_rewrite's still-live /
-    conflict_keys re-checks per attempt)."""
-    anchor = -1 if checked_at is None else checked_at
-    for _ in range(max_retries):
-        if txn is not None and (
-            prior := _committed_txns(spark, path).get(txn)
-        ) is not None:
-            # a concurrent retry of the SAME txn won the race; our
-            # staged files are orphans until tx_vacuum
-            return prior
-        # max over commits AND checkpoints: after tx_vacuum truncates
-        # the log, the surviving checkpoint still pins the version
-        # counter (restarting at 0 would order new commits BEFORE it)
-        versions = [v for v, _ in _list_commits(spark, path)]
-        next_v = (max(versions) + 1) if versions else 0
-        if revalidate is not None and versions and max(versions) > anchor:
-            revalidate()
-            anchor = max(versions)
-        payload = build_payload(next_v)
-        # wall-clock commit stamp: feeds time-based vacuum retention
-        # (and operator forensics); correctness never depends on it
-        payload.setdefault("ts", _now())
-        if _write_atomic(
-            spark,
-            fs,
-            f"{path}/_txlog/{next_v:0{_PAD}d}.json",
-            json.dumps(payload).encode(),
-        ):
-            if (next_v + 1) % CHECKPOINT_EVERY == 0:
-                _write_checkpoint(spark, path, next_v)
-            return next_v
-        # lost the race to another writer — re-read the log, retry
-    raise RuntimeError(
-        f"could not commit to {path} after {max_retries} version races"
     )
 
 
@@ -2873,7 +2070,7 @@ def _write_checkpoint(spark, path: str, version: int) -> bool:
     transaction as absent, and a later coordinator publish would then
     never surface its files. Checkpoints are an optimization; skipping
     is always safe."""
-    if _has_pending_multi(spark, path, version):
+    if _pending_multi(spark, path, version):
         return False
     snap = _replay(spark, path, version)
     eps, mor = snap.eps, snap.mor
@@ -2918,7 +2115,7 @@ def _write_checkpoint(spark, path: str, version: int) -> bool:
         ):
             # hidden placement dirs outlive log truncation too
             payload["reader"] = max(payload.get("reader", 1), 3)
-    zmarks = _zorder_marks(spark, path, eps, version)
+    zmarks = snap.zmarks
     if zmarks:
         # which live files are already clustered (and how): incremental
         # OPTIMIZE must not re-cluster the table after truncation
@@ -2966,17 +2163,17 @@ def _write_checkpoint(spark, path: str, version: int) -> bool:
     return True
 
 
-def _version_at_ts(spark, path: str, ts: float) -> int:
+def _version_at_ts(spark, path: str, ts: float) -> "int | None":
     """The newest version committed at/before wall-clock ``ts`` — it
     was the live snapshot at that instant (timestamp time travel,
-    Delta's ``TIMESTAMP AS OF``). Uses the ``ts`` stamps the commits
-    themselves carry (the same source of truth as ``tx_vacuum
-    retain_hours``): commits predating stamping count as older than
-    every stamped one; checkpoint-only versions (their commit
-    truncated by vacuum) predate every surviving commit. Refuses on
-    NON-MONOTONIC stamps (writer clock skew) exactly as vacuum does —
-    the time→version map is ambiguous and guessing could read the
-    wrong snapshot silently. Raises when ``ts`` predates the table."""
+    Delta's ``TIMESTAMP AS OF``, and vacuum's ``retain_hours`` pivot);
+    None when ``ts`` predates every version. Uses the ``ts`` stamps
+    the commits themselves carry: commits predating stamping count as
+    older than every stamped one; checkpoint-only versions (their
+    commit truncated by vacuum) predate every surviving commit.
+    Refuses on NON-MONOTONIC stamps (writer clock skew) — the
+    time→version map is ambiguous and guessing could read the wrong
+    snapshot, or vacuum a retained one, silently."""
     commits = _list_commits(spark, path)
     all_versions = sorted({v for v, _ in commits})
     if not all_versions:
@@ -2992,17 +2189,13 @@ def _version_at_ts(spark, path: str, ts: float) -> int:
             raise ValueError(
                 f"commit timestamps at {path} are non-monotonic around "
                 f"version {v2} (writer clock skew); the time→version "
-                "map is ambiguous — travel by version= instead"
+                "map is ambiguous — address versions instead (version=, "
+                "retain_last)"
             )
     commit_vs = {v for v, _ in stamps}
     at_or_before = [v for v, t in stamps if t is None or t <= ts]
     at_or_before += [v for v in all_versions if v not in commit_vs]
-    if not at_or_before:
-        raise ValueError(
-            f"no version of {path} existed at timestamp {ts} (first "
-            f"stamped commit is newer)"
-        )
-    return max(at_or_before)
+    return max(at_or_before, default=None)
 
 
 def _resolve_version(
@@ -3014,7 +2207,13 @@ def _resolve_version(
         return version
     if version is not None:
         raise ValueError("pass version= or as_of_ts=, not both")
-    return _version_at_ts(spark, path, as_of_ts)
+    version = _version_at_ts(spark, path, as_of_ts)
+    if version is None:
+        raise ValueError(
+            f"no version of {path} existed at timestamp {as_of_ts} "
+            "(first stamped commit is newer)"
+        )
+    return version
 
 
 def _prunable(file_stats: dict, conjuncts: "list[tuple]") -> bool:
@@ -3668,10 +2867,7 @@ def tx_history(spark: SparkSession, path: str) -> list[dict]:
     """All commits, oldest first (metadata only — version, action,
     file counts, txn)."""
     out = []
-    for v, kind in _list_commits(spark, path):
-        if kind != "commit":
-            continue
-        c = _load(spark, path, f"{v:0{_PAD}d}.json")
+    for v, c in _commits(spark, path):
         entry = {
             "version": v,
             "action": c["action"],
@@ -3775,34 +2971,15 @@ def tx_vacuum(
     all_versions = sorted({v for v, _ in commits})
     if not all_versions:
         raise FileNotFoundError(f"no transactional table at {path}")
-    latest = all_versions[-1]
     keep_from = max(0, len(all_versions) - 1 - max(0, retain_last))
     if retain_hours is not None:
-        cutoff = _now() - 3600.0 * retain_hours
-        stamps = [
-            (v, _load(spark, path, f"{v:0{_PAD}d}.json").get("ts"))
-            for v, kind in commits
-            if kind == "commit"
-        ]
-        known = [(v, ts) for v, ts in stamps if ts is not None]
-        for (_, t1), (v2, t2) in zip(known, known[1:]):
-            if t2 < t1:
-                raise ValueError(
-                    f"commit timestamps at {path} are non-monotonic "
-                    f"around version {v2} (writer clock skew); the "
-                    "time-based retention pivot is ambiguous — vacuum "
-                    "with retain_last instead"
-                )
-        # newest version committed at/before the window's left edge:
-        # it was the live snapshot when the window opened. ts-less
-        # commits predate stamping; checkpoint-only versions (their
-        # commit truncated by an earlier vacuum) predate every
-        # surviving commit — both count as at/before the edge, which
-        # only ever retains MORE.
-        commit_vs = {s[0] for s in stamps}
-        at_or_before = [v for v, ts in stamps if ts is None or ts <= cutoff]
-        at_or_before += [v for v in all_versions if v not in commit_vs]
-        time_pivot = max(at_or_before) if at_or_before else all_versions[0]
+        # the version live when the window opened; a window older
+        # than the table retains everything
+        time_pivot = _version_at_ts(
+            spark, path, _now() - 3600.0 * retain_hours
+        )
+        if time_pivot is None:
+            time_pivot = all_versions[0]
         keep_from = min(keep_from, all_versions.index(time_pivot))
     pivot = all_versions[keep_from]
     retained = all_versions[keep_from:]
@@ -3829,7 +3006,10 @@ def tx_vacuum(
     # where a successful pivot checkpoint says nothing about it.
     folded = _write_checkpoint(spark, path, pivot)
     fs = hadoop_fs(spark, path)[0]
-    live |= {_abs(path, f) for f in _pending_multi_adds(spark, path)}
+    live |= {
+        _abs(path, f)
+        for _, c in _pending_multi(spark, path) for f in c.get("add", [])
+    }
 
     def _in_grace(hpath) -> bool:
         # real wall clock on purpose (not the _now test seam): the
@@ -3913,10 +3093,7 @@ def tx_vacuum(
     # of crashed rewrites that never committed — are debris. Re-list
     # after truncation so the survivors decide.
     live_cdf: set = set()
-    for v, kind in _list_commits(spark, path):
-        if kind != "commit":
-            continue
-        c = _load(spark, path, f"{v:0{_PAD}d}.json")
+    for _, c in _commits(spark, path):
         for f in (c.get("cdf") or {}).get("files", []):
             live_cdf.add(_abs(path, f))
     cfs, cdir = hadoop_fs(spark, f"{path}/_cdf")
@@ -4039,20 +3216,19 @@ def _files_overlapping_keys(
     lo,
     hi,
     key_col: str,
-    snap: "_Snapshot | None" = None,
+    snap: "_Snapshot",
 ) -> list[str]:
     """The files a key-targeted rewrite must touch: range-prune against
     the COMMIT-LOG stats when the writer recorded them (zero I/O),
     parquet footers otherwise (~KB metadata read per file); a file with
-    neither yields to correctness and is rewritten. Callers holding a
-    :class:`_Snapshot` pass it so its already-folded stats serve the
-    pruning without a second log replay."""
+    neither yields to correctness and is rewritten. The stats come
+    from ``snap``'s fold."""
     if lo is None or hi is None:
         # empty keys/updates frame: nothing can overlap — callers then
         # take their empty-commit path instead of comparing None
         # against file stats
         return []
-    logged = snap.stats if snap is not None else _log_stats(spark, path)
+    logged = snap.stats
     touched = []
     for f in files:
         st = (logged.get(f) or {}).get(key_col)
@@ -4258,13 +3434,18 @@ def tx_merge(
     else:
         prep = _prepare_merge(spark, path, updates, key_col, cdf, snap)
         reval = prep["revalidate"]
-
-    return _commit_rewrite(
-        spark, path, prep["added"], prep["touched"], prep["snap_version"],
-        txn, "merge", stats=prep["stats"], blooms=prep["blooms"],
-        conflict_keys=prep["conflict_keys"], extra=prep["extra"],
-        revalidate=reval, planned_rt=prep["planned_rt"],
-    )
+    try:
+        return _commit_rewrite(
+            spark, path, prep["added"], prep["touched"],
+            prep["snap_version"], txn, "merge", stats=prep["stats"],
+            blooms=prep["blooms"], conflict_keys=prep["conflict_keys"],
+            extra=prep["extra"], revalidate=reval,
+            planned_rt=prep["planned_rt"],
+        )
+    finally:
+        # the prepare's eager source checkpoint (its revalidation reads
+        # it until the commit is decided)
+        _release(prep["held"])
 
 
 def _prepare_merge(
@@ -4425,6 +3606,7 @@ def _prepare_merge(
         "extra": extra,
         "revalidate": revalidate,
         "planned_rt": rt,
+        "held": updates,
     }
 
 
@@ -4806,6 +3988,7 @@ def _prepare_merge_into(
         "extra": extra,
         "revalidate": revalidate,
         "planned_rt": rt,
+        "held": source,
     }
 
 
@@ -4817,6 +4000,7 @@ def _concurrent_append_conflicts(
     lo,
     hi,
     our_added: set,
+    logged: dict,
 ) -> list[str]:
     """Files ADDED by commits after ``snap_version`` that may carry
     keys in [lo, hi] — Delta's ConcurrentAppendException condition: a
@@ -4833,13 +4017,10 @@ def _concurrent_append_conflicts(
     to the snapshot this rewrite planned on, but the coordinator
     record makes them visible retroactively at their own version — a
     key-overlapping pending add that resolved after we committed
-    would duplicate merged keys exactly like a post-anchor append."""
-    logged = _log_stats(spark, path)
+    would duplicate merged keys exactly like a post-anchor append.
+    ``logged`` is the commit-time snapshot's folded stats."""
     conflicts = []
-    for v, kind in _list_commits(spark, path):
-        if kind != "commit":
-            continue
-        c = _load(spark, path, f"{v:0{_PAD}d}.json")
+    for v, c in _commits(spark, path):
         if v <= snap_version:
             m = c.get("multi")
             if not m or _multi_status(
@@ -4919,7 +4100,6 @@ def _commit_rewrite(
     while the merge was in flight is enforced on that merge's rows
     instead of slipping past the add-time validation (which only saw
     the pre-merge table)."""
-    fs = hadoop_fs(spark, path)[0]
     anchor = snap_version
     rt_counts: "dict | None" = None
     # row-tracking state the caller PLANNED under: a preserving
@@ -4936,7 +4116,9 @@ def _commit_rewrite(
         planned_rt = _row_tracking_on(
             _replay(spark, path, snap_version).properties
         )
-    for _ in range(max_retries):
+
+    def build(next_v: int) -> dict:
+        nonlocal anchor, rt_counts
         snap_now = _replay(spark, path)
         eps_now, mor_now = snap_now.eps, snap_now.mor
         if snap_now.version > anchor:
@@ -4965,26 +4147,18 @@ def _commit_rewrite(
         # resurrect rows the pending transaction rewrote (or vice
         # versa) the instant it resolves. Overlap = hard conflict;
         # the operator resolves it (wait, or tx_multi_abort).
-        if removed:
-            for v, kind in _list_commits(spark, path):
-                if kind != "commit":
-                    continue
-                c = _load(spark, path, f"{v:0{_PAD}d}.json")
-                m = c.get("multi")
-                if not m or _multi_status(
-                    spark, m["coordinator"], m["txid"]
-                ) != "pending":
-                    continue
-                clash = set(c.get("remove", [])) & set(removed)
-                if clash:
-                    raise RuntimeError(
-                        f"conflict: pending multi-table transaction "
-                        f"{m['txid']!r} (coordinator {m['coordinator']}) "
-                        f"rewrote files this {action} also rewrites: "
-                        f"{sorted(clash)[:3]}... — let it resolve (or "
-                        "tx_multi_abort it), then re-run on the new "
-                        "snapshot"
-                    )
+        for _v, c in _pending_multi(spark, path) if removed else []:
+            m = c["multi"]
+            clash = set(c.get("remove", [])) & set(removed)
+            if clash:
+                raise RuntimeError(
+                    f"conflict: pending multi-table transaction "
+                    f"{m['txid']!r} (coordinator {m['coordinator']}) "
+                    f"rewrote files this {action} also rewrites: "
+                    f"{sorted(clash)[:3]}... — let it resolve (or "
+                    "tx_multi_abort it), then re-run on the new "
+                    "snapshot"
+                )
         # a rewrite's outputs carry the REWRITE's add-version, so any
         # merge-on-read tombstone it didn't fold in would no longer
         # apply to them — rows would silently dodge their delete. The
@@ -5021,7 +4195,8 @@ def _commit_rewrite(
             per = [
                 set(
                     _concurrent_append_conflicts(
-                        spark, path, snap_version, kc, lo, hi, set(added)
+                        spark, path, snap_version, kc, lo, hi, set(added),
+                        snap_now.stats,
                     )
                 )
                 for kc, lo, hi in specs
@@ -5035,8 +4210,6 @@ def _commit_rewrite(
                     f"{names} range: {sorted(clashing)[:3]}... — "
                     f"re-run the {action} on the new snapshot"
                 )
-        versions = [v for v, _ in _list_commits(spark, path)]
-        next_v = (max(versions) + 1) if versions else 0
         payload = {
             "version": next_v,
             "action": action,
@@ -5065,16 +4238,11 @@ def _commit_rewrite(
                 payload["row_bases"] = _fresh_row_bases(
                     next_v, rt_counts
                 )
-        if _write_atomic(
-            spark,
-            fs,
-            f"{path}/_txlog/{next_v:0{_PAD}d}.json",
-            json.dumps(payload).encode(),
-        ):
-            if (next_v + 1) % CHECKPOINT_EVERY == 0:
-                _write_checkpoint(spark, path, next_v)
-            return next_v
-    raise RuntimeError(f"could not commit {action} after {max_retries} races")
+        return payload
+
+    # txn idempotence was settled by the caller's prelude; the payload
+    # still records it
+    return _commit(spark, path, build, None, max_retries)
 
 
 def _rewrite_stats(
@@ -5083,7 +4251,7 @@ def _rewrite_stats(
     touched: list[str],
     added: list[str],
     key_col: str | None,
-    snap: "_Snapshot | None" = None,
+    snap: "_Snapshot",
 ) -> dict | None:
     """Stats for a rewrite's output files: whatever stat columns the
     touched inputs carried (plus the rewrite's own key column) are
@@ -5092,7 +4260,7 @@ def _rewrite_stats(
     degrading to footer fallbacks file by file. Partition columns are
     always included on partitioned tables — partition pruning IS their
     stats entries, and a rewrite must never strip it."""
-    logged = snap.stats if snap is not None else _log_stats(spark, path)
+    logged = snap.stats
     cols = {c for f in touched for c in (logged.get(f) or {})}
     if key_col is not None and any(f in logged for f in touched):
         # stats key on PHYSICAL names on mapped tables
@@ -5184,59 +4352,6 @@ def tx_compact(
     )
 
 
-def _change_commits(
-    spark, path: str, since_version: int | None
-) -> tuple[list[tuple[int, dict | None]], int]:
-    """Change-feed replay core: ``([(version, commit dict)], cursor)``
-    for every commit after ``since_version`` — no action
-    interpretation (that's the caller's contract), except multi-table
-    resolution: an aborted provisional commit appears as ``None``
-    (never visible, nothing to deliver) and the drain STOPS before the
-    first still-PENDING one — it can yet resolve either committed or
-    aborted, so its adds are neither deliverable nor skippable;
-    ``cursor`` is then that version minus one and a later pull
-    re-probes."""
-    commits = _list_commits(spark, path)
-    versions = [v for v, k in commits if k == "commit"]
-    ck_versions = [v for v, k in commits if k == "checkpoint"]
-    latest = max(versions + ck_versions) if (versions or ck_versions) else None
-    if latest is None:
-        raise FileNotFoundError(f"no transactional table at {path}")
-    start = -1 if since_version is None else since_version
-    if start > latest:
-        # a checkpoint from the future (wrong table? rolled-back log?)
-        # silently returning nothing would REGRESS the caller's cursor
-        # and re-deliver rows on the next tick
-        raise ValueError(
-            f"since_version {start} is beyond the log's latest version "
-            f"{latest} at {path}; wrong table or corrupted cursor"
-        )
-    # a resumable start must still EXIST in the log (commit or
-    # checkpoint): a vacuumed-away version can't prove which adds the
-    # caller already saw, so silently skipping would risk double reads
-    if start >= 0 and start < latest and start not in set(versions) | set(ck_versions):
-        raise ValueError(
-            f"version {start} was vacuumed from the log at {path}; "
-            "reprocess from a snapshot read"
-        )
-    out: list[tuple[int, dict | None]] = []
-    for v in versions:
-        if v <= start:
-            continue
-        c = _load(spark, path, f"{v:0{_PAD}d}.json")
-        _check_reader(c, path, v)
-        m = c.get("multi")
-        if m is not None:
-            status = _multi_status(spark, m["coordinator"], m["txid"])
-            if status == "pending":
-                return out, v - 1
-            if status == "aborted":
-                out.append((v, None))  # never became visible
-                continue
-        out.append((v, c))
-    return out, latest
-
-
 def _is_noop_delete(c: dict) -> bool:
     """A delete/update whose predicate matched no live row: adds
     nothing, removes nothing, carries no tombstone or DV — a logical
@@ -5253,40 +4368,51 @@ def _is_noop_delete(c: dict) -> bool:
     )
 
 
+def _insert_adds(v: int, c: "dict | None", path: str) -> list[str]:
+    """The insert-only reading of commit ``v`` (``None``: an aborted
+    multi-table commit): the files it adds, ``[]`` for a version that
+    adds no new rows (compaction, Z-order, apply-deletes settlement,
+    meta commits, no-match deletes) so consumers checkpoint past it.
+    Raises on commits that change or rewrite visible rows beyond
+    appending (overwrite, merge, delete — including merge-on-read
+    tombstones: row REMOVAL is not representable here; use
+    :func:`tx_changes_cdf` for a feed that is)."""
+    if c is None or c["action"] in (
+        "compact", "zorder", "apply_deletes", "meta"
+    ):
+        # aborted multi / pure physical rewrites (compaction and
+        # Z-order re-clustering are bit-identical) / property
+        # changes: logical no-ops
+        return []
+    if _is_noop_delete(c):
+        # a delete whose keys touched no live file changed nothing
+        # — checkpoint past it (its cdf marker, if any, is empty)
+        return []
+    if c["action"] != "append" or c.get("remove"):
+        raise ValueError(
+            f"commit {v} of {path} is {c['action']!r} (rewrites "
+            "history); an insert-only feed cannot carry it — reprocess "
+            "the snapshot via tx_read and resume from that version, or "
+            "consume CDC through tx_changes_cdf / the table pipes"
+        )
+    return c.get("add", [])
+
+
 def _change_sets(
     spark, path: str, since_version: int | None
 ) -> tuple[list[tuple[int, list[str]]], int]:
     """Insert-only change-feed interpretation: ``([(version, added
-    files)], cursor)``. A no-new-rows version (compaction,
-    apply-deletes settlement, aborted multi-table txn) appears with an
-    empty file list so callers can checkpoint past it. Raises on
-    commits that change or rewrite visible rows beyond appending
-    (overwrite, merge, delete — including merge-on-read tombstones:
-    row REMOVAL is not representable here; use :func:`tx_changes_cdf`
-    for a feed that is)."""
-    raw, cursor = _change_commits(spark, path, since_version)
+    files)], cursor)`` by :func:`_insert_adds`; the cursor stops below
+    a still-pending multi-table commit."""
+    walk, cursor = _change_commits(spark, path, since_version)
     out: list[tuple[int, list[str]]] = []
-    for v, c in raw:
-        if c is None or c["action"] in (
-            "compact", "zorder", "apply_deletes", "meta"
-        ):
-            # aborted multi / pure physical rewrites (compaction and
-            # Z-order re-clustering are bit-identical) / property
-            # changes: logical no-ops
-            out.append((v, []))
-            continue
-        if _is_noop_delete(c):
-            # a delete whose keys touched no live file changed nothing
-            # — checkpoint past it (its cdf marker, if any, is empty)
-            out.append((v, []))
-            continue
-        if c["action"] != "append" or c.get("remove"):
-            raise ValueError(
-                f"commit {v} is {c['action']!r} (rewrites history); an "
-                "incremental reader must reprocess the snapshot via "
-                "tx_read, then resume from that version"
-            )
-        out.append((v, c.get("add", [])))
+    # every commit in range passes its reader check before any is
+    # interpreted
+    for v, c in list(walk):
+        if c is _PENDING:
+            cursor = v - 1
+            break
+        out.append((v, _insert_adds(v, c, path)))
     return out, cursor
 
 
@@ -5480,7 +4606,7 @@ def tx_changes_cdf(
       consumers keyed on ids must treat NULL as reprocess-by-key."""
     from pyspark.sql import functions as F
 
-    raw, _ = _change_commits(spark, path, since_version)
+    walk = list(_change_commits(spark, path, since_version)[0])
     snap = _replay(spark, path)
     if with_row_ids and not _row_tracking_on(snap.properties):
         raise ValueError(
@@ -5518,7 +4644,9 @@ def tx_changes_cdf(
             snap_v, c["dv"]["targets"], snap_v.row_bases, pos
         )
 
-    for v, c in raw:
+    for v, c in walk:
+        if c is _PENDING:
+            break
         if c is None or c["action"] in (
             "compact", "zorder", "apply_deletes", "meta"
         ):
@@ -5707,7 +4835,7 @@ def tx_delete(
     # equality anti-join (CoW would orphan DV positions too)
     snap, cdf, prior = _mutation_prelude(
         spark, path, "tx_delete", txn, cdf,
-        refuse_mor=False, refuse_dv="tx_delete",
+        refuse_mor=(mode == "copy_on_write"), refuse_dv="tx_delete",
     )
     if prior is not None:
         return prior
@@ -5974,7 +5102,6 @@ def tx_enable_row_tracking(
     files = sorted(snap.eps)
     counts = _count_rows_per_file(spark, path, files) if files else {}
     delta = _writer_feature_delta(snap.properties, {"row-tracking"})
-    fs = hadoop_fs(spark, path)[0]
 
     def build(next_v: int) -> dict:
         payload = {
@@ -5999,8 +5126,8 @@ def tx_enable_row_tracking(
                 "tx_enable_row_tracking on the new snapshot"
             )
 
-    return _commit_with_retries(
-        spark, path, fs, build, None, max_retries,
+    return _commit(
+        spark, path, build, None, max_retries,
         revalidate=revalidate, checked_at=snap.version,
     )
 
@@ -6124,7 +5251,12 @@ def _checkpointed(df: DataFrame):
     try:
         yield ck
     finally:
-        ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
+        _release(ck)
+
+
+def _release(ck: DataFrame) -> None:
+    """Free a ``localCheckpoint``'s cached blocks."""
+    ck._jdf.queryExecution().analyzed().rdd().unpersist(False)
 
 
 def _mutation_prelude(
@@ -6217,12 +5349,14 @@ def _dv_tail(
     matched: "DataFrame | None", assign=None,
     pos: "DataFrame | None" = None,
 ) -> int:
-    """Stage the victims' positions as a DV, collect the targets,
+    """Collect the targets, stage the victims' positions as a DV,
     stage post-images (UPDATE: ``assign``) and one CDF frame, commit.
     ``matched`` (DELETE WHERE, UPDATE) is checkpointed once and all of
-    that derives from it. ``pos`` (DELETE by position) is staged as
-    given and read back, so the targets are what the sidecar holds;
-    the CDF frame re-reads the victims from the targeted files."""
+    that derives from it; with no target nothing is staged. ``pos``
+    (DELETE by position) is staged as given and read back, so the
+    targets are what the sidecar holds (a sidecar naming no target is
+    deleted again); the CDF frame re-reads the victims from the
+    targeted files."""
     from pyspark.sql import functions as F
 
     action = "delete" if assign is None else "update"
@@ -6237,16 +5371,21 @@ def _dv_tail(
             updated = assign(matched.drop("_file", "_pos"))
             _check_constraints(updated, snap.properties, path, "tx_update")
         if pos is None:
+            targets = _files_of(matched)
+            if not targets:
+                return _commit_noop(spark, path, txn, cdf, action)
             sidecars = _stage_dv(matched, path)
-            placed = matched
         else:
             sidecars = _stage_dv(
                 pos.select("_file", "_pos").distinct(), path
             )
             placed = spark.read.parquet(*[_abs(path, f) for f in sidecars])
-        targets = _files_of(placed)
-        if not targets:
-            return _commit_noop(spark, path, txn, cdf, action)
+            targets = _files_of(placed)
+            if not targets:
+                fs = hadoop_fs(spark, path)[0]
+                for f in sidecars:
+                    fs.delete(hadoop_fs(spark, _abs(path, f))[1], False)
+                return _commit_noop(spark, path, txn, cdf, action)
         # only caller coordinates can name a file that is not live
         missing = [f for f in targets if f not in snap.eps]
         if missing:
@@ -6357,7 +5496,6 @@ def _commit_dv(
     ``_commit_rewrite`` enforces for removes — plus the caller's
     ``extra_revalidate(props)`` hook (tx_update re-runs CHECK
     constraints on its post-images)."""
-    fs = hadoop_fs(spark, path)[0]
     used = {"dv"} | ({"cdf"} if cdf_files is not None else set())
     delta = _writer_feature_delta(snap.properties, used)
     # row tracking: UPDATE post-images are new row versions — fresh
@@ -6432,8 +5570,8 @@ def _commit_dv(
             payload["row_bases"] = _fresh_row_bases(next_v, rt_counts)
         return payload
 
-    return _commit_with_retries(
-        spark, path, fs, build, txn, max_retries,
+    return _commit(
+        spark, path, build, txn, max_retries,
         revalidate=revalidate, checked_at=snap.version,
     )
 
@@ -6452,7 +5590,6 @@ def _commit_noop(
     planned-DV/tombstone set rule, which refuses while delete debt is
     live) do not apply to it: a no-match delete on a table carrying
     DVs must be a clean no-op, not a conflict."""
-    fs = hadoop_fs(spark, path)[0]
     if cdf:
         fields = {"cdf": {"files": [], "key": None}}
 
@@ -6466,7 +5603,7 @@ def _commit_noop(
             **(fields or {}),
         }
 
-    return _commit_with_retries(spark, path, fs, build, txn, 20)
+    return _commit(spark, path, build, txn, 20)
 
 
 def tx_delete_where(
@@ -6803,8 +5940,7 @@ def tx_optimize_zorder(
         raise FileNotFoundError(f"nothing to optimize at {path}")
     spec = {"cols": list(cols), "bits": bits}
     if incremental:
-        marks = _zorder_marks(spark, path, eps, snap_version)
-        files = [f for f in files if marks.get(f) != spec]
+        files = [f for f in files if snap.zmarks.get(f) != spec]
         if not files:
             return None  # everything live is already clustered
     # re-clustering moves rows between files arbitrarily — exactly the
@@ -7033,7 +6169,7 @@ def tx_restore(
             payload["stats"] = stats
         return payload
 
-    return _commit_with_retries(spark, path, fs, build, None, max_retries)
+    return _commit(spark, path, build, None, max_retries)
 
 
 def tx_clone(
@@ -7068,8 +6204,9 @@ def tx_clone(
     files) and scan each group under its own ``basePath`` — see
     :func:`_scan_files` — so partition columns reconstruct on both
     sides of the mix and clone-local appends keep the hive layout."""
-    fs, dlog = hadoop_fs(spark, f"{dst}/_txlog")
-    if fs.exists(dlog):
+    fs, dst_log = _log_fs(spark, dst)
+    dst_log += "/_txlog"
+    if fs.exists(dst_log):
         raise FileExistsError(f"clone destination {dst} already exists")
     snap = _replay(spark, src, version)
     _refuse_mor(snap, src, "tx_clone")
@@ -7150,12 +6287,8 @@ def tx_clone(
     # ranges the imported rows already occupy
     seed_v = eff + 1
     payload = build(seed_v)
-    fs_dst = hadoop_fs(spark, dst)[0]
-    if not _write_atomic(
-        spark,
-        fs_dst,
-        f"{dst}/_txlog/{seed_v:0{_PAD}d}.json",
-        json.dumps(payload).encode(),
+    if not fs.publish(
+        f"{dst_log}/{seed_v:0{_PAD}d}.json", json.dumps(payload).encode()
     ):
         raise FileExistsError(f"clone destination {dst} already exists")
     return seed_v

@@ -14,7 +14,7 @@ import glob
 import pytest
 from pyspark.sql import functions as F
 
-from distributed_mapreduce__spark.sources import txlog
+from distributed_mapreduce__spark.sources import txlog, txlog_core
 from distributed_mapreduce__spark.sources.multitx import tx_multi
 from distributed_mapreduce__spark.sources.txlog import (
     _replay,
@@ -208,7 +208,7 @@ def test_old_build_guards(spark, table, monkeypatch):
     monkeypatch.undo()
     # reader half: a level-2 build refuses to read (it would surface
     # physical names), but pre-mapping time travel works
-    monkeypatch.setattr(txlog, "READER_VERSION", 2)
+    monkeypatch.setattr(txlog_core, "READER_VERSION", 2)
     with pytest.raises(RuntimeError, match="reader version 3"):
         tx_read(spark, table)
     assert tx_read(spark, table, version=0).count() == 20

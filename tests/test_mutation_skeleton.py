@@ -232,3 +232,52 @@ def test_dv_sidecar_read_and_prune_live_in_one_place():
     allowed = _lines_of(txlog._prune_files, prune_call)
     assert allowed, "_prune_files no longer calls _prunable"
     assert _package_hits(prune_call) == allowed
+
+
+def _files_under(t, sub):
+    d = os.path.join(t, sub)
+    return {
+        os.path.relpath(os.path.join(r, n), d)
+        for r, _, ns in os.walk(d) for n in ns
+    }
+
+
+def test_cow_key_delete_refuses_live_tombstone_up_front(spark, table):
+    """A copy-on-write key delete over a live equality tombstone is
+    refused by the prelude, before anything is staged."""
+    tx_delete(spark.range(0, 3).select("id"), table, "id",
+              mode="merge_on_read")
+    v0 = _replay(spark, table).version
+    data0, cdf0 = _files_under(table, "data"), _files_under(table, "_cdf")
+    with pytest.raises(ValueError, match="equality tombstones"):
+        tx_delete(spark.range(10, 20).select("id"), table, "id",
+                  mode="copy_on_write")
+    assert _replay(spark, table).version == v0
+    assert _files_under(table, "data") == data0
+    assert _files_under(table, "_cdf") == cdf0
+
+
+def test_no_match_dv_delete_stages_no_sidecar(spark, table):
+    """A DV delete that matches nothing leaves no ``_dv/`` file (nor
+    its ``.crc``) that no commit names: by WHERE, nothing is staged;
+    by position, the staged sidecar is removed again."""
+    tx_delete_where(spark, table, "v = 99")
+    assert _files_under(table, "_dv") == set()
+    tx_delete_positions(tx_scan_with_pos(spark, table).filter("v = 99"), table)
+    assert _files_under(table, "_dv") == set()
+    assert tx_read(spark, table).count() == 1000
+
+
+def test_merge_releases_its_checkpoints(spark, table):
+    jsc = spark.sparkContext._jsc
+    before = jsc.getPersistentRDDs().size()
+    for i in range(2):
+        txlog.tx_merge(
+            _df(spark, 5).withColumn("tag", F.lit(f"m{i}")), table, "id"
+        )
+    txlog.tx_merge(
+        _df(spark, 5).withColumn("tag", F.lit("c")), table, "id",
+        when_matched=[{"action": "update"}],
+    )
+    # <=: the context cleaner may release RDDs earlier tests left behind
+    assert jsc.getPersistentRDDs().size() <= before

@@ -16,7 +16,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
-from distributed_mapreduce__spark.sources import txlog
+from distributed_mapreduce__spark.sources import txlog, txlog_core
 from distributed_mapreduce__spark.sources.txlog import (
     _bucket_of,
     _parse_partition_spec,
@@ -197,7 +197,7 @@ def test_reader_level_3_guard(spark, tmp_path, monkeypatch):
         _tdf(spark), t, mode="overwrite", partition_by=["days(ts)"]
     )
     assert tx_read(spark, t).count() == 40
-    monkeypatch.setattr(txlog, "READER_VERSION", 2)
+    monkeypatch.setattr(txlog_core, "READER_VERSION", 2)
     with pytest.raises(RuntimeError, match="reader version 3"):
         tx_read(spark, t)
     assert tx_read(spark, t, version=v0).count() == 40  # pre-transform

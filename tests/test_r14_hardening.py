@@ -189,14 +189,16 @@ def test_stream_cursor_seeds_from_restored_offsets(spark, tmp_path, monkeypatch)
     r.commit({"version": 2})
     assert r._cursor == 2
 
+    from distributed_mapreduce__spark.sources import txlog_core
+
     loaded: "list[int]" = []
-    orig = txs._LogView.load
+    orig = txlog_core._load
 
-    def counting(self, version, kind="commit"):
-        loaded.append(version)
-        return orig(self, version, kind)
+    def counting(spark_, path, name):
+        loaded.append(int(name.split(".")[0]))
+        return orig(spark_, path, name)
 
-    monkeypatch.setattr(txs._LogView, "load", counting)
+    monkeypatch.setattr(txlog_core, "_load", counting)
     off = r.latestOffset()
     assert off == {"version": 4}
     # planning after the seeded cursor touches only NEW commits —

@@ -400,6 +400,19 @@ def test_planner_fs_seam_plans_object_store_shape(spark, tmp_path):
         assert plan("mem://tbl") == plan(t)
         # file: URI still plans through the local fast path
         assert _LogView(f"file://{t}").commits() == local.commits()
+
+        # the session's Hadoop adapter, forced onto the same local
+        # table, folds to the same snapshot as the native FS
+        from distributed_mapreduce__spark.sources import txlog_core
+
+        native = txlog_core._replay(None, t)
+        hadoop = txlog_core._HadoopFS(spark)
+        log_fs = txlog_core._log_fs
+        txlog_core._log_fs = lambda s, p: (hadoop, p)
+        try:
+            assert txlog_core._replay(spark, t) == native
+        finally:
+            txlog_core._log_fs = log_fs
     finally:
         _SCHEME_FS.pop("mem", None)
 

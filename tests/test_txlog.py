@@ -632,7 +632,7 @@ def test_same_version_race_exactly_one_winner(spark, tmp_path):
     import threading
     import time
 
-    from distributed_mapreduce__spark.sources import txlog
+    from distributed_mapreduce__spark.sources import txlog, txlog_core
     from distributed_mapreduce__spark.sources.sinks import hadoop_fs
 
     final = str(tmp_path / "_txlog" / f"{7:0{_PAD}d}.json")
@@ -640,8 +640,8 @@ def test_same_version_race_exactly_one_winner(spark, tmp_path):
     barrier = threading.Barrier(2)
     results = {}
 
-    old_hook = txlog._prepublish_hook
-    txlog._prepublish_hook = lambda: time.sleep(0.3)
+    old_hook = txlog_core._prepublish_hook
+    txlog_core._prepublish_hook = lambda: time.sleep(0.3)
     try:
 
         def writer(tag):
@@ -654,7 +654,7 @@ def test_same_version_race_exactly_one_winner(spark, tmp_path):
         [t.start() for t in ts]
         [t.join() for t in ts]
     finally:
-        txlog._prepublish_hook = old_hook
+        txlog_core._prepublish_hook = old_hook
 
     assert sorted(results.values()) == [False, True], results
     winner = next(t for t, ok in results.items() if ok)
