@@ -1355,9 +1355,9 @@ def merge_into_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     THEN INSERT`` — and aggregate the post-merge table. DuckDB replays
     the same clause algebra relationally (join / anti-joins / unions),
     so equality proves clause gating, ordering, expression evaluation,
-    and the composite-key pruning end to end (txlog._prepare_merge_into;
-    Delta MERGE INTO is the public model — the reference repo has no
-    DML)."""
+    and the composite-key pruning end to end (txlog._merge, the one
+    body every MERGE runs; Delta MERGE INTO is the public model — the
+    reference repo has no DML)."""
     import tempfile
 
     from ..sources.txlog import tx_merge, tx_read, tx_write

@@ -89,14 +89,11 @@ from .txlog import (
     _check_writer_features,
     _collect_stats,
     _commit,
-    _commit_rewrite,
     _committed_txns,
+    _merge,
     _multi_record_path,
     _pending_multi,
-    _merge_keys,
     _phys_map,
-    _prepare_merge,
-    _prepare_merge_into,
     _read_record,
     _replay,
     _Snapshot,
@@ -204,7 +201,7 @@ def tx_multi(
             psnap = None
         if psnap is not None:
             # same writer-feature + CHECK-constraint guards as every
-            # single-table write (merge validates inside its prepare)
+            # single-table write (merge validates inside its body)
             _check_writer_features(psnap.properties, path)
             if mode != "merge":
                 _check_constraints(
@@ -217,39 +214,22 @@ def tx_multi(
                     f"modes[{path!r}]='merge' but the table does not "
                     "exist; merge needs live rows to upsert into"
                 )
-            # the exact single-table MERGE body (validation, pruning,
-            # survivor staging, CDF sidecar, writer-feature stamps);
-            # only the commit differs: it carries the multi marker, so
-            # it stays invisible until the coordinator record lands.
-            # Conditional clauses route through the conditional body
-            # (round 15, VERDICT r14 #2: a cross-table conditional
-            # upsert is expressible atomically)
+            # the one MERGE body (validation, pruning, staging, CDF
+            # sidecar, writer-feature stamps); only the commit differs:
+            # it carries the multi marker, so it stays invisible until
+            # the coordinator record lands. No clauses: the upsert
             cl = (merge_clauses or {}).get(path)
-            if cl is not None:
-                prep = _prepare_merge_into(
-                    spark, path, writes[path],
-                    _merge_keys((merge_keys or {})[path]),
-                    list(cl.get("when_matched") or []),
-                    list(cl.get("when_not_matched") or []),
-                    list(cl.get("when_not_matched_by_source") or []),
-                    None, psnap,
+            clauses = [None] * 3 if cl is None else [
+                list(cl.get(k) or []) for k in (
+                    "when_matched", "when_not_matched",
+                    "when_not_matched_by_source",
                 )
-                reval = prep["revalidate"]
-            else:
-                prep = _prepare_merge(
-                    spark, path, writes[path], (merge_keys or {})[path],
-                    None, psnap, ctx="tx_multi participant (merge)",
-                )
-                reval = prep["revalidate"]
-            extra = dict(prep["extra"] or {})
-            extra["multi"] = {"coordinator": coordinator, "txid": txid}
-            versions[path] = _commit_rewrite(
-                spark, path, prep["added"], prep["touched"],
-                prep["snap_version"], table_txn, "merge",
-                max_retries=max_retries, stats=prep["stats"],
-                blooms=prep["blooms"],
-                conflict_keys=prep["conflict_keys"], extra=extra,
-                revalidate=reval, planned_rt=prep["planned_rt"],
+            ]
+            versions[path] = _merge(
+                writes[path], path, merge_keys[path], table_txn, None,
+                *clauses,
+                extra={"multi": {"coordinator": coordinator, "txid": txid}},
+                max_retries=max_retries,
             )
             continue
         if mode == "append":

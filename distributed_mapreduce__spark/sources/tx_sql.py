@@ -737,20 +737,12 @@ def tx_sql(spark: SparkSession, sql: str):
         return v
     if re.match(r"^\s*MERGE\b", sql, re.IGNORECASE):
         path, name, src, keys, wm, wnm, wnmbs = _parse_merge(spark, sql)
-        if wm is None and wnm is None and wnmbs is None:
-            if len(keys) != 1:
-                raise ValueError(
-                    "MERGE without WHEN clauses is the unconditional "
-                    "single-key upsert; composite keys need explicit "
-                    "WHEN clauses"
-                )
-            v = tx_merge(src, path, keys[0])
-        else:
-            v = tx_merge(
-                src, path, keys,
-                when_matched=wm, when_not_matched=wnm,
-                when_not_matched_by_source=wnmbs,
-            )
+        # no WHEN clause at all: the unconditional upsert
+        v = tx_merge(
+            src, path, keys,
+            when_matched=wm, when_not_matched=wnm,
+            when_not_matched_by_source=wnmbs,
+        )
         _refresh(spark, path, name)
         return v
     m = _OPTIMIZE_RE.match(sql)

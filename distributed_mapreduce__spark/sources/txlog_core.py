@@ -605,11 +605,13 @@ def _load(spark, path: str, name: str) -> dict:
     return json.loads(fs.read_text(f"{p}/_txlog/{name}"))
 
 
-def _commits(spark, path: str, upto: "int | None" = None):
-    """Yield ``(version, commit dict)`` for every commit file up to
-    ``upto``, oldest first (checkpoints skipped)."""
+def _commits(
+    spark, path: str, upto: "int | None" = None, since: int = -1
+):
+    """Yield ``(version, commit dict)`` for every commit file in
+    ``(since, upto]``, oldest first (checkpoints skipped)."""
     for v, kind in _list_commits(spark, path):
-        if kind == "commit" and (upto is None or v <= upto):
+        if kind == "commit" and since < v and (upto is None or v <= upto):
             yield v, _load(spark, path, f"{v:0{_PAD}d}.json")
 
 
@@ -744,6 +746,11 @@ class _Snapshot:
     #: (incremental OPTIMIZE skips files already clustered under its
     #: spec); folded through checkpoints so it survives truncation
     zmarks: dict = dataclasses.field(default_factory=dict)
+    #: ``[(version, commit)]`` of the provisional multi-table commits
+    #: still unresolved — skipped by the fold, but rewrites must treat
+    #: them as conflicts. A checkpoint never folds past one, so the
+    #: fold meets every one of them
+    pending: list = dataclasses.field(default_factory=list)
 
 
 def _replay(spark, path: str, version: int | None = None) -> _Snapshot:
@@ -842,9 +849,10 @@ def _replay(spark, path: str, version: int | None = None) -> _Snapshot:
         for f, b in (c.get("row_bases") or {}).items():
             s.row_bases.setdefault(f, b)
         m = c.get("multi")
-        if m is not None and (
-            _multi_status(spark, m["coordinator"], m["txid"]) != "committed"
-        ):
+        status = m and _multi_status(spark, m["coordinator"], m["txid"])
+        if status == "pending":
+            s.pending.append((v, c))
+        if status and status != "committed":
             # provisional multi-table commit: pending or aborted →
             # invisible (it becomes visible atomically, for every
             # participant table, when the coordinator record lands)

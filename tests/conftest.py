@@ -23,6 +23,25 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def during_publish(monkeypatch):
+    """``during_publish(op)`` runs ``op`` once, from inside the next
+    commit's publish: after the committer built its payload, before it
+    claims the version, so ``op``'s own commit takes that version and
+    the committer retries on the new log. The hook is disarmed before
+    ``op`` runs, so ``op`` publishes normally."""
+    from distributed_mapreduce__spark.sources import txlog_core
+
+    def arm(op):
+        def hook():
+            monkeypatch.setattr(txlog_core, "_prepublish_hook", None)
+            op()
+
+        monkeypatch.setattr(txlog_core, "_prepublish_hook", hook)
+
+    return arm
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_ORACLE

@@ -142,34 +142,22 @@ def test_old_build_refuses_constrained_table(spark, table, monkeypatch):
     assert tx_read(spark, table).count() == 10  # reads unaffected
 
 
-def test_constraint_added_during_merge_enforced_at_commit(spark, table):
+def test_constraint_added_during_merge_enforced_at_commit(
+    spark, table, during_publish
+):
     """ADVICE r11 (low): a constraint added WHILE a merge is in flight
     must be enforced on that merge's updates at commit time — the
     add-time validation only saw the pre-merge table, so without the
     _commit_rewrite revalidate hook the violating updates would land
     after the constraint committed."""
-    from distributed_mapreduce__spark.sources.txlog import (
-        _check_constraints,
-        _commit_rewrite,
-        _prepare_merge,
-        _replay,
-    )
-
     updates = spark.createDataFrame([(3, "z"), (11, "z")], "id long, tag string")
-    snap = _replay(spark, table)
-    prep = _prepare_merge(spark, table, updates, "id", False, snap)
     # existing rows are all tag='a', so the ADD validates cleanly —
     # but the in-flight merge's updates carry tag='z'
-    tx_add_constraint(spark, table, "tag_a", "tag = 'a'")
+    during_publish(
+        lambda: tx_add_constraint(spark, table, "tag_a", "tag = 'a'")
+    )
     with pytest.raises(ValueError, match="tag_a"):
-        _commit_rewrite(
-            spark, table, prep["added"], prep["touched"],
-            prep["snap_version"], None, "merge", stats=prep["stats"],
-            conflict_keys=prep["conflict_keys"], extra=prep["extra"],
-            revalidate=lambda props: _check_constraints(
-                updates, props, table, "tx_merge updates"
-            ),
-        )
+        tx_merge(updates, table, "id", cdf=False)
     # nothing landed: the table is unchanged and still all-'a'
     got = tx_read(spark, table)
     assert got.count() == 10
@@ -177,37 +165,30 @@ def test_constraint_added_during_merge_enforced_at_commit(spark, table):
 
 
 def test_merge_revalidate_sees_staged_rows_not_replan(
-    spark, table, tmp_path
+    spark, table, tmp_path, during_publish
 ):
     """Round 15 review: the commit-time revalidate hook must validate
-    the rows that were STAGED (the merge prep's one-pass checkpointed
-    frame), not re-execute the caller's source plan — a source reading
+    the rows that were STAGED (the merge's one-pass checkpointed
+    source), not re-execute the caller's source plan — a source reading
     state that changed mid-flight (or a nondeterministic plan) would
     otherwise be validated against rows that differ from what landed."""
-    from distributed_mapreduce__spark.sources.txlog import (
-        _commit_rewrite,
-        _prepare_merge,
-    )
-
     p = str(tmp_path / "src_data")
     spark.createDataFrame(
         [(3, "a")], "id long, tag string"
     ).write.parquet(p)
     updates = spark.read.parquet(p)
-    prep = _prepare_merge(spark, table, updates, "id", False, None)
-    # the source's backing data changes mid-flight to a VIOLATING row
-    spark.createDataFrame(
-        [(3, "z")], "id long, tag string"
-    ).write.mode("overwrite").parquet(p)
-    tx_add_constraint(spark, table, "tag_a2", "tag = 'a'")
+
+    def mid_flight():
+        # the source's backing data changes mid-flight to a VIOLATING row
+        spark.createDataFrame(
+            [(3, "z")], "id long, tag string"
+        ).write.mode("overwrite").parquet(p)
+        tx_add_constraint(spark, table, "tag_a2", "tag = 'a'")
+
+    during_publish(mid_flight)
     # the STAGED rows are all 'a' — the commit must succeed (the old
     # closure over the raw plan re-read the parquet and refused)
-    _commit_rewrite(
-        spark, table, prep["added"], prep["touched"],
-        prep["snap_version"], None, "merge", stats=prep["stats"],
-        conflict_keys=prep["conflict_keys"], extra=prep["extra"],
-        revalidate=prep["revalidate"], planned_rt=prep["planned_rt"],
-    )
+    tx_merge(updates, table, "id", cdf=False)
     got = tx_read(spark, table)
     assert got.count() == 10
     assert got.filter("tag <> 'a'").count() == 0

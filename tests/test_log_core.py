@@ -166,7 +166,7 @@ LOG_READ_PINS = {
     "append": (3, 4, 2),
     "pipe_tick": (6, 10, 4),
     "update": (2, 3, 1),
-    "merge": (5, 40, 2),
+    "merge": (4, 10, 2),
 }
 
 
@@ -202,3 +202,31 @@ def test_log_reads_pinned(spark, tmp_path, monkeypatch):
         k: (v["list"], v["commit"], v["checkpoint"]) for k, v in got.items()
     }
     assert got == LOG_READ_PINS
+
+
+def test_merge_log_reads_do_not_grow_with_the_log(
+    spark, tmp_path, monkeypatch
+):
+    """A merge reads the commits above its checkpoint and the ones
+    after its plan snapshot — not the whole log: the same merge, as
+    far above a checkpoint at version 9 as above one at version 19,
+    costs the same log I/O."""
+    fs = _CountingFS()
+    monkeypatch.setattr(txlog_core, "_LOCAL_FS", fs)
+    got = []
+    for n in (12, 22):  # checkpoints at 9, and at 9 and 19
+        t = str(tmp_path / f"t{n}")
+        for i in range(n):
+            tx_write(
+                spark.range(10 * i, 10 * i + 10).select(
+                    "id", F.lit("a").alias("tag")
+                ),
+                t, stats_cols=["id"],
+            )
+        fs.take()
+        tx_merge(
+            spark.range(5, 15).select("id", F.lit("m").alias("tag")),
+            t, "id",
+        )
+        got.append(fs.take())
+    assert got[0] == got[1]

@@ -13,9 +13,6 @@ import pytest
 from pyspark.sql import functions as F
 
 from distributed_mapreduce__spark.sources.txlog import (
-    _commit_rewrite,
-    _prepare_merge_into,
-    _replay,
     tx_changes_cdf,
     tx_enable_row_tracking,
     tx_merge,
@@ -236,24 +233,23 @@ def test_clause_validation_refusals(spark, tmp_path):
         )
 
 
-def test_by_source_conflicts_with_any_concurrent_append(spark, tmp_path):
+def test_by_source_conflicts_with_any_concurrent_append(
+    spark, tmp_path, during_publish
+):
     t = str(tmp_path / "t")
     _tbl(spark, t, n=6)
     src = _src(spark, [(1, 1, "s")])
-    snap = _replay(spark, t)
-    prep = _prepare_merge_into(
-        spark, t, src, ["id"], [{"set": {"tag": "'seen'"}}], [],
-        [{"action": "update", "set": {"tag": "'stale'"}}], None, snap,
-    )
     # a concurrent append lands rows the by-source clause should have
     # seen: any append conflicts, range-disjoint or not
-    tx_write(_src(spark, [(1000, 1, "late")]), t)
+    during_publish(
+        lambda: tx_write(_src(spark, [(1000, 1, "late")]), t)
+    )
     with pytest.raises(RuntimeError, match="appended files overlapping"):
-        _commit_rewrite(
-            spark, t, prep["added"], prep["touched"],
-            prep["snap_version"], None, "merge", stats=prep["stats"],
-            blooms=prep["blooms"], conflict_keys=prep["conflict_keys"],
-            extra=prep["extra"], revalidate=prep["revalidate"],
+        tx_merge(
+            src, t, "id", when_matched=[{"set": {"tag": "'seen'"}}],
+            when_not_matched_by_source=[
+                {"action": "update", "set": {"tag": "'stale'"}}
+            ],
         )
 
 

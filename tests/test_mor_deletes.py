@@ -177,7 +177,9 @@ def test_rewrite_commit_aborts_when_tombstone_races_in(spark, tmp_path):
     files, snap = _snapshot_files(spark, t)
     tx_delete(_keys(spark, [0]), t, "id", mode="merge_on_read")
     with pytest.raises(RuntimeError, match="tombstones changed"):
-        _commit_rewrite(spark, t, [], [], snap, None, "compact")
+        _commit_rewrite(
+            spark, t, [], [], snap, None, "compact", planned_rt=False
+        )
 
 
 def test_reader_version_guard(spark, tmp_path):

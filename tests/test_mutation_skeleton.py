@@ -1,11 +1,13 @@
 """The row-level mutation family (sources/txlog.py: tx_update,
-tx_delete_where, tx_delete, tx_delete_positions) shares one prelude,
-one deletion-vector tail and one copy-on-write tail. These tests pin
-what the shared pieces promise: a WHERE condition is deterministic
-(the single-evaluation checkpoints rely on it), copy-on-write change
-rows carry stable row ids on tracked tables, the checkpoints are
-released when the op returns, the Spark job count of each verb, and
-that the DV sidecar read and the stats prune each stay in one place."""
+tx_delete_where, tx_delete, tx_delete_positions, and MERGE through its
+one body) shares one prelude, one deletion-vector tail and one
+copy-on-write tail. These tests pin what the shared pieces promise: a
+WHERE condition is deterministic (the single-evaluation checkpoints
+rely on it), copy-on-write change rows carry stable row ids on tracked
+tables, the checkpoints are released when the op returns, the Spark
+job count of each verb and merge flavor, merge's key refusals, and
+that the DV sidecar read, the stats prune and the merge body each stay
+in one place."""
 
 from __future__ import annotations
 
@@ -18,6 +20,7 @@ from pyspark.sql import functions as F
 
 import distributed_mapreduce__spark as pkg
 from distributed_mapreduce__spark.sources import txlog
+from distributed_mapreduce__spark.sources.multitx import tx_multi
 from distributed_mapreduce__spark.sources.tx_sql import (
     tx_register_table,
     tx_sql,
@@ -156,10 +159,18 @@ def test_checkpoints_released_after_each_op(spark, table):
 
 
 def _jobs(spark, fn):
+    """Spark jobs ``fn`` starts: the rise of the newest job id (ids are
+    monotone, while the status store evicts old jobs past
+    ``spark.ui.retainedJobs``, so a count of the ids it holds can fall
+    in a long session)."""
     tracker = spark.sparkContext._jsc.sc().statusTracker()
-    before = len(tracker.getJobIdsForGroup(None))
+
+    def newest():
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    before = newest()
     fn()
-    return len(tracker.getJobIdsForGroup(None)) - before
+    return newest() - before
 
 
 def _pos_delete(spark, t):
@@ -194,6 +205,96 @@ def test_mutation_job_counts_pinned(spark, table, case):
     fn, want = JOB_PINS[case]
     got = _jobs(spark, lambda: fn(spark, table))
     assert got == want, f"{case}: {got} jobs (pinned {want})"
+
+
+def _src(spark):
+    """20 source rows over the 4-file table: ids 990..999 match,
+    1000..1009 are new."""
+    return _df(spark, 1010).filter("id >= 990").withColumn(
+        "tag", F.lit("s")
+    )
+
+
+def _merge(**clauses):
+    return lambda s, t: txlog.tx_merge(_src(s), t, "id", **clauses)
+
+
+def _multi_merge(spark, t):
+    return tx_multi(
+        {t: _src(spark), t + "_log": _src(spark)}, t + "_coord",
+        modes={t: "merge"}, merge_keys={t: "id"},
+    )
+
+
+#: merge flavor -> (op, row-tracked table, most Spark jobs, jobs when
+#: merge had two bodies). Same 4-file, 1,000-row table as JOB_PINS;
+#: CDF on unless noted. One body may cost no flavor a job. Counted at
+#: 4 and 8 cores; at 2, AQE plans update_insert one job lower.
+MERGE_JOB_PINS = {
+    "upsert": (_merge(), False, 12, 13),
+    "upsert/nocdf": (_merge(cdf=False), False, 9, 9),
+    "upsert/tracked": (_merge(), True, 14, 15),
+    "upsert/tracked/nocdf": (_merge(cdf=False), True, 9, 9),
+    "update_insert": (_merge(
+        when_matched=[{"condition": "s.v > 3", "set": {"tag": "s.tag"}}],
+        when_not_matched=[{}],
+    ), False, 13, 20),
+    "by_source_delete": (_merge(
+        when_matched=[{"action": "update"}],
+        when_not_matched_by_source=[
+            {"action": "delete", "condition": "t.v = 3"}
+        ],
+    ), False, 12, 15),
+    "insert_only": (_merge(when_not_matched=[{}]), False, 7, 10),
+    "multi": (_multi_merge, False, 13, 14),
+}
+
+
+@pytest.mark.parametrize("case", sorted(MERGE_JOB_PINS))
+def test_merge_job_counts_pinned(spark, table, case):
+    fn, tracked, want, two_bodies = MERGE_JOB_PINS[case]
+    if tracked:
+        tx_enable_row_tracking(spark, table)
+    got = _jobs(spark, lambda: fn(spark, table))
+    assert got <= want <= two_bodies, f"{case}: {got} jobs (pinned {want})"
+
+
+def test_clause_merge_duplicate_and_null_keys_raise_multiple_match(
+    spark, table
+):
+    """Two source rows on one target key raise Delta's multiple-match
+    error even when a NULL key sits beside them (NULL keys never
+    match, so they do not hide the duplicate)."""
+    src = _src(spark).filter("id = 995").unionByName(
+        _src(spark).filter("id = 995")
+    ).unionByName(
+        _src(spark).filter("id = 1000").withColumn(
+            "id", F.lit(None).cast("long")
+        )
+    )
+    v0 = _replay(spark, table).version
+    with pytest.raises(ValueError, match="multiple source rows"):
+        txlog.tx_merge(
+            src, table, "id", when_matched=[{"action": "update"}],
+            when_not_matched=[{}],
+        )
+    assert _replay(spark, table).version == v0
+
+
+def test_upsert_refuses_null_and_duplicate_keys(spark, table):
+    v0 = _replay(spark, table).version
+    with pytest.raises(ValueError, match=r"updates carry NULL \['id'\]"):
+        txlog.tx_merge(
+            _src(spark).withColumn(
+                "id", F.when(F.col("id") != 995, F.col("id"))
+            ),
+            table, "id",
+        )
+    with pytest.raises(
+        ValueError, match=r"updates carry duplicate \['id'\] rows"
+    ):
+        txlog.tx_merge(_src(spark).unionByName(_src(spark)), table, "id")
+    assert _replay(spark, table).version == v0
 
 
 def _package_hits(pattern: str) -> "set[tuple[str, int]]":
@@ -232,6 +333,27 @@ def test_dv_sidecar_read_and_prune_live_in_one_place():
     allowed = _lines_of(txlog._prune_files, prune_call)
     assert allowed, "_prune_files no longer calls _prunable"
     assert _package_hits(prune_call) == allowed
+
+
+def test_merge_has_one_body():
+    """``tx_merge``, ``tx_multi`` and SQL ``MERGE`` reach the one merge
+    body: its per-key pruning loop is the only one (the other overlap
+    prune is the single-key DELETE), every eager checkpoint in
+    txlog.py is ``_checkpointed``'s, and the second body's helpers
+    are gone."""
+    overlap = r"(?<!def )_files_overlapping_keys\("
+    in_merge = _lines_of(txlog._merge, overlap)
+    assert len(in_merge) == 1
+    assert _package_hits(overlap) == (
+        in_merge | _lines_of(txlog.tx_delete, overlap)
+    )
+    rel = os.path.join("sources", "txlog.py")
+    ck = r"localCheckpoint\("
+    assert {h for h in _package_hits(ck) if h[0] == rel} == _lines_of(
+        txlog._checkpointed, ck
+    )
+    for gone in ("_id_scan_touched", "_prepare_merge", "_multi_key_bounds"):
+        assert not _package_hits(gone), gone
 
 
 def _files_under(t, sub):

@@ -27,13 +27,12 @@ from pyspark.sql import functions as F
 
 from distributed_mapreduce__spark.sources import txlog
 from distributed_mapreduce__spark.sources.txlog import (
-    _commit_rewrite,
-    _prepare_merge,
     _write_checkpoint,
     tx_clone,
     tx_compact,
     tx_delete_where,
     tx_enable_row_tracking,
+    tx_merge,
     tx_read,
     tx_rename_column,
     tx_restore,
@@ -108,24 +107,20 @@ def test_restore_rerecords_truncated_materialized_marker(spark, tmp_path):
     assert _id_map(spark, t) == want
 
 
-def test_rewrite_conflicts_when_tracking_flips_mid_flight(spark, tmp_path):
+def test_rewrite_conflicts_when_tracking_flips_mid_flight(
+    spark, tmp_path, during_publish
+):
     t = str(tmp_path / "t")
     tx_write(_df(spark, 0, 50).repartition(2), t, stats_cols=["id"])
     updates = spark.range(10, 15).select(
         "id", F.lit("new").alias("tag")
     )
-    prep = _prepare_merge(spark, t, updates, "id")
     # tracking lands between planning and commit: the merge planned
     # id-less outputs — committing would mint nothing (or fresh ids on
     # a retry) for rows the enable just backfilled
-    tx_enable_row_tracking(spark, t)
+    during_publish(lambda: tx_enable_row_tracking(spark, t))
     with pytest.raises(RuntimeError, match="row tracking.*toggled"):
-        _commit_rewrite(
-            spark, t, prep["added"], prep["touched"],
-            prep["snap_version"], None, "merge",
-            stats=prep["stats"], blooms=prep["blooms"],
-            conflict_keys=prep["conflict_keys"], extra=prep["extra"],
-        )
+        tx_merge(updates, t, "id")
 
 
 def test_batch_read_with_row_ids_matches_scan(spark, tmp_path):

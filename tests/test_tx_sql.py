@@ -246,6 +246,33 @@ def test_merge_by_source_and_multi_key_sql(spark, tmp_path):
     assert _rows(spark, a) == _rows(spark, b)
 
 
+def test_clause_less_merge_upserts_on_composite_key(spark, tmp_path):
+    """MERGE with no WHEN clause is the unconditional upsert on every
+    ON key, composite ones included — the same as tx_merge(src, t,
+    [k1, k2])."""
+    a, b = str(tmp_path / "sql"), str(tmp_path / "py")
+    df = spark.createDataFrame(
+        [(1, "a", 10), (1, "b", 20), (2, "a", 30)],
+        "k1 long, k2 string, v long",
+    )
+    tx_write(df, a)
+    tx_write(df, b)
+    tx_register_table(spark, "ck_sql", a)
+    src = spark.createDataFrame(
+        [(1, "b", 200), (2, "b", 40)], "k1 long, k2 string, v long"
+    )
+    src.createOrReplaceTempView("ck_src")
+    tx_sql(
+        spark,
+        "MERGE INTO ck_sql USING ck_src ON ck_sql.k1 = ck_src.k1 "
+        "AND ck_sql.k2 = ck_src.k2",
+    )
+    tx_merge(src, b, ["k1", "k2"])
+    assert _rows(spark, a) == _rows(spark, b) == [
+        (1, "a", 10), (1, "b", 200), (2, "a", 30), (2, "b", 40),
+    ]
+
+
 def test_update_where_inside_string_literal(spark, pair):
     a, b = pair
     # round-14: the bare WHERE inside the literal no longer splits the

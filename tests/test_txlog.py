@@ -278,7 +278,8 @@ def test_rewrite_conflict_detected(spark, tmp_path):
     tx_compact(spark, t, target_files=1)  # retires old_files
     with pytest.raises(RuntimeError, match="conflict"):
         _commit_rewrite(
-            spark, t, ["data/bogus.parquet"], old_files, old_v, None, "merge"
+            spark, t, ["data/bogus.parquet"], old_files, old_v, None,
+            "merge", planned_rt=False,
         )
 
 
@@ -1791,32 +1792,26 @@ def test_idempotent_retry_survives_feature_upgrade(spark, tmp_path):
     assert _ids(spark, t) == [0, 1, 2, 3, 4]
 
 
-def test_rewrite_rechecks_features_at_commit_time(spark, tmp_path):
+def test_rewrite_rechecks_features_at_commit_time(
+    spark, tmp_path, during_publish
+):
     """ADVICE r11 (low): a rewrite planned before the table stamped an
     unsupported writer feature must refuse at commit time — the
     _commit_rewrite retry loop re-validates properties whenever the
     log advanced past the prepare snapshot (same rule as tx_write's
     revalidate)."""
     from distributed_mapreduce__spark.sources.txlog import (
-        _commit_rewrite,
-        _prepare_merge,
-        _replay,
+        tx_merge,
         tx_set_properties,
     )
 
     t = str(tmp_path / "t")
     tx_write(_df(spark, 0, 10, "a").coalesce(1), t)
-    snap = _replay(spark, t)
-    prep = _prepare_merge(
-        spark, t, _df(spark, 3, 5, "upd"), "id", False, snap
-    )
     # the table is upgraded while the merge is in flight
-    tx_set_properties(spark, t, {"writer.features": ["quantum-mor"]})
+    during_publish(lambda: tx_set_properties(
+        spark, t, {"writer.features": ["quantum-mor"]}
+    ))
     with pytest.raises(RuntimeError, match="quantum-mor"):
-        _commit_rewrite(
-            spark, t, prep["added"], prep["touched"],
-            prep["snap_version"], None, "merge", stats=prep["stats"],
-            conflict_keys=prep["conflict_keys"], extra=prep["extra"],
-        )
+        tx_merge(_df(spark, 3, 5, "upd"), t, "id", cdf=False)
     # nothing committed: the table still reads as before
     assert _ids(spark, t) == list(range(10))
