@@ -190,34 +190,14 @@ def tx_multi(
     # deterministic participant order so concurrent retries of the
     # same txn converge instead of deadlocking on different prefixes
     for path in sorted(writes):
-        if (prior := _committed_txns(spark, path).get(table_txn)) is not None:
-            versions[path] = prior  # resumed from a crashed attempt
-            continue
         mode = (modes or {}).get(path, "append")
-        part_by = None
-        try:
-            psnap = _replay(spark, path)
-        except FileNotFoundError:
-            psnap = None
-        if psnap is not None:
-            # same writer-feature + CHECK-constraint guards as every
-            # single-table write (merge validates inside its body)
-            _check_writer_features(psnap.properties, path)
-            if mode != "merge":
-                _check_constraints(
-                    writes[path], psnap.properties, path,
-                    f"tx_multi participant ({mode})",
-                )
         if mode == "merge":
-            if psnap is None:
-                raise FileNotFoundError(
-                    f"modes[{path!r}]='merge' but the table does not "
-                    "exist; merge needs live rows to upsert into"
-                )
-            # the one MERGE body (validation, pruning, staging, CDF
-            # sidecar, writer-feature stamps); only the commit differs:
-            # it carries the multi marker, so it stays invisible until
-            # the coordinator record lands. No clauses: the upsert
+            # the one MERGE body: its prelude replays the table, returns
+            # the version of a table_txn a crashed attempt committed and
+            # checks writer features; it validates, prunes, stages and
+            # writes the CDF sidecar. Only the commit differs: it
+            # carries the multi marker, so it stays invisible until the
+            # coordinator record lands. No clauses: the upsert
             cl = (merge_clauses or {}).get(path)
             clauses = [None] * 3 if cl is None else [
                 list(cl.get(k) or []) for k in (
@@ -225,13 +205,34 @@ def tx_multi(
                     "when_not_matched_by_source",
                 )
             ]
-            versions[path] = _merge(
-                writes[path], path, merge_keys[path], table_txn, None,
-                *clauses,
-                extra={"multi": {"coordinator": coordinator, "txid": txid}},
-                max_retries=max_retries,
-            )
+            marker = {"multi": {"coordinator": coordinator, "txid": txid}}
+            try:
+                versions[path] = _merge(
+                    writes[path], path, merge_keys[path], table_txn, None,
+                    *clauses, extra=marker, max_retries=max_retries,
+                )
+            except FileNotFoundError as e:
+                raise FileNotFoundError(
+                    f"modes[{path!r}]='merge' but the table does not "
+                    f"exist; merge needs live rows to upsert into ({e})"
+                ) from e
             continue
+        if (prior := _committed_txns(spark, path).get(table_txn)) is not None:
+            versions[path] = prior  # resumed from a crashed attempt
+            continue
+        part_by = None
+        try:
+            psnap = _replay(spark, path)
+        except FileNotFoundError:
+            psnap = None
+        if psnap is not None:
+            # same writer-feature + CHECK-constraint guards as every
+            # single-table write
+            _check_writer_features(psnap.properties, path)
+            _check_constraints(
+                writes[path], psnap.properties, path,
+                f"tx_multi participant ({mode})",
+            )
         if mode == "append":
             # same schema-on-write + partition-inheritance contract as
             # tx_write (txlog.py); overwrites reset layout like tx_write

@@ -3373,10 +3373,13 @@ def tx_merge(
     keys never match (they flow to NOT MATCHED); multiple source rows
     matching one target row raise; duplicate UNMATCHED source keys
     all insert. Unlike the unconditional upsert, the clause form does
-    NOT require unique/non-NULL source keys up front. The upsert IS the
+    NOT require unique/non-NULL source keys up front. The upsert is the
     clause list ``when_matched=[{"action": "update"}],
-    when_not_matched=[{}]`` plus those refusals and its schema check:
-    both forms run one body (see :func:`_merge`).
+    when_not_matched=[{}]`` plus those refusals and its schema check,
+    save one difference: it replaces by key, so a key the table holds
+    on several rows ends as the one source row (the clause form
+    updates each of them). Both forms run one body (see
+    :func:`_merge`).
     """
     return _merge(
         updates, path, key_col, txn, cdf,
@@ -3458,7 +3461,9 @@ def _merge(
     marker) and SQL ``MERGE``. No clause list at all is the
     unconditional upsert — ``[UPDATE SET *]`` / ``[INSERT *]`` over a
     source whose keys are non-NULL and unique and whose fields equal
-    the table's, all refused up front otherwise.
+    the table's, all refused up front otherwise; it replaces by key
+    (the target's rows on a source key give way to the source row), so
+    its rows are the survivors' anti-join plus the source.
 
     Plan, not row-at-a-time: matched and by-source target rows resolve
     their first-matching clause through ONE left-outer equi-join and a
@@ -3562,6 +3567,18 @@ def _merge(
 
         def split(old):
             keep, arms = [], []
+            if upsert and old is not None:
+                # the upsert REPLACES by key: every target row on a
+                # source key gives way to that key's one source row, so
+                # a key the target holds twice ends as one row
+                ks, ok = source.select(*keys_l), old.select(*keys_l)
+                return _union([
+                    old.join(ks, keys_l, "left_anti"), source
+                ]), [
+                    ("update_preimage", old.join(ks, keys_l, "semi")),
+                    ("update_postimage", source.join(ok, keys_l, "semi")),
+                    ("insert", source.join(ok, keys_l, "left_anti")),
+                ]
             if old is not None:
                 if wm and has_dup and (
                     source.join(old.select(*keys_l), keys_l, "semi")
@@ -4359,9 +4376,12 @@ def tx_changes_cdf(
                     "_change_type", F.lit("update_preimage")
                 )
                 continue
-            yield v, "cdf", _change_rows(
-                pre, _id_rows(snap, c["add"], c.get("row_bases") or {})
-            )
+            yield v, "cdf", _change_rows([
+                ("update_preimage", pre),
+                ("update_postimage", _id_rows(
+                    snap, c["add"], c.get("row_bases") or {}
+                )),
+            ])
             continue
         if (
             c["action"] in ("merge", "delete", "update")
@@ -4932,14 +4952,16 @@ def _mutation_prelude(
     refuse_mor: bool = True, refuse_dv: "str | None" = None,
 ) -> "tuple[_Snapshot, bool | None, int | None]":
     """``(snapshot, cdf, prior)``: ``prior`` is the version ``txn``
-    already committed at (the caller returns it). Otherwise checks
+    already committed at (the caller returns it), before any check: a
+    retry of a committed txn is a read-only no-op, even after the
+    table stamped a writer feature this build lacks. Otherwise checks
     writer features, refuses live equality tombstones (``refuse_mor``)
     and live deletion vectors (``refuse_dv``: the caller's name in the
     message) and resolves ``cdf=None`` from the table property."""
     snap = _replay(spark, path)  # also the existence check
-    _check_writer_features(snap.properties, path)
     if txn is not None and (prior := snap.txns.get(txn)) is not None:
         return snap, cdf, prior
+    _check_writer_features(snap.properties, path)
     for who, live, what in (
         (op, refuse_mor and snap.mor, "equality tombstones"),
         (refuse_dv, refuse_dv and snap.dv, "deletion vectors"),
@@ -5109,6 +5131,8 @@ def _cow_tail(
     written back drop it: a rewrite mints fresh ids). ``keys`` (MERGE,
     DELETE by key) key the CDF entry and the stats; ``extra`` joins
     the commit (a multi-table marker)."""
+    from pyspark.sql import functions as F
+
     with_ids = cdf and _row_tracking_on(snap.properties)
     old = (
         _read_with_mor(spark, path, snap, touched, with_ids=with_ids)
@@ -5131,9 +5155,15 @@ def _cow_tail(
         revalidate(snap.properties)
         payload = {}
         if cdf:
+            rows = _change_rows(arms) if arms else None
+            if with_ids and rows is not None and _ROW_ID not in rows.columns:
+                # nothing was read (insert-only, or no file overlaps):
+                # the column still marks the sidecar as one whose NULL
+                # ids the feed rebuilds from the commit's bases
+                rows = rows.withColumn(_ROW_ID, F.lit(None).cast("long"))
             payload["cdf"] = {
                 "files": _stage_cdf(
-                    _to_physical(_change_rows(arms), snap.schema), path
+                    _to_physical(rows, snap.schema), path
                 ) if arms else [],
                 "key": keys if keys is None or len(keys) > 1 else keys[0],
             }

@@ -3,11 +3,11 @@ tx_delete_where, tx_delete, tx_delete_positions, and MERGE through its
 one body) shares one prelude, one deletion-vector tail and one
 copy-on-write tail. These tests pin what the shared pieces promise: a
 WHERE condition is deterministic (the single-evaluation checkpoints
-rely on it), copy-on-write change rows carry stable row ids on tracked
-tables, the checkpoints are released when the op returns, the Spark
-job count of each verb and merge flavor, merge's key refusals, and
-that the DV sidecar read, the stats prune and the merge body each stay
-in one place."""
+rely on it), change rows carry stable row ids on tracked tables, the
+checkpoints are released when the op returns, the Spark job count of
+each verb and merge flavor, merge's key refusals, the upsert's
+replace-by-key rows, and that the DV sidecar read, the stats prune and
+the merge body each stay in one place."""
 
 from __future__ import annotations
 
@@ -226,37 +226,37 @@ def _multi_merge(spark, t):
     )
 
 
-#: merge flavor -> (op, row-tracked table, most Spark jobs, jobs when
-#: merge had two bodies). Same 4-file, 1,000-row table as JOB_PINS;
-#: CDF on unless noted. One body may cost no flavor a job. Counted at
-#: 4 and 8 cores; at 2, AQE plans update_insert one job lower.
+#: merge flavor -> (op, row-tracked table, Spark jobs). Same 4-file,
+#: 1,000-row table as JOB_PINS; CDF on unless noted. Counted at 4 and 8
+#: cores; at 2, AQE plans update_insert one job lower.
 MERGE_JOB_PINS = {
-    "upsert": (_merge(), False, 12, 13),
-    "upsert/nocdf": (_merge(cdf=False), False, 9, 9),
-    "upsert/tracked": (_merge(), True, 14, 15),
-    "upsert/tracked/nocdf": (_merge(cdf=False), True, 9, 9),
+    "upsert": (_merge(), False, 11),
+    "upsert/nocdf": (_merge(cdf=False), False, 8),
+    "upsert/tracked": (_merge(), True, 12),
+    "upsert/tracked/nocdf": (_merge(cdf=False), True, 8),
     "update_insert": (_merge(
         when_matched=[{"condition": "s.v > 3", "set": {"tag": "s.tag"}}],
         when_not_matched=[{}],
-    ), False, 13, 20),
+    ), False, 13),
     "by_source_delete": (_merge(
         when_matched=[{"action": "update"}],
         when_not_matched_by_source=[
             {"action": "delete", "condition": "t.v = 3"}
         ],
-    ), False, 12, 15),
-    "insert_only": (_merge(when_not_matched=[{}]), False, 7, 10),
-    "multi": (_multi_merge, False, 13, 14),
+    ), False, 12),
+    "insert_only": (_merge(when_not_matched=[{}]), False, 7),
+    "multi": (_multi_merge, False, 12),
 }
 
 
 @pytest.mark.parametrize("case", sorted(MERGE_JOB_PINS))
 def test_merge_job_counts_pinned(spark, table, case):
-    fn, tracked, want, two_bodies = MERGE_JOB_PINS[case]
+    fn, tracked, want = MERGE_JOB_PINS[case]
     if tracked:
         tx_enable_row_tracking(spark, table)
     got = _jobs(spark, lambda: fn(spark, table))
-    assert got <= want <= two_bodies, f"{case}: {got} jobs (pinned {want})"
+    ok = {want - 1, want} if case == "update_insert" else {want}
+    assert got in ok, f"{case}: {got} jobs (pinned {want})"
 
 
 def test_clause_merge_duplicate_and_null_keys_raise_multiple_match(
@@ -295,6 +295,103 @@ def test_upsert_refuses_null_and_duplicate_keys(spark, table):
     ):
         txlog.tx_merge(_src(spark).unionByName(_src(spark)), table, "id")
     assert _replay(spark, table).version == v0
+
+
+def _feed(spark, t, v):
+    """The one change frame of version ``v``, by stable row id."""
+    (frame,) = [
+        df for ver, _, df in tx_changes_cdf(
+            spark, t, since_version=v - 1, with_row_ids=True
+        ) if ver == v
+    ]
+    return frame
+
+
+def test_tracked_merge_reading_no_file_feeds_insert_row_ids(
+    spark, tmp_path
+):
+    """On a tracked table with CDF on, a merge that reads no target
+    file (insert-only clauses; an upsert whose keys miss every file)
+    still feeds each insert with the id its commit minted."""
+    t = _tracked(spark, tmp_path)
+    for lo, clauses in ((1000, {"when_not_matched": [{}]}), (2000, {})):
+        src = _df(spark, lo + 10).filter(f"id >= {lo}")
+        v = txlog.tx_merge(src, t, "id", **clauses)
+        ids = {
+            r.id: r._row_id
+            for r in tx_scan_with_row_ids(spark, t).collect()
+        }
+        rows = _feed(spark, t, v).collect()
+        assert {r._change_type for r in rows} == {"insert"}
+        assert {r.id: r._row_id for r in rows} == {
+            i: ids[i] for i in range(lo, lo + 10)
+        }
+        assert None not in {r._row_id for r in rows}
+
+
+def test_dv_update_feeds_pre_and_post_row_ids(spark, tmp_path):
+    """A deletion-vector UPDATE on a tracked table feeds each pre-image
+    with the row's old id and each post-image with its new one."""
+    t = _tracked(spark, tmp_path)
+
+    def ids():
+        return {
+            r.id: r._row_id
+            for r in tx_scan_with_row_ids(spark, t).collect()
+        }
+
+    before = ids()
+    v = tx_update(spark, t, "v = 3", {"tag": "'u'"})
+    after = ids()
+    got = {
+        (r._change_type, r.id): r._row_id
+        for r in _feed(spark, t, v).collect()
+    }
+    hit = [i for i in before if i % 10 == 3]
+    assert got == {
+        **{("update_preimage", i): before[i] for i in hit},
+        **{("update_postimage", i): after[i] for i in hit},
+    }
+
+
+def test_upsert_replaces_every_target_row_on_a_key(spark, tmp_path):
+    """The upsert replaces by key: a key the table holds on two rows
+    ends as the one source row, with both rows as pre-images and one
+    post-image. The clause form updates each matched row instead."""
+    src = _df(spark, 21).filter("id in (3, 20)").withColumn(
+        "tag", F.lit("s")
+    )
+    got = {}
+    for form, clauses in (
+        ("upsert", {}),
+        ("clauses", {"when_matched": [{"action": "update"}],
+                     "when_not_matched": [{}]}),
+    ):
+        t = str(tmp_path / form)
+        tx_write(_df(spark, 10), t, stats_cols=["id"])
+        tx_write(_df(spark, 10).filter("id = 3").withColumn(
+            "tag", F.lit("dup")), t)
+        v = txlog.tx_merge(src, t, "id", **clauses)
+        got[form] = (
+            sorted((r.id, r.tag) for r in tx_read(spark, t).collect()
+                   if r.id in (3, 20)),
+            sorted(
+                (r._change_type, r.id, r.tag) for r in next(
+                    tx_changes_cdf(spark, t, since_version=v - 1)
+                )[2].collect()
+            ),
+        )
+    assert got["upsert"] == (
+        [(3, "s"), (20, "s")],
+        [("insert", 20, "s"), ("update_postimage", 3, "s"),
+         ("update_preimage", 3, "dup"), ("update_preimage", 3, "x")],
+    )
+    assert got["clauses"] == (
+        [(3, "s"), (3, "s"), (20, "s")],
+        [("insert", 20, "s"), ("update_postimage", 3, "s"),
+         ("update_postimage", 3, "s"), ("update_preimage", 3, "dup"),
+         ("update_preimage", 3, "x")],
+    )
 
 
 def _package_hits(pattern: str) -> "set[tuple[str, int]]":

@@ -1783,10 +1783,14 @@ def test_idempotent_retry_survives_feature_upgrade(spark, tmp_path):
         tx_set_properties,
     )
 
+    from distributed_mapreduce__spark.sources.txlog import tx_merge
+
     t = str(tmp_path / "t")
     v = tx_write(_df(spark, 0, 5, "a"), t, txn="job-42")
+    vm = tx_merge(_df(spark, 0, 2, "m"), t, "id", txn="job-44")
     tx_set_properties(spark, t, {"writer.features": ["from-the-future"]})
     assert tx_write(_df(spark, 0, 5, "a"), t, txn="job-42") == v
+    assert tx_merge(_df(spark, 0, 2, "m"), t, "id", txn="job-44") == vm
     with pytest.raises(RuntimeError, match="from-the-future"):
         tx_write(_df(spark, 5, 6, "b"), t, txn="job-43")
     assert _ids(spark, t) == [0, 1, 2, 3, 4]
