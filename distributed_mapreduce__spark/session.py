@@ -36,6 +36,43 @@ Janino plus the JIT again. Measured on a 4-vCPU VM (local[4]):
   ~3.5 MB a pass from the recompiles); headline + ``new_ops`` 206 MB
   (204 MB with 1,000 entries).
 
+JIT policy (``spark.driver.extraJavaOptions``, fixed at
+:data:`DRIVER_JAVA_OPTIONS`; ``extra_conf`` overrides it). HotSpot
+runs a method in C1 once it is warm and recompiles it with C2 once it
+crosses the tier-4 thresholds (JDK 17: 5,000 invocations, or at least
+600 once invocations plus loop back-edges pass 15,000; a loop is
+compiled on stack after 40,000 back-edges). Catalyst,
+py4j and the generated classes run a few thousand times per pass, so a
+short session kept C2-compiling them through its second pass and never
+ran long enough to repay it: a traced warm ``batch`` pass spent 16.8 s
+in ``jvm.jit_s`` against 4.1 CPU-s of executor work. All four
+thresholds are scaled by one factor. Measured on a 4-vCPU VM
+(local[4]), perfbench ``batch`` ``cpu_s`` (``--seconds 30``, untraced,
+one seed per round, variants alternating in each round, every run
+correct):
+
+- factor 1 (the defaults), 10 runs: median 28.93 (q1 28.42, q3 30.30);
+- x2, 6 runs: 25.02 (24.80, 25.99);
+- x3, 10 runs: 23.05 (22.13, 23.30), below the default on 9 of 10 seeds;
+- x5, 10 runs: 22.21 (21.20, 22.82);
+- x10, 3 runs: 24.10 (23.67, 26.01); likely because hot methods run
+  longer as tier-3 C1 code, which carries full profiling.
+
+x3 is the smallest factor whose median is within the defaults' quartile
+spread (1.88) of the best one (x5); a smaller factor delays C2 the
+least in a long session. Rejected, one or two runs each:
+
+- ``TieredStopAtLevel=1`` (C1 only): ``batch`` 17.1-18.3 CPU-s, but
+  the third headline pass at sf0.1 took 62.8 CPU-s against 27.4 and a
+  1.5e9-row hash aggregate 264 CPU-s against 14;
+- ``CompileThresholdScaling=5`` (every tier's thresholds): ``batch``
+  22.8-23.8 CPU-s, but ``setup_s`` +13 %, since C1 also comes later;
+- ``CICompilerCount=2``: ``batch`` 23.8-26.9 CPU-s.
+
+Driver only: in local mode the executors are threads of the driver
+JVM, so these flags cover them; no workload measures a separate
+executor JVM, so ``spark.executor.extraJavaOptions`` is left alone.
+
 The conf is static: it applies only to a session this factory starts.
 A session the caller supplies (``__spark_entry__.entry(spark)``, or one
 already running when ``getOrCreate`` is called) keeps whatever it was
@@ -50,6 +87,16 @@ from pyspark.sql import SparkSession
 
 #: ``spark.sql.codegen.cache.maxEntries``: sized in the module docstring.
 CODEGEN_CACHE_ENTRIES = 2000
+
+#: ``spark.driver.extraJavaOptions``: HotSpot's four tier-4 (C2)
+#: thresholds at 3x their JDK 17 defaults (5000, 600, 15000, 40000);
+#: the factor is measured in the module docstring.
+DRIVER_JAVA_OPTIONS = (
+    "-XX:Tier4InvocationThreshold=15000"
+    " -XX:Tier4MinInvocationThreshold=1800"
+    " -XX:Tier4CompileThreshold=45000"
+    " -XX:Tier4BackEdgeThreshold=120000"
+)
 
 
 def default_parallelism() -> int:
@@ -74,6 +121,9 @@ def build_session(
     - Arrow enabled: fast pandas interchange for the Pandas-UDF operators.
     - Generated-code cache of :data:`CODEGEN_CACHE_ENTRIES`: a repeated
       query reuses its compiled classes (module docstring).
+    - Driver JVM started with :data:`DRIVER_JAVA_OPTIONS`: C2 compiles
+      only code hotter than a few thousand calls a pass (module
+      docstring).
     """
     cpus = default_parallelism()
     if master is None:
@@ -109,6 +159,7 @@ def build_session(
             os.environ.get("SPARK_GRAFT_MAX_PARTITION_BYTES", str(4 * 1024 * 1024)),
         )
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "12g"))
+        .config("spark.driver.extraJavaOptions", DRIVER_JAVA_OPTIONS)
         .config("spark.ui.enabled", os.environ.get("SPARK_GRAFT_UI", "false"))
     )
     for k, v in (extra_conf or {}).items():

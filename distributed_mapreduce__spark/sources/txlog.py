@@ -2070,10 +2070,12 @@ def _write_checkpoint(spark, path: str, version: int) -> bool:
     the fold range — folding it would freeze a still-undecided
     transaction as absent, and a later coordinator publish would then
     never surface its files. Checkpoints are an optimization; skipping
-    is always safe."""
-    if _pending_multi(spark, path, version):
+    is always safe. Folds the log once when ``version`` is the tip,
+    else twice (the tip fold supplies the txn map)."""
+    tip = _replay(spark, path)
+    snap = tip if tip.version == version else _replay(spark, path, version)
+    if snap.pending:
         return False
-    snap = _replay(spark, path, version)
     eps, mor = snap.eps, snap.mor
     files = sorted(eps)
     fs = hadoop_fs(spark, path)[0]
@@ -2089,7 +2091,7 @@ def _write_checkpoint(spark, path: str, version: int) -> bool:
         # txn map folded at LATEST, not at `version`: vacuum writes
         # pivot checkpoints below the tip, and idempotent-retry dedup
         # must keep seeing txns committed above the pivot
-        "txns": _committed_txns(spark, path),
+        "txns": tip.txns,
         "stats": live_stats,
     }
     if snap.schema is not None:
@@ -2990,6 +2992,8 @@ def tx_vacuum(
     live_dvs: set = set()
     live_blooms: set = set()
     for v in retained:
+        # the last retained version is the tip: its fold's `pending`
+        # is every unresolved multi-table commit in the log
         snap_v = _replay(spark, path, v)
         live |= {_abs(path, f) for f in snap_v.eps}
         live_tombs |= {
@@ -3008,8 +3012,7 @@ def tx_vacuum(
     folded = _write_checkpoint(spark, path, pivot)
     fs = hadoop_fs(spark, path)[0]
     live |= {
-        _abs(path, f)
-        for _, c in _pending_multi(spark, path) for f in c.get("add", [])
+        _abs(path, f) for _, c in snap_v.pending for f in c.get("add", [])
     }
 
     def _in_grace(hpath) -> bool:

@@ -230,3 +230,34 @@ def test_merge_log_reads_do_not_grow_with_the_log(
         )
         got.append(fs.take())
     assert got[0] == got[1]
+
+
+def test_checkpoint_append_reads_do_not_grow_with_the_log(
+    spark, tmp_path, monkeypatch
+):
+    """The append that writes a checkpoint folds the log from the
+    previous checkpoint, not from genesis: the one writing the
+    checkpoint at version 19 and the one writing it at version 29 read
+    the same commit files."""
+    fs = _CountingFS()
+    monkeypatch.setattr(txlog_core, "_LOCAL_FS", fs)
+    t = str(tmp_path / "t")
+    got = []
+    for i in range(30):
+        if i in (19, 29):
+            fs.take()
+        tx_write(
+            spark.range(10 * i, 10 * i + 10).select(
+                "id", F.lit("a").alias("tag")
+            ),
+            t,
+        )
+        if i in (19, 29):
+            got.append(fs.take())
+    ckpts = sorted(
+        int(name.split(".")[0])
+        for name in os.listdir(os.path.join(t, "_txlog"))
+        if name.endswith(".checkpoint.json")
+    )
+    assert ckpts == [9, 19, 29]
+    assert got[0]["commit"] == got[1]["commit"], got
