@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Benchmark harness: run the headline queries at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and print ONE
-JSON line: {"metric": ..., "value": total_sec, "unit": "sec",
-"queries": {name: sec}, "sf": ...}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+CPUs this process may run on) and print ONE JSON line: {"metric": ...,
+"value": total_sec, "unit": "sec", "queries": {name: sec}, "sf": ...}.
 
 Each query is forced end-to-end with a noop sink write (full plan
 execution, no driver-side collect bottleneck).

@@ -100,8 +100,11 @@ DRIVER_JAVA_OPTIONS = (
 
 
 def default_parallelism() -> int:
-    """Worker-thread count for local mode; env-overridable by the driver."""
-    return int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    """Worker-thread count for local mode: ``SPARK_GRAFT_CPUS`` when
+    set, else the CPUs this process may run on — more threads than
+    cores only queue, and load the box the run is measured on."""
+    cpus = os.environ.get("SPARK_GRAFT_CPUS")
+    return int(cpus) if cpus else len(os.sched_getaffinity(0))
 
 
 def build_session(

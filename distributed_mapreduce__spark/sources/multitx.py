@@ -55,13 +55,15 @@ reader ever sees table A's new snapshot with table B's old one.
 ``cdf.enabled``, the full conflict checks) and commits it
 provisionally; the coordinator record makes every table's merge
 visible at once. Cross-table serializability comes from two guards in
-``txlog._commit_rewrite`` / ``_concurrent_append_conflicts`` that
-treat PENDING multi commits as conflicts: a single-table rewrite
-overlapping a pending transaction's removed files aborts loudly
-(instead of committing a rewrite that would double-apply the moment
-the record lands), and a key-targeted rewrite sees pending adds in
-its key range exactly like post-anchor appends. The price: while a
-multi merge is pending, overlapping rewrites on its participants are
+``txlog._commit_rewrite`` — the one commit body of every rewrite and
+deletion-vector DELETE/UPDATE — and its
+``_concurrent_append_conflicts`` that treat PENDING multi commits as
+conflicts: a single-table rewrite or DV touching a pending
+transaction's removed files aborts loudly (instead of committing a
+change that would double-apply, or be lost, the moment the record
+lands), and a key-targeted rewrite sees pending adds in its key range
+exactly like post-anchor appends. The price: while a multi merge is
+pending, overlapping rewrites and DVs on its participants are
 blocked until it resolves (commit or abort) — the same table-level
 courtesy Delta's coordinated commits demand, and bounded by the same
 operator controls (:func:`tx_multi_abort`, ``tx_multi_pending``). A

@@ -3731,7 +3731,8 @@ def _concurrent_append_conflicts(
     would duplicate merged keys exactly like a post-anchor append.
     ``snap_now`` is the commit-time snapshot: its fold holds those
     pending commits and the stats, so only the commits after
-    ``snap_version`` are read, once for all key columns."""
+    ``snap_version`` are read, once for all key columns (none while
+    the log has not moved)."""
 
     def overlaps(f, c, key_col, lo, hi) -> bool:
         if key_col is None:
@@ -3756,7 +3757,10 @@ def _concurrent_append_conflicts(
 
     later = [
         *[(v, c) for v, c in snap_now.pending if v <= snap_version],
-        *_commits(spark, path, since=snap_version),
+        *(
+            _commits(spark, path, since=snap_version)
+            if snap_now.version > snap_version else []
+        ),
     ]
     return [
         f
@@ -3772,11 +3776,10 @@ def _commit_rewrite(
     path: str,
     added: list[str],
     removed: list[str],
-    snap_version: int,
+    snap: "_Snapshot",
     txn: str | None,
     action: str,
     *,
-    planned_rt: bool,
     max_retries: int = 20,
     stats: dict | None = None,
     conflict_keys: "tuple | list[tuple] | None" = None,
@@ -3785,70 +3788,84 @@ def _commit_rewrite(
     blooms: dict | None = None,
     row_ids_materialized: bool = False,
 ) -> int:
-    """Commit a rewrite (merge/delete/compact): remove+add in one
-    version, with two conflict checks run at commit time, every retry:
+    """The one commit body of every data-changing mutation planned on
+    ``snap``: a rewrite (copy-on-write, merge, compact, zorder,
+    apply_deletes) removes+adds in one version; a deletion-vector
+    DELETE/UPDATE carries a ``dv`` entry in ``extra`` (its sidecars
+    and the data files they target), removes nothing and may add
+    post-images. The touched files — ``removed`` plus the DV targets —
+    are conflict-checked at commit time, every attempt:
 
-    - still-live: if anything we remove was already removed by a
-      commit after our snapshot, abort loudly (concurrent rewrite).
-    - ``conflict_keys=(key_col, lo, hi)``: if a commit after our
-      snapshot ADDED files whose key range overlaps the rewrite's
-      target range, abort loudly (concurrent append — committing
-      anyway would duplicate merged keys / resurrect deleted ones;
-      Delta raises ConcurrentAppendException for exactly this).
+    - still-live: anything touched that a commit after ``snap``
+      removed is a concurrent rewrite (a DV's positions address the
+      old file's row order).
+    - pending multi-table: a PENDING multi-table commit's removes are
+      invisible to the still-live check (replay skips unresolved
+      commits), but the coordinator record applies them retroactively
+      at their version — touching the same files would resurrect rows
+      the pending transaction rewrote (or vice versa) the instant it
+      resolves. The operator resolves it (wait, or tx_multi_abort).
+    - row tracking: ``snap``'s tracking state is the one the caller
+      planned under — a preserving rewrite decided
+      ``row_ids_materialized`` against it, a content-changing one that
+      its outputs need fresh bases. If tx_enable_row_tracking lands
+      mid-flight, the fresh-ids branch below would silently
+      re-identify rows the enable commit just backfilled (or mint
+      none), so the commit refuses instead.
+    - tombstones and DVs: a commit's outputs carry ITS add-version and
+      are NEW files no live DV targets, so it must commit against
+      exactly the tombstone set it planned for (``mor_clears``; none
+      unless it is an apply_deletes), and a commit without a ``dv``
+      entry against exactly the DV set it planned to clear
+      (``dv_clears``). A DV commit instead refuses a concurrent DV
+      whose targets meet its own — both chose positions against the
+      same pre-image rows (two UPDATEs double-append post-images; an
+      UPDATE over a concurrent DELETE resurrects the deleted row);
+      DVs on disjoint files commute.
+    - ``conflict_keys=(key_col, lo, hi)``: if a commit after ``snap``
+      ADDED files whose key range overlaps the rewrite's target range,
+      abort loudly (concurrent append — committing anyway would
+      duplicate merged keys / resurrect deleted ones; Delta raises
+      ConcurrentAppendException for exactly this).
 
-    Whenever the log has advanced past ``snap_version`` (the version
-    the caller's pre-stage checks were anchored at), the freshly
-    replayed table PROPERTIES are re-validated before committing:
+    The log is replayed only when it has moved past the snapshot last
+    checked; each such replay also re-validates the table PROPERTIES:
     writer features always (a table upgraded mid-flight must refuse,
     same rule as tx_write's retry loop), plus the caller's
-    ``revalidate(props)`` hook for op-specific checks — the
-    copy-on-write tail re-runs CHECK constraints on the rows the op
-    writes anew, so a constraint added while a merge was in flight is
-    enforced on that merge's rows instead of slipping past the
-    add-time validation (which only saw the pre-merge table).
-
-    ``planned_rt`` is the row-tracking state the caller PLANNED under:
-    a preserving rewrite decided row_ids_materialized against that
-    snapshot, and a content-changing one decided its outputs need no
-    bases — if tx_enable_row_tracking lands mid-flight, taking the
-    fresh-ids branch below would silently re-identify rows the enable
-    commit just backfilled, so the commit refuses instead."""
-    anchor = snap_version
-    rt_counts: "dict | None" = None
+    ``revalidate(props)`` hook — the mutation tails re-run CHECK
+    constraints on the rows the op writes anew, so a constraint added
+    while it was in flight is enforced on them instead of slipping
+    past the add-time validation (which only saw the old table)."""
+    extra = extra or {}
+    dv = extra.get("dv")
+    touched = set(removed) | set(dv["targets"] if dv else ())
+    planned_rt = _row_tracking_on(snap.properties)
+    now, rt_counts = snap, None
 
     def build(next_v: int) -> dict:
-        nonlocal anchor, rt_counts
-        snap_now = _replay(spark, path)
-        eps_now, mor_now = snap_now.eps, snap_now.mor
-        if snap_now.version > anchor:
-            _check_writer_features(snap_now.properties, path)
+        nonlocal now, rt_counts
+        if next_v - 1 > now.version:
+            now = _replay(spark, path)
+            _check_writer_features(now.properties, path)
             if revalidate is not None:
-                revalidate(snap_now.properties)
-            anchor = snap_now.version
-        if added and _row_tracking_on(snap_now.properties) != planned_rt:
+                revalidate(now.properties)
+        if added and _row_tracking_on(now.properties) != planned_rt:
             raise RuntimeError(
                 f"conflict: row tracking on {path} was toggled since "
-                f"version {snap_version} (the snapshot this {action} "
+                f"version {snap.version} (the snapshot this {action} "
                 "planned its row-id handling against) — re-run the "
                 f"{action} on the new snapshot"
             )
-        gone = set(removed) - set(eps_now)
+        gone = touched - set(now.eps)
         if gone:
             raise RuntimeError(
                 f"conflict: files rewritten concurrently since version "
-                f"{snap_version}: {sorted(gone)[:3]}... — re-run the "
+                f"{snap.version}: {sorted(gone)[:3]}... — re-run the "
                 f"{action} on the new snapshot"
             )
-        # a PENDING multi-table commit's removes are invisible to the
-        # still-live check above (replay skips unresolved commits),
-        # but the coordinator record applies them retroactively at
-        # their version — committing a rewrite of the same files would
-        # resurrect rows the pending transaction rewrote (or vice
-        # versa) the instant it resolves. Overlap = hard conflict;
-        # the operator resolves it (wait, or tx_multi_abort).
-        for _v, c in snap_now.pending if removed else []:
+        for _v, c in now.pending if touched else []:
             m = c["multi"]
-            clash = set(c.get("remove", [])) & set(removed)
+            clash = set(c.get("remove", [])) & touched
             if clash:
                 raise RuntimeError(
                     f"conflict: pending multi-table transaction "
@@ -3858,28 +3875,31 @@ def _commit_rewrite(
                     "tx_multi_abort it), then re-run on the new "
                     "snapshot"
                 )
-        # a rewrite's outputs carry the REWRITE's add-version, so any
-        # merge-on-read tombstone it didn't fold in would no longer
-        # apply to them — rows would silently dodge their delete. The
-        # rewrite must therefore commit against exactly the tombstone
-        # set it planned for (none, unless it is an apply_deletes).
-        planned = set((extra or {}).get("mor_clears", []))
-        if {t["version"] for t in mor_now} != planned:
+        if {t["version"] for t in now.mor} != set(
+            extra.get("mor_clears", [])
+        ):
             raise RuntimeError(
                 f"conflict: merge-on-read tombstones changed since "
-                f"version {snap_version}; re-run the {action} (or "
+                f"version {snap.version}; re-run the {action} (or "
                 "tx_apply_deletes) on the new snapshot"
             )
-        # same rule for deletion vectors: a rewrite's outputs are NEW
-        # files no live DV targets, so any DV it didn't plan to clear
-        # would silently lose its deletes on the rewritten rows
-        planned_dv = set((extra or {}).get("dv_clears", []))
-        if {d["version"] for d in snap_now.dv} != planned_dv:
+        if dv is None and {d["version"] for d in now.dv} != set(
+            extra.get("dv_clears", [])
+        ):
             raise RuntimeError(
                 f"conflict: deletion vectors changed since version "
-                f"{snap_version}; re-run the {action} (or "
+                f"{snap.version}; re-run the {action} (or "
                 "tx_apply_deletes) on the new snapshot"
             )
+        for d in now.dv if dv is not None else []:
+            clash = touched.intersection(d["targets"])
+            if d["version"] > snap.version and clash:
+                raise RuntimeError(
+                    f"conflict: a concurrent delete/update committed "
+                    f"deletion vectors against files this {action} also "
+                    f"targets: {sorted(clash)[:3]}... — re-plan the "
+                    f"{action} on the new snapshot"
+                )
         if conflict_keys is not None:
             # single (col, lo, hi), a LIST of them (multi-column merge
             # keys: a file conflicts only if it overlaps EVERY key's
@@ -3892,12 +3912,12 @@ def _commit_rewrite(
                 else list(conflict_keys)
             )
             clashing = _concurrent_append_conflicts(
-                spark, path, snap_version, specs, set(added), snap_now
+                spark, path, snap.version, specs, set(added), now
             )
             if clashing:
                 names = [kc for kc, _, _ in specs]
                 raise RuntimeError(
-                    f"conflict: commits after version {snap_version} "
+                    f"conflict: commits after version {snap.version} "
                     f"appended files overlapping the {action}'s "
                     f"{names} range: {sorted(clashing)[:3]}... — "
                     f"re-run the {action} on the new snapshot"
@@ -3908,15 +3928,17 @@ def _commit_rewrite(
             "add": added,
             "remove": removed,
             "txn": txn,
-            "ts": _now(),
         }
+        # field order as each kind has always been logged: a DV commit
+        # carries its stats in ``extra`` and gets ``ts`` last (_commit)
+        if dv is None:
+            payload["ts"] = _now()
         if stats:
             payload["stats"] = stats
         if blooms:
             payload["blooms"] = blooms
-        if extra:
-            payload.update(extra)
-        if added and _row_tracking_on(snap_now.properties):
+        payload.update(extra)
+        if added and _row_tracking_on(now.properties):
             if row_ids_materialized:
                 # preserving rewrite: outputs carry _row_id bytes — a
                 # pre-row-tracking reader would surface them as data
@@ -3932,9 +3954,7 @@ def _commit_rewrite(
                 )
         return payload
 
-    # txn idempotence was settled by the caller's prelude; the payload
-    # still records it
-    return _commit(spark, path, build, None, max_retries)
+    return _commit(spark, path, build, txn, max_retries)
 
 
 def _rewrite_stats(
@@ -4013,7 +4033,7 @@ def tx_compact(
     snap = _replay(spark, path)
     _check_writer_features(snap.properties, path)
     _refuse_mor(snap, path, "tx_compact")
-    files, snap_version = sorted(snap.eps), snap.version
+    files = sorted(snap.eps)
     if len(files) <= 1:
         return None
     fs = hadoop_fs(spark, path)[0]
@@ -4035,11 +4055,10 @@ def tx_compact(
         _to_physical(merged, snap.schema), path, snap.partition_by
     )
     return _commit_rewrite(
-        spark, path, added, chosen, snap_version, None, "compact",
+        spark, path, added, chosen, snap, None, "compact",
         stats=_rewrite_stats(spark, path, chosen, added, None, snap),
         blooms=_rewrite_blooms(spark, path, chosen, added, snap),
         row_ids_materialized=preserve_ids,
-        planned_rt=_row_tracking_on(snap.properties),
     )
 
 
@@ -4558,10 +4577,9 @@ def tx_delete(
         # lets the change feed checkpoint past this as a no-op instead
         # of raising on the 'delete' action.
         return _commit_rewrite(
-            spark, path, [], [], snap.version, txn, "delete",
+            spark, path, [], [], snap, txn, "delete",
             conflict_keys=None if lo is None else (phys_key, lo, hi),
             extra={"cdf": {"files": [], "key": key_col}} if cdf else None,
-            planned_rt=_row_tracking_on(snap.properties),
         )
     key_set = keys.select(key_col).distinct()
     return _cow_tail(
@@ -4619,8 +4637,7 @@ def tx_apply_deletes(spark: SparkSession, path: str) -> int | None:
         # were CoW-deleted or overwritten away): clear them with a
         # metadata-only commit
         return _commit_rewrite(
-            spark, path, [], [], snap.version, None, "apply_deletes",
-            extra=extra, planned_rt=preserve_ids,
+            spark, path, [], [], snap, None, "apply_deletes", extra=extra,
         )
     survivors = _read_with_mor(
         spark, path, snap, touched, with_ids=preserve_ids
@@ -4629,12 +4646,11 @@ def tx_apply_deletes(spark: SparkSession, path: str) -> int | None:
         _to_physical(survivors, snap.schema), path, snap.partition_by
     )
     return _commit_rewrite(
-        spark, path, added, touched, snap.version, None, "apply_deletes",
+        spark, path, added, touched, snap, None, "apply_deletes",
         stats=_rewrite_stats(spark, path, touched, added, None, snap),
         blooms=_rewrite_blooms(spark, path, touched, added, snap),
         row_ids_materialized=preserve_ids,
         extra=extra,
-        planned_rt=preserve_ids,
     )
 
 
@@ -5104,12 +5120,23 @@ def _dv_tail(
                 else [("update_preimage", pre), ("update_postimage", updated)]
             )
             cdf_files = _stage_cdf(_to_physical(rows, snap.schema), path)
-        return _commit_dv(
-            spark, path, snap, sidecars, targets, txn, cdf_files,
-            action=action, added=added,
-            stats=_rewrite_stats(spark, path, targets, added, None, snap),
-            blooms=_rewrite_blooms(spark, path, targets, added, snap),
-            extra_revalidate=None if updated is None else (
+        # a DV commit's fields, in the order it has always logged them
+        extra = {
+            "dv": {"files": sidecars, "targets": targets},
+            "reader": 4,
+            "properties": _writer_feature_delta(
+                snap.properties, {"dv", "cdf"} if cdf else {"dv"}
+            ),
+            "stats": _rewrite_stats(spark, path, targets, added, None, snap),
+            "blooms": _rewrite_blooms(spark, path, targets, added, snap),
+            "cdf": None if cdf_files is None else {
+                "files": cdf_files, "key": None
+            },
+        }
+        return _commit_rewrite(
+            spark, path, added, [], snap, txn, action,
+            extra={k: v for k, v in extra.items() if v},
+            revalidate=None if updated is None else (
                 lambda props: _check_constraints(
                     updated, props, path, "tx_update"
                 )
@@ -5183,122 +5210,14 @@ def _cow_tail(
             _to_physical(keep, snap.schema), path, snap.partition_by
         )
         return _commit_rewrite(
-            spark, path, added, touched, snap.version, txn, action,
+            spark, path, added, touched, snap, txn, action,
             max_retries=max_retries,
             stats=_rewrite_stats(spark, path, touched, added, keys, snap),
             blooms=_rewrite_blooms(spark, path, touched, added, snap),
             conflict_keys=conflict_keys,
-            extra=payload or None,
+            extra=payload,
             revalidate=revalidate,
-            planned_rt=_row_tracking_on(snap.properties),
         )
-
-
-def _commit_dv(
-    spark,
-    path: str,
-    snap: "_Snapshot",
-    sidecars: list[str],
-    targets: list[str],
-    txn: str | None,
-    cdf_files: "list[str] | None",
-    max_retries: int = 20,
-    action: str = "delete",
-    added: "list[str] | None" = None,
-    stats: dict | None = None,
-    blooms: dict | None = None,
-    extra_revalidate=None,
-) -> int:
-    """Commit a deletion-vector delete/update: no files removed — the
-    ``dv`` entry names the KB-scale position sidecars and the exact
-    data files they target; an UPDATE additionally ``add``s the files
-    carrying the rewritten rows, atomically in the same commit.
-    Commit-time revalidation (every time the log advances past the
-    prepare snapshot): writer features, no concurrent equality
-    tombstone, every target STILL LIVE — a concurrent rewrite of a
-    target would orphan our positions (they address the old file's
-    row order), so it is a hard conflict, the same rule
-    ``_commit_rewrite`` enforces for removes — plus the caller's
-    ``extra_revalidate(props)`` hook (tx_update re-runs CHECK
-    constraints on its post-images)."""
-    used = {"dv"} | ({"cdf"} if cdf_files is not None else set())
-    delta = _writer_feature_delta(snap.properties, used)
-    # row tracking: UPDATE post-images are new row versions — fresh
-    # ids from this commit's reserved range
-    rt_counts = (
-        _count_rows_per_file(spark, path, added)
-        if added and _row_tracking_on(snap.properties)
-        else None
-    )
-    # DV entries visible at PLAN time, by identity — any entry beyond
-    # these seen at commit time was committed concurrently
-    planned_dv = {(d["version"], tuple(d["files"])) for d in snap.dv}
-
-    def revalidate() -> None:
-        now = _replay(spark, path)
-        _check_writer_features(now.properties, path)
-        if extra_revalidate is not None:
-            extra_revalidate(now.properties)
-        if now.mor:
-            raise RuntimeError(
-                f"conflict: equality tombstones committed to {path} "
-                f"since the {action} was planned; run tx_apply_deletes "
-                "and re-run"
-            )
-        # A DV committed since planning whose targets intersect ours is
-        # a write-write conflict: both sides chose positions against the
-        # same pre-image rows (two UPDATEs double-append post-images; an
-        # UPDATE over a concurrent DELETE resurrects the deleted row as
-        # its post-image). Delta rejects this as a concurrent
-        # modification; so do we — the same planned-set rule
-        # _commit_rewrite applies to removes. Disjoint-target DVs
-        # commute (position marks on different files) and still land.
-        tgt = set(targets)
-        for d in now.dv:
-            if (d["version"], tuple(d["files"])) in planned_dv:
-                continue
-            clash = tgt.intersection(d["targets"])
-            if clash:
-                raise RuntimeError(
-                    f"conflict: a concurrent delete/update committed "
-                    f"deletion vectors against files this {action} also "
-                    f"targets: {sorted(clash)[:3]}... — re-plan the "
-                    f"{action} on the new snapshot"
-                )
-        gone = [f for f in targets if f not in now.eps]
-        if gone:
-            raise RuntimeError(
-                f"conflict: files targeted by this {action} were "
-                f"rewritten concurrently: {gone[:3]}... — re-run the "
-                f"{action} on the new snapshot"
-            )
-
-    def build(next_v: int) -> dict:
-        payload = {
-            "version": next_v,
-            "action": action,
-            "add": added or [],
-            "remove": [],
-            "txn": txn,
-            "dv": {"files": sidecars, "targets": targets},
-            "reader": 4,
-        }
-        if delta:
-            payload["properties"] = delta
-        if stats:
-            payload["stats"] = stats
-        if blooms:
-            payload["blooms"] = blooms
-        if cdf_files is not None:
-            payload["cdf"] = {"files": cdf_files, "key": None}
-        if rt_counts is not None:
-            payload["row_bases"] = _fresh_row_bases(next_v, rt_counts)
-        return payload
-
-    return _commit(
-        spark, path, build, txn, max_retries,
-        revalidate=revalidate, checked_at=snap.version,
-    )
 
 
 def _commit_noop(
@@ -5310,11 +5229,12 @@ def _commit_noop(
     for idempotence, and with ``cdf`` an empty CDF entry lets change
     feeds checkpoint past the no-op), or a merge-on-read tombstone
     carried in ``fields``. Commits directly — NOT via
-    ``_commit_rewrite`` — because such a commit adds and removes
-    nothing, so the rewrite conflict checks (notably the
-    planned-DV/tombstone set rule, which refuses while delete debt is
-    live) do not apply to it: a no-match delete on a table carrying
-    DVs must be a clean no-op, not a conflict."""
+    ``_commit_rewrite``, the one body every data-changing mutation
+    commits through — because such a commit touches no data file, so
+    its conflict checks (notably the planned-DV/tombstone set rule,
+    which refuses while delete debt is live) do not apply to it: a
+    no-match delete on a table carrying DVs must be a clean no-op, not
+    a conflict."""
     if cdf:
         fields = {"cdf": {"files": [], "key": None}}
 
@@ -5659,8 +5579,7 @@ def tx_optimize_zorder(
     snap = _replay(spark, path)
     _check_writer_features(snap.properties, path)
     _refuse_mor(snap, path, "tx_optimize_zorder")
-    eps, snap_version = snap.eps, snap.version
-    files = sorted(eps)
+    files = sorted(snap.eps)
     if not files:
         raise FileNotFoundError(f"nothing to optimize at {path}")
     spec = {"cols": list(cols), "bits": bits}
@@ -5685,12 +5604,11 @@ def tx_optimize_zorder(
         else None
     )
     return _commit_rewrite(
-        spark, path, added, files, snap_version, None, "zorder",
+        spark, path, added, files, snap, None, "zorder",
         stats=stats,
         blooms=_rewrite_blooms(spark, path, files, added, snap),
         row_ids_materialized=preserve_ids,
         extra={"zorder": spec},
-        planned_rt=preserve_ids,
     )
 
 
@@ -5829,7 +5747,8 @@ def tx_restore(
     version = _resolve_version(spark, path, version, to_ts)
     if version is None:
         raise ValueError("tx_restore needs version= or to_ts=")
-    _writer_check(spark, path)  # CURRENT requirements gate the write
+    now = _replay(spark, path)
+    _check_writer_features(now.properties, path)  # CURRENT requirements
     snap = _replay(spark, path, version)
     _refuse_mor(snap, path, "tx_restore")
     files, eff = sorted(snap.eps), snap.version
@@ -5842,28 +5761,13 @@ def tx_restore(
                 "targets)"
             )
     stats = {f: st for f, st in snap.stats.items() if f in snap.eps}
-    # row tracking: a restore can resurrect files that predate the
-    # enable backfill or whose bases were checkpoint-truncated while
-    # the file was dead — give those fresh bases IN the restore commit
-    # (resurrected rows whose old ids are unknowable are new row
-    # versions; files whose bases or materialized ids survive the
-    # fold keep their identities untouched)
-    now = _replay(spark, path)
-    rt_counts = None
-    mat_markers: "dict[str, int]" = {}
-    if _row_tracking_on(now.properties):
-        missing = [f for f in files if f not in now.row_bases]
-        # a resurrected file whose -1 marker was checkpoint-truncated
-        # while dead still materializes _row_id bytes: re-record the
-        # marker (and the reader-5 stamp), never a fresh base — the
-        # bytes win _attach_row_ids_map's coalesce, so the base would
-        # be dead metadata over a silently reader-unsafe state
-        mat_markers = {f: -1 for f in missing if _parquet_has_row_id(_abs(path, f))}
-        missing = [f for f in missing if f not in mat_markers]
-        if missing:
-            rt_counts = _count_rows_per_file(spark, path, missing)
+    counts: "dict[str, int]" = {}  # rows of files given fresh bases
 
     def build(next_v: int) -> dict:
+        nonlocal now
+        if next_v - 1 > now.version:
+            now = _replay(spark, path)
+            _check_writer_features(now.properties, path)
         payload = {
             "version": next_v,
             "action": "overwrite",
@@ -5872,17 +5776,34 @@ def tx_restore(
             "txn": None,
             "restore_of": eff,
         }
-        if rt_counts is not None or mat_markers:
-            payload["row_bases"] = {
-                **mat_markers,
-                **(
-                    _fresh_row_bases(next_v, rt_counts)
-                    if rt_counts is not None
-                    else {}
-                ),
+        # row tracking, decided on the commit-time snapshot (an enable
+        # that lands while the restore is in flight must still see
+        # the restored rows get ids): a restore can resurrect files
+        # that predate the enable backfill or whose bases were
+        # checkpoint-truncated while the file was dead — give those
+        # fresh bases IN the restore commit (resurrected rows whose old
+        # ids are unknowable are new row versions; files whose bases or
+        # materialized ids survive the fold keep their identities). A
+        # resurrected file whose -1 marker was truncated while dead
+        # still materializes _row_id bytes: re-record the marker (and
+        # the reader-5 stamp), never a fresh base — the bytes win
+        # _attach_row_ids_map's coalesce, so the base would be dead
+        # metadata over a silently reader-unsafe state
+        if _row_tracking_on(now.properties):
+            missing = [f for f in files if f not in now.row_bases]
+            bases = {
+                f: -1 for f in missing if _parquet_has_row_id(_abs(path, f))
             }
-        if mat_markers:
-            payload["reader"] = max(payload.get("reader", 1), 5)
+            fresh = [f for f in missing if f not in bases]
+            if todo := [f for f in fresh if f not in counts]:
+                counts.update(_count_rows_per_file(spark, path, todo))
+            bases.update(
+                _fresh_row_bases(next_v, {f: counts[f] for f in fresh})
+            )
+            if bases:
+                payload["row_bases"] = bases
+            if -1 in bases.values():
+                payload["reader"] = 5
         # the restore is an overwrite, so it RESETS the write schema
         # and partition layout — to the restored version's own
         # (enforcement and pruning follow the time travel)

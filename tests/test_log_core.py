@@ -80,6 +80,24 @@ def test_log_fold_and_claim_loop_live_in_one_place():
     assert not _package_hits(r"O_EXCL")
 
 
+def test_mutation_conflict_rules_live_in_one_commit_body():
+    """Every data-changing mutation — copy-on-write rewrites and
+    deletion-vector DELETE/UPDATE alike — commits through
+    ``txlog._commit_rewrite``: the still-live, pending multi-table and
+    planned-row-tracking refusals are raised nowhere else, and there
+    is no second DV commit body."""
+    assert not hasattr(txlog, "_commit_dv")
+    assert not _package_hits(r"\b_commit_dv\b")
+    for pattern in (
+        r"files rewritten concurrently",
+        r"pending multi-table transaction ",
+        r"row tracking on .* was toggled",
+    ):
+        allowed = _lines_of(txlog._commit_rewrite, pattern)
+        assert allowed, f"_commit_rewrite no longer matches {pattern!r}"
+        assert _package_hits(pattern) == allowed, pattern
+
+
 def _sink(spark, t, ids):
     tx_write(spark.createDataFrame([], "id long, tag string"), t)
     w = txs.TxTableStreamWriter(
@@ -166,7 +184,7 @@ LOG_READ_PINS = {
     "append": (3, 4, 2),
     "pipe_tick": (6, 10, 4),
     "update": (2, 3, 1),
-    "merge": (4, 10, 2),
+    "merge": (2, 5, 1),
 }
 
 

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from distributed_mapreduce__spark.sources.txlog import (
     _commit_rewrite,
-    _snapshot_files,
+    _replay,
     tx_apply_deletes,
     tx_changes,
     tx_clone,
@@ -174,12 +174,10 @@ def test_rewrite_commit_aborts_when_tombstone_races_in(spark, tmp_path):
     its outputs would otherwise dodge the new tombstone."""
     t = str(tmp_path / "t")
     tx_write(_df(spark, range(4)), t)
-    files, snap = _snapshot_files(spark, t)
+    snap = _replay(spark, t)
     tx_delete(_keys(spark, [0]), t, "id", mode="merge_on_read")
     with pytest.raises(RuntimeError, match="tombstones changed"):
-        _commit_rewrite(
-            spark, t, [], [], snap, None, "compact", planned_rt=False
-        )
+        _commit_rewrite(spark, t, [], [], snap, None, "compact")
 
 
 def test_reader_version_guard(spark, tmp_path):

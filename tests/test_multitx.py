@@ -400,6 +400,21 @@ def test_multi_merge_atomic_and_conflict_guards(spark, tmp_path, monkeypatch):
     with pytest.raises(RuntimeError, match="pending multi-table|multi"):
         tx_merge(_df(spark, 0, 2, "steal"), a, "id", cdf=False)
 
+    # so must a deletion-vector DELETE or UPDATE of those files: the
+    # merge's rewrite would drop the DV's deletes (or keep the old row
+    # beside the UPDATE's post-image) the instant it resolves
+    def rows(path):
+        return sorted(map(tuple, tx_read(spark, path).collect()))
+
+    before = (txlog._replay(spark, a).version, rows(a))
+    for dv_mutation in (
+        lambda: txlog.tx_delete_where(spark, a, "id = 1"),
+        lambda: txlog.tx_update(spark, a, "id = 0", {"tag": "'upd'"}),
+    ):
+        with pytest.raises(RuntimeError, match="pending multi-table"):
+            dv_mutation()
+        assert (txlog._replay(spark, a).version, rows(a)) == before
+
     # same-txn retry resumes the provisional commits and completes
     tx_multi(
         {a: _df(spark, 0, 2, "m2"), b: _df(spark, 3, 5, "m2")},
@@ -411,6 +426,8 @@ def test_multi_merge_atomic_and_conflict_guards(spark, tmp_path, monkeypatch):
     assert tags(a)[0] == "m2" and tags(a)[1] == "m2"
     assert tags(b)[3] == "m2" and tags(b)[4] == "m2"
     assert tx_multi_pending(spark, a) == []
+    assert rows(a) == [(0, "m2"), (1, "m2"), (2, "seed"), (3, "m1"),
+                       (4, "m1"), (5, "m1"), (6, "m1")]
     # resolved: the blocked single-table merge now goes through
     tx_merge(_df(spark, 0, 2, "steal"), a, "id", cdf=False)
     assert tags(a)[0] == "steal"

@@ -7,7 +7,9 @@
   (base -1 + reader 5) instead of minting a dead fresh base;
 - _commit_rewrite raises a conflict when row tracking is toggled
   between the planning snapshot and commit time (instead of silently
-  re-identifying rows the enable commit just backfilled);
+  re-identifying rows the enable commit just backfilled), for
+  rewrites and deletion-vector UPDATEs alike; tx_restore instead
+  decides its row-id bases on the commit-time snapshot;
 - the txtable BATCH read honors option("withRowIds") — the schema it
   declares is the schema its arrow batches produce, DV drops applied
   after id assignment — and refuses on untracked tables;
@@ -121,6 +123,34 @@ def test_rewrite_conflicts_when_tracking_flips_mid_flight(
     during_publish(lambda: tx_enable_row_tracking(spark, t))
     with pytest.raises(RuntimeError, match="row tracking.*toggled"):
         tx_merge(updates, t, "id")
+
+    # a deletion-vector UPDATE planned id-less post-images the same way
+    u = str(tmp_path / "u")
+    tx_write(_df(spark, 0, 50).repartition(2), u, stats_cols=["id"])
+    during_publish(lambda: tx_enable_row_tracking(spark, u))
+    with pytest.raises(RuntimeError, match="row tracking.*toggled"):
+        txlog.tx_update(spark, u, "id = 4", {"tag": "'upd'"})
+    # refused: the enable is the only commit since, every row has an id
+    assert txlog._replay(spark, u).version == 1
+    ids = _id_map(spark, u)
+    assert sorted(ids.values()) == [(i, "x") for i in range(50)]
+    assert None not in ids
+
+
+def test_restore_gives_ids_when_tracking_turns_on_mid_flight(
+    spark, tmp_path, during_publish
+):
+    t = str(tmp_path / "t")
+    tx_write(_df(spark, 0, 3), t)
+    tx_write(_df(spark, 10, 12, "y"), t, mode="overwrite")
+    # the enable backfills the overwrite's files; the restore, planned
+    # on an untracked table, brings back version 0's files, which
+    # the backfill never saw — they need bases in the restore commit
+    during_publish(lambda: tx_enable_row_tracking(spark, t))
+    assert tx_restore(spark, t, 0) == 3
+    ids = _id_map(spark, t)
+    assert sorted(ids.values()) == [(0, "x"), (1, "x"), (2, "x")]
+    assert None not in ids
 
 
 def test_batch_read_with_row_ids_matches_scan(spark, tmp_path):

@@ -59,6 +59,19 @@ def test_task_retry_yields_exact_result():
     assert "RETRY_OK 499500" in proc.stdout
 
 
+def test_local_threads_default_to_the_cpus_the_process_may_use(
+    monkeypatch,
+):
+    import os
+
+    from distributed_mapreduce__spark.session import default_parallelism
+
+    monkeypatch.delenv("SPARK_GRAFT_CPUS", raising=False)
+    assert default_parallelism() == len(os.sched_getaffinity(0))
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "3")
+    assert default_parallelism() == 3
+
+
 def test_speculation_enabled_in_engine_session(spark):
     # R4 parity knob (straggler re-execution) is on by default.
     assert spark.conf.get("spark.speculation") == "true"

@@ -267,19 +267,19 @@ def test_rewrite_conflict_detected(spark, tmp_path):
     against the OLD snapshot through _commit_rewrite directly)."""
     from distributed_mapreduce__spark.sources.txlog import (
         _commit_rewrite,
-        _snapshot_files,
+        _replay,
         tx_compact,
     )
 
     t = str(tmp_path / "t")
     for i in range(3):
         tx_write(_df(spark, i * 2, i * 2 + 2, f"b{i}").coalesce(1), t)
-    old_files, old_v = _snapshot_files(spark, t)
-    tx_compact(spark, t, target_files=1)  # retires old_files
+    old = _replay(spark, t)
+    tx_compact(spark, t, target_files=1)  # retires old's files
     with pytest.raises(RuntimeError, match="conflict"):
         _commit_rewrite(
-            spark, t, ["data/bogus.parquet"], old_files, old_v, None,
-            "merge", planned_rt=False,
+            spark, t, ["data/bogus.parquet"], sorted(old.eps), old, None,
+            "merge",
         )
 
 
