@@ -1,7 +1,7 @@
 """Slowly-changing-dimension maintenance (SCD Type 2).
 
-``merge_keyed`` (sources/sinks.py) REPLACES a key's row — right for
-indexes and rollups, wrong for dimensions where history matters
+An upsert (``tx_merge`` on a txlog table) REPLACES a key's row —
+right for indexes, wrong for dimensions where history matters
 ("what was this supplier's address when the order shipped?"). The
 warehouse-standard answer is SCD Type 2: each key carries a CHAIN of
 versions ``(valid_from, valid_to, is_current)``; an attribute change
@@ -29,9 +29,9 @@ job, not an incremental apply.
 Scale: one shuffle keyed on the dimension key (window + groupBy) over
 open-rows + batch only — closed history is filter-pruned, never
 windowed. Dimensions are small next to facts; this runs where the
-dimension lives. Write the result with
-``sinks.merge_keyed(..., key_cols=[*key, "valid_from"])`` or a full
-dimension overwrite. The whole transform is portable window SQL —
+dimension lives. Write the result to a txlog table with
+``tx_merge(result, path, [*key, "valid_from"])`` or a full dimension
+overwrite (``tx_write(mode="overwrite")``). The whole transform is portable window SQL —
 the DuckDB oracle replays it (tests/test_scd.py).
 """
 

@@ -82,35 +82,37 @@ def sessionized(df: DataFrame, gap: str, *keys: str) -> DataFrame:
 # Incremental rollup store ("hypertable rollup"): maintain per-window
 # aggregates of an ever-growing event stream without ever re-scanning
 # history. The store holds MERGEABLE PARTIALS (count + exact decimal
-# sum — avg is derived at read), organized as
+# sum — avg is derived at read) in a txlog table (sources/txlog.py)
+# partitioned by ``batch``:
 #
-#     <store>/partials/batch=<batch_id>/part-*.parquet
-#     <store>/_compactions/<n>.json        (compaction commit markers)
+#     <store>/data/batch=<batch_id>/<uuid>.parquet   (+ <store>/_txlog/)
 #
-# Exactly-once unit = the batch id: upsert_rollup writes one batch's
-# window partials via dynamic partition overwrite of batch=<id>, so a
-# retried batch REPLACES its own partials instead of double-counting —
-# the same idempotence mechanism as streaming/dedup.py's foreachBatch
-# sink. Reads merge partials by window+key; read amplification is the
-# number of live batches per window, bounded by compact_rollup, whose
-# COMMIT POINT is a single marker-file create (the new merged dir is
-# invisible to readers until its marker lands, and the marker excludes
-# the source dirs even before they are garbage-collected — so a crash
-# at ANY point between writing the compacted dir, writing the marker,
-# and deleting sources never double-counts and never loses data).
+# Exactly-once unit = the batch id: each fold is ONE append committed
+# under txn ``rollup:<id>``, so a retried batch is a txn no-op instead
+# of a double count. Everything else is the log's own machinery: the
+# live batches are the ``batch`` values of the snapshot's live files
+# (per-file partition stats, no listing); compact_rollup is one
+# conflict-checked rewrite that removes exactly the files it read and
+# adds the merged ``c<n>`` files; a reset is an overwrite; the pinned
+# window width and the writer claims are table properties; vacuum is
+# tx_vacuum. A crash at any point before a commit lands changes no
+# read — uncommitted files are invisible to the snapshot.
 # --------------------------------------------------------------------------
+
+_BATCH = "batch"
 
 
 def rollup_batch(events: DataFrame, duration: str, *keys: str) -> DataFrame:
     """One batch's mergeable window partials:
     (window_start, window_end, *keys, n_events, sum_value_dec)."""
+    _duration_seconds(duration)  # reject unsupported width syntax early
     return (
         events.groupBy(F.window("ts", duration).alias("win"), *keys)
         .agg(
             F.count("*").alias("n_events"),
             # storage type pinned at decimal(38,4): re-summing partials
-            # (compaction) must not widen the column, or batch dirs
-            # written before and after a compaction disagree on schema
+            # (compaction) must not widen the column, or files written
+            # before and after a compaction disagree on schema
             F.sum(F.col("value").cast("decimal(18,4)"))
             .cast("decimal(38,4)")
             .alias("sum_value_dec"),
@@ -125,19 +127,99 @@ def rollup_batch(events: DataFrame, duration: str, *keys: str) -> DataFrame:
     )
 
 
-def _guard_batch_id(spark, store_path: str, bid: str) -> None:
-    """Shared batch-id discipline for every fold flavor: the ``c<n>``
-    namespace belongs to compaction targets, and an id RETIRED by a
-    committed compaction can never be reused — its dir would be
-    silently subtracted from every read. Both misuses raise loudly."""
-    if bid.startswith("c") and bid[1:].isdigit():
+def _negated(partials: DataFrame, keys: tuple[str, ...]) -> DataFrame:
+    """Partials with count and sum negated — a retraction."""
+    return partials.select(
+        "window_start",
+        "window_end",
+        *keys,
+        (-F.col("n_events")).alias("n_events"),
+        (-F.col("sum_value_dec")).cast("decimal(38,4)").alias("sum_value_dec"),
+    )
+
+
+def _is_target(bid: str) -> bool:
+    """``c<n>`` — the namespace compaction and reset targets own."""
+    return bid.startswith("c") and bid[1:].isdigit()
+
+
+def _store_snapshot(spark, store_path: str):
+    """The store's latest snapshot, or None before its first commit."""
+    from ..sources.txlog import _replay
+
+    try:
+        return _replay(spark, store_path)
+    except FileNotFoundError:
+        return None
+
+
+def _batches(snap) -> set[str]:
+    """The live batch ids, read from the log alone (each live file's
+    ``batch`` partition stat)."""
+    return {snap.stats[f][_BATCH][0] for f in snap.eps}
+
+
+def _retired(snap) -> set[str]:
+    """Fold ids whose txn is committed but whose batch has no live
+    file: a compaction or reset merged their rows into a target (or
+    the fold was empty). The txn map survives tx_vacuum through the
+    checkpoint, so a retired id stays retired."""
+    folded = {t[len("rollup:"):] for t in snap.txns if t.startswith("rollup:")}
+    return folded - _batches(snap)
+
+
+def _claim(spark, store_path: str, key: str, value: str, txn: str):
+    """``(value held, snapshot)`` for the store property ``key``,
+    committing ``value`` under ``txn`` when it is unset. This meta
+    commit is the one path that creates the store (a writer claim
+    comes before any fold): it records the ``batch`` layout, so the
+    first fold appends to the table as laid out. Of two racing
+    claimers of one key exactly one publishes; the other reads the
+    winner's value."""
+    from ..sources.txlog import _commit, _replay
+
+    snap = _store_snapshot(spark, store_path)
+    if snap is None or key not in snap.properties:
+        meta = {"action": "meta", "add": [], "remove": [], "txn": txn,
+                "partition_by": [_BATCH], "properties": {key: value}}
+        _commit(spark, store_path, lambda v: {"version": v, **meta}, txn, 20)
+        snap = _replay(spark, store_path)
+    return snap.properties[key], snap
+
+
+def _pin_duration(spark, store_path: str, duration: str):
+    """Pin the store's base window duration (table property
+    ``rollup.duration``) on first write and return the snapshot; later
+    writes with a DIFFERENT duration raise — mixing window widths in
+    one partial store would silently corrupt every merged read."""
+    _duration_seconds(duration)  # reject unsupported width syntax early
+    stored, snap = _claim(
+        spark, store_path, "rollup.duration", duration, "rollup-duration"
+    )
+    if stored != duration:
+        raise ValueError(
+            f"rollup store {store_path} was built with duration "
+            f"{stored!r}; refusing to upsert {duration!r} partials "
+            "into it (mixed widths corrupt merged reads). Coarser "
+            "readouts belong at read time: read_rollup(..., "
+            "coarsen=...)."
+        )
+    return snap
+
+
+def _fold(partials: DataFrame, store_path: str, duration: str, batch_id) -> None:
+    """Every fold flavor's body: the batch-id discipline (see
+    :func:`upsert_rollup`), the duration pin, then one append under
+    txn ``rollup:<id>``."""
+    from ..sources.txlog import tx_write
+
+    bid = str(batch_id)
+    if _is_target(bid):
         raise ValueError(
             f"batch_id {bid!r} is in the reserved compaction namespace c<n>"
         )
-    retired = {
-        s for m in _read_markers(spark, store_path) for s in m["sources"]
-    }
-    if bid in retired:
+    snap = _pin_duration(partials.sparkSession, store_path, duration)
+    if bid in _retired(snap):
         raise ValueError(
             f"batch_id {bid!r} was retired by a committed compaction of "
             f"{store_path}; rows written under it would be invisible to "
@@ -145,6 +227,12 @@ def _guard_batch_id(spark, store_path: str, bid: str) -> None:
             "a restarted stream whose checkpoint was lost must not reuse "
             "its old id sequence."
         )
+    tx_write(
+        partials.withColumn(_BATCH, F.lit(bid)),
+        store_path,
+        txn=f"rollup:{bid}",
+        partition_by=[_BATCH],
+    )
 
 
 def upsert_rollup(
@@ -155,31 +243,22 @@ def upsert_rollup(
     batch_id: str = "0",
 ) -> None:
     """Fold one event batch into the rollup store — idempotently: the
-    batch's partials land under ``batch=<batch_id>`` via dynamic
-    partition overwrite, so re-running a failed/duplicate batch
-    replaces its own prior write. One aggregation of the NEW events
-    only; history is never read, let alone re-aggregated.
+    batch's partials commit as one append under txn ``rollup:<batch_id>``,
+    so re-running a failed/duplicate batch is a no-op. (Re-folding an
+    id therefore keeps its FIRST rows: a replay must carry the same
+    rows, as foreachBatch replay and the view maintainer's
+    re-derivation from the source version do.) One aggregation of the
+    NEW events only; history is never read, let alone re-aggregated.
 
-    ``c<n>`` ids are reserved for compaction targets (the crash-window
-    guard in ``_live_batches`` ignores uncommitted dirs of that shape),
-    and an id RETIRED by a committed compaction can never be reused —
-    its dir would be silently subtracted from every read. Both misuses
-    raise here instead of losing data (the retired case happens when a
+    ``c<n>`` ids are reserved for compaction targets, and an id
+    RETIRED by a committed compaction can never be reused — its rows
+    would be silently invisible to every read. Both misuses raise
+    here instead of losing data (the retired case happens when a
     streaming checkpoint is wiped and foreachBatch restarts at batch 0
     against a compacted store: the loud error says use a fresh store
     or a fresh id prefix).
     """
-    bid = str(batch_id)
-    _guard_batch_id(events.sparkSession, store_path, bid)
-    _check_duration(events.sparkSession, store_path, duration)
-    (
-        rollup_batch(events, duration, *keys)
-        .withColumn("batch", F.lit(str(batch_id)))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(f"{store_path}/partials")
-    )
+    _fold(rollup_batch(events, duration, *keys), store_path, duration, batch_id)
 
 
 def retract_rollup(
@@ -200,30 +279,16 @@ def retract_rollup(
     shrinks. Windows whose count reaches zero vanish from
     :func:`read_rollup`, matching a from-scratch recompute.
 
-    Same idempotence and batch-id discipline as upsert (one dynamic
-    partition per batch id; retried batches replace their own write);
+    Same idempotence and batch-id discipline as upsert (one txn per
+    batch id; a retried batch is a no-op that keeps the first rows);
     retracting MORE than was inserted leaves a negative-count window
     visible in reads — loud, attributable misuse rather than silent
     clamping."""
-    bid = str(batch_id)
-    _guard_batch_id(events.sparkSession, store_path, bid)
-    _check_duration(events.sparkSession, store_path, duration)
-    (
-        rollup_batch(events, duration, *keys)
-        .select(
-            "window_start",
-            "window_end",
-            *keys,
-            (-F.col("n_events")).alias("n_events"),
-            (-F.col("sum_value_dec"))
-            .cast("decimal(38,4)")
-            .alias("sum_value_dec"),
-        )
-        .withColumn("batch", F.lit(bid))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(f"{store_path}/partials")
+    _fold(
+        _negated(rollup_batch(events, duration, *keys), keys),
+        store_path,
+        duration,
+        batch_id,
     )
 
 
@@ -238,40 +303,26 @@ def fold_rollup_cdf(
     """Fold one CDC batch carrying BOTH inserted and deleted rows
     (e.g. a merge commit's update post-images and pre-images from
     ``tx_changes_cdf``'s 'cdf' frames) into the rollup store as ONE
-    batch partition: insert partials plus NEGATED delete partials net
-    out per window before the write. One batch id per source version
-    keeps the fold atomic-per-version — there is no crash window where
-    the retraction landed but the insertion didn't (two separate
+    batch: insert partials plus NEGATED delete partials net out per
+    window before the write. One batch id per source version keeps
+    the fold atomic-per-version — there is no crash window where the
+    retraction landed but the insertion didn't (two separate
     :func:`upsert_rollup`/:func:`retract_rollup` calls would have
-    one), and replays replace the whole signed partition idempotently.
-    Same guards and store schema as the single-sided folds."""
-    bid = str(batch_id)
-    _guard_batch_id(inserts.sparkSession, store_path, bid)
-    _check_duration(inserts.sparkSession, store_path, duration)
+    one), and a replay of the id is a txn no-op that keeps the first
+    signed rows. Same guards and store schema as the single-sided
+    folds."""
     pos = rollup_batch(inserts, duration, *keys)
-    neg = rollup_batch(deletes, duration, *keys).select(
-        "window_start",
-        "window_end",
-        *keys,
-        (-F.col("n_events")).alias("n_events"),
-        (-F.col("sum_value_dec"))
-        .cast("decimal(38,4)")
-        .alias("sum_value_dec"),
-    )
-    (
+    neg = _negated(rollup_batch(deletes, duration, *keys), keys)
+    _fold(
         pos.unionByName(neg)
         .groupBy("window_start", "window_end", *keys)
         .agg(
             F.sum("n_events").alias("n_events"),
-            F.sum("sum_value_dec")
-            .cast("decimal(38,4)")
-            .alias("sum_value_dec"),
-        )
-        .withColumn("batch", F.lit(bid))
-        .write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch")
-        .parquet(f"{store_path}/partials")
+            F.sum("sum_value_dec").cast("decimal(38,4)").alias("sum_value_dec"),
+        ),
+        store_path,
+        duration,
+        batch_id,
     )
 
 
@@ -280,27 +331,24 @@ def claim_rollup_writer(
 ) -> None:
     """Claim a batch-id prefix for ONE stream (streaming/windows.py
     ``stream_rollup``). Batch numbering is per-checkpoint, so two
-    concurrent streams sharing a store AND a prefix would overwrite
-    each other's ``batch=<prefix><n>`` partitions silently (dynamic
-    partition overwrite replaces same-named dirs). The claim is a
-    ``_writers/<writer>.json`` sidecar recording the owning stream's
-    checkpoint path, committed atomically (tmp+rename, same discipline
-    as compaction markers):
+    concurrent streams sharing a store AND a prefix would emit the same
+    ``<prefix><n>`` ids — each other's folds would be silently dropped
+    as replays. The claim is the table property
+    ``rollup.writer.<writer>`` recording the owning stream's
+    checkpoint path, committed under txn ``rollup-writer:<writer>``:
 
-    - no claim file → write it, proceed;
-    - claim file naming THIS checkpoint → a restart of the same
-      stream, proceed (its retries are idempotent by batch id);
-    - claim file naming a DIFFERENT checkpoint → raise loudly — the
+    - unclaimed → commit the claim, proceed;
+    - claimed by THIS checkpoint → a restart of the same stream,
+      proceed (its retries are idempotent by batch id);
+    - claimed by a DIFFERENT checkpoint (before this call, or by a
+      concurrent claimer that won the commit) → raise loudly — the
       caller must pass a distinct ``writer=`` per stream.
 
     The reserved compaction namespace (``c<n>``) is rejected up front:
     a writer literally named ``c`` would emit batch ids compaction
     targets own, and ``upsert_rollup`` would refuse every batch.
     """
-    import json
     import re
-
-    from ..sources.sinks import hadoop_fs
 
     if not writer or re.search(r"[/=\s]", writer):
         raise ValueError(
@@ -312,119 +360,21 @@ def claim_rollup_writer(
             f"writer prefix {writer!r} collides with the reserved "
             "compaction namespace c<n>"
         )
-    fs, wpath = hadoop_fs(spark, f"{store_path}/_writers/{writer}.json")
-    if fs.exists(wpath):
-        raw = fs.open(wpath)
-        try:
-            data = bytes(
-                spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray(
-                    raw
-                )
-            )
-        finally:
-            raw.close()
-        owner = json.loads(data.decode("utf-8"))["checkpoint"]
-        if owner != checkpoint_path:
-            raise ValueError(
-                f"rollup store {store_path} writer prefix {writer!r} is "
-                f"claimed by the stream checkpointed at {owner!r}; this "
-                f"stream (checkpoint {checkpoint_path!r}) would silently "
-                "overwrite its partials. Pass a distinct writer= id per "
-                "concurrent stream."
-            )
-        return
-    marker = json.dumps({"writer": writer, "checkpoint": checkpoint_path})
-    tmp = hadoop_fs(spark, f"{store_path}/_writers/{writer}.json.tmp")[1]
-    out = fs.create(tmp, True)
-    try:
-        out.write(bytearray(marker.encode()))
-    finally:
-        out.close()
-    if not fs.rename(tmp, wpath):
-        # lost a race with a concurrent claimer — re-read and re-check
-        # rather than clobbering its committed marker
-        raw = fs.open(wpath)
-        try:
-            data = bytes(
-                spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray(
-                    raw
-                )
-            )
-        finally:
-            raw.close()
-        owner = json.loads(data.decode("utf-8"))["checkpoint"]
-        if owner != checkpoint_path:
-            raise ValueError(
-                f"rollup store {store_path} writer prefix {writer!r} was "
-                f"concurrently claimed by {owner!r}; pass a distinct "
-                "writer= id per stream."
-            )
-
-
-def _read_markers(spark, store_path: str) -> list[dict]:
-    """All committed compaction markers (torn/unparseable ones from a
-    crash mid-write are skipped — belt to the tmp+rename suspenders in
-    compact_rollup)."""
-    import json
-
-    from ..sources.sinks import hadoop_fs
-
-    fs, cpath = hadoop_fs(spark, f"{store_path}/_compactions")
-    if not fs.exists(cpath):
-        return []
-    markers = []
-    for st in fs.listStatus(cpath):
-        if not st.getPath().getName().endswith(".json"):
-            continue
-        raw = fs.open(st.getPath())
-        try:
-            # py4j copies Python buffers INTO Java, so read(byte[])
-            # can't fill a Python bytearray — drain JVM-side instead
-            data = bytes(
-                spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray(
-                    raw
-                )
-            )
-        finally:
-            raw.close()
-        try:
-            markers.append(json.loads(data.decode("utf-8")))
-        except ValueError:
-            continue
-    return markers
-
-
-def _live_batches(spark, store_path: str) -> list[str] | None:
-    """Batch dirs minus those retired by any COMMITTED compaction
-    marker. None = store absent."""
-    from ..sources.sinks import hadoop_fs
-
-    fs, ppath = hadoop_fs(spark, f"{store_path}/partials")
-    if not fs.exists(ppath):
-        return None
-    batches = {
-        st.getPath().getName().split("=", 1)[1]
-        for st in fs.listStatus(ppath)
-        if st.isDirectory() and st.getPath().getName().startswith("batch=")
-    }
-    committed: set[str] = set()
-    for marker in _read_markers(spark, store_path):
-        committed.add(marker["target"])
-        # a committed marker retires its sources FOREVER — even after a
-        # LATER compaction deletes this marker's target dir (the data
-        # lives on in the later target). Conditioning on the target
-        # dir's presence resurrected crash-leftover sources once a
-        # second compaction ran, double-counting every read.
-        batches -= set(marker["sources"])
-    # the crash-window guard: a compaction TARGET dir whose marker
-    # never landed is an orphan — counting it would double-count its
-    # still-live sources. Target ids are the reserved c<n> namespace.
-    batches -= {
-        b
-        for b in batches
-        if b.startswith("c") and b[1:].isdigit() and b not in committed
-    }
-    return sorted(batches)
+    owner, _ = _claim(
+        spark,
+        store_path,
+        f"rollup.writer.{writer}",
+        checkpoint_path,
+        f"rollup-writer:{writer}",
+    )
+    if owner != checkpoint_path:
+        raise ValueError(
+            f"rollup store {store_path} writer prefix {writer!r} is "
+            f"claimed by the stream checkpointed at {owner!r}; this "
+            f"stream (checkpoint {checkpoint_path!r}) would silently "
+            "overwrite its partials. Pass a distinct writer= id per "
+            "concurrent stream."
+        )
 
 
 def read_rollup(
@@ -433,32 +383,26 @@ def read_rollup(
     keys: tuple[str, ...] = (),
     coarsen: str | None = None,
 ) -> DataFrame:
-    """The current rollup: merge live partials per (window, key) —
-    additive count/sum, avg derived with the engine-identical single
-    division the batch window queries use.
+    """The current rollup: merge the live partials of one snapshot per
+    (window, key) — additive count/sum, avg derived with the
+    engine-identical single division the batch window queries use.
 
     ``coarsen`` re-buckets at read into WIDER epoch-aligned windows
     (store hourly, query daily — the continuous-aggregate pattern):
     base windows nest exactly when the coarser duration is an integer
     multiple of the stored one, which is validated against the store's
-    ``_meta.json``; a non-multiple would straddle boundaries and is
-    refused. Pure extra aggregation over already-rolled rows — the raw
-    events are never touched."""
-    live = _live_batches(spark, store_path)
-    if not live:
+    pinned ``rollup.duration``; a non-multiple would straddle
+    boundaries and is refused. Pure extra aggregation over
+    already-rolled rows — the raw events are never touched."""
+    from ..sources.txlog import _read_with_mor
+
+    snap = _store_snapshot(spark, store_path)
+    if snap is None or not snap.eps:
         raise FileNotFoundError(f"no rollup partials at {store_path}")
-    df = spark.read.parquet(
-        *[f"{store_path}/partials/batch={b}" for b in live]
-    )
+    df = _read_with_mor(spark, store_path, snap, sorted(snap.eps))
     if coarsen is not None:
-        base = _store_duration(spark, store_path)
-        bsec, csec = _duration_seconds(base), _duration_seconds(coarsen)
-        if bsec is None:
-            raise ValueError(
-                f"store {store_path} has no _meta.json duration; cannot "
-                "validate coarsen nesting"
-            )
-        if csec % bsec != 0:
+        base = snap.properties["rollup.duration"]
+        if _duration_seconds(coarsen) % _duration_seconds(base) != 0:
             raise ValueError(
                 f"coarsen {coarsen!r} is not a multiple of the stored "
                 f"duration {base!r}; straddled windows would miscount"
@@ -498,69 +442,50 @@ def read_rollup(
     )
 
 
+def _next_target(snap) -> str:
+    """``c<n>`` one past the highest live target."""
+    live = [int(b[1:]) for b in _batches(snap) if _is_target(b)]
+    return f"c{max(live, default=-1) + 1}"
+
+
 def compact_rollup(
     spark, store_path: str, keys: tuple[str, ...] = ()
 ) -> str | None:
-    """Merge all live partial batches into one, bounding read
-    amplification. Crash-safe by ordering:
+    """Merge all live partial batches into one target batch ``c<n>``,
+    bounding read amplification. ONE commit, through the same
+    conflict-checked rewrite body as ``tx_compact``: it removes exactly
+    the files it read and adds the merged files, so a fold committed
+    while the compaction runs stays live, and a crash before the
+    commit leaves the store exactly as before (the staged target files
+    are unreferenced debris for ``vacuum_rollup``). The merged ids stay
+    retired forever — their txns remain in the log with no live file.
+    Returns the new batch id, or None if ≤1 live batch."""
+    from ..sources.txlog import (
+        _commit_rewrite,
+        _read_with_mor,
+        _rewrite_stats,
+        _stage_and_place,
+    )
 
-    1. aggregate the live batches into a NEW dir ``batch=c<n>``
-       (invisible — readers only trust dirs, never markers-less
-       compactions... i.e. an uncommitted target is just an extra
-       batch dir that double-counts NOTHING because step 2 hasn't
-       retired its sources yet and the target is excluded until its
-       marker commits — see guard below);
-    2. create ``_compactions/<n>.json`` naming target + sources — the
-       single-file ATOMIC COMMIT: from this instant readers use the
-       target and ignore the sources;
-    3. delete the source dirs (pure garbage collection — a crash here
-       only leaves ignored dirs).
-
-    The step-1 guard: ``_live_batches`` drops a target dir whose
-    marker is absent, so a crash between 1 and 2 leaves the store
-    exactly as before (plus one orphan dir the next compaction
-    overwrites). Returns the new batch id, or None if ≤1 live batch.
-    """
-    import json
-
-    from ..sources.sinks import hadoop_fs
-
-    live = _live_batches(spark, store_path)
-    if not live or len(live) <= 1:
+    snap = _store_snapshot(spark, store_path)
+    if snap is None or len(_batches(snap)) <= 1:
         return None
-    fs, cpath = hadoop_fs(spark, f"{store_path}/_compactions")
-    seq = 0
-    if fs.exists(cpath):
-        for st in fs.listStatus(cpath):
-            name = st.getPath().getName()
-            if name.endswith(".json"):
-                seq = max(seq, int(name.split(".")[0]) + 1)
-    target = f"c{seq}"
-
-    df = spark.read.parquet(
-        *[f"{store_path}/partials/batch={b}" for b in live]
+    target = _next_target(snap)
+    files = sorted(snap.eps)
+    merged = (
+        _read_with_mor(spark, store_path, snap, files)
+        .groupBy("window_start", "window_end", *keys)
+        .agg(
+            F.sum("n_events").alias("n_events"),
+            F.sum("sum_value_dec").cast("decimal(38,4)").alias("sum_value_dec"),
+        )
+        .withColumn(_BATCH, F.lit(target))
     )
-    merged = df.groupBy("window_start", "window_end", *keys).agg(
-        F.sum("n_events").alias("n_events"),
-        F.sum("sum_value_dec").cast("decimal(38,4)").alias("sum_value_dec"),
+    added = _stage_and_place(merged, store_path, [_BATCH])
+    _commit_rewrite(
+        spark, store_path, added, files, snap, None, "compact",
+        stats=_rewrite_stats(spark, store_path, files, added, None, snap),
     )
-    merged.write.mode("overwrite").parquet(
-        f"{store_path}/partials/batch={target}"
-    )
-    # marker commit is write-to-tmp + rename so a crash mid-write can
-    # never leave a torn .json (readers also skip unparseable markers)
-    marker = json.dumps({"target": target, "sources": live}).encode()
-    tmp_p = hadoop_fs(spark, f"{store_path}/_compactions/{seq}.json.tmp")[1]
-    out = fs.create(tmp_p, True)
-    try:
-        out.write(bytearray(marker))
-    finally:
-        out.close()
-    final_p = hadoop_fs(spark, f"{store_path}/_compactions/{seq}.json")[1]
-    if not fs.rename(tmp_p, final_p):
-        raise RuntimeError(f"could not commit compaction marker {final_p}")
-    for b in live:
-        fs.delete(hadoop_fs(spark, f"{store_path}/partials/batch={b}")[1], True)
     return target
 
 
@@ -574,155 +499,79 @@ def reset_rollup(
 ) -> str:
     """Atomically REPLACE the store's contents with the rollup of
     ``snapshot`` (a full source snapshot — e.g. a txlog overwrite or
-    RESTORE delivered by the change feed): the new partials are
-    written to an invisible compaction-namespace target, then ONE
-    marker commit simultaneously retires every previously-live batch
-    and reveals the target — readers never observe an empty, doubled,
-    or half-reset store, the same crash discipline as
-    :func:`compact_rollup`.
+    RESTORE delivered by the change feed): one overwrite commit of
+    the new partials as target batch ``c<n>`` retires every
+    previously-live batch and reveals the target at once — readers
+    never observe an empty, doubled, or half-reset store. Like any
+    overwrite, it also replaces a fold that commits while it is in
+    flight: reset from the process that folds.
 
-    Idempotent by ``reset_id``: a committed marker stamped with it
-    makes a replay a no-op returning the original target (the view
-    maintainer derives the id from the source version, so crash
-    replays re-derive it). Retiring the old batch ids also makes a
-    FULL history replay safe: a pre-reset version's fold lands on a
-    retired id, which the maintainer recognizes as
-    already-accounted-for and skips (see
+    Idempotent by ``reset_id``: the commit carries txn
+    ``rollup-reset:<reset_id>``, so a replay is a no-op returning the
+    original target (the view maintainer derives the id from the
+    source version, so crash replays re-derive it). Retiring the old
+    batch ids also makes a FULL history replay safe: a pre-reset
+    version's fold lands on a retired id, which the maintainer
+    recognizes as already-accounted-for and skips (see
     ``rollup_view_available_now``)."""
-    import json
+    from ..sources.txlog import _commits, tx_write
 
-    from ..sources.sinks import hadoop_fs
-
-    rid = str(reset_id)
-    for m in _read_markers(spark, store_path):
-        if m.get("reset") == rid:
-            return m["target"]  # replay of a committed reset
-    _check_duration(spark, store_path, duration)
-    live = _live_batches(spark, store_path) or []
-    fs, cpath = hadoop_fs(spark, f"{store_path}/_compactions")
-    seq = 0
-    if fs.exists(cpath):
-        for st in fs.listStatus(cpath):
-            name = st.getPath().getName()
-            if name.endswith(".json"):
-                seq = max(seq, int(name.split(".")[0]) + 1)
-    target = f"c{seq}"
-    rollup_batch(snapshot, duration, *keys).write.mode("overwrite").parquet(
-        f"{store_path}/partials/batch={target}"
+    txn = f"rollup-reset:{reset_id}"
+    snap = _store_snapshot(spark, store_path)
+    prior = None if snap is None else snap.txns.get(txn)
+    if prior is not None:
+        # the batch its files carry: live ones in the snapshot, else
+        # the reset's own log entry (None once both are gone)
+        stats = [snap.stats[f] for f, v in snap.eps.items() if v == prior]
+        if not stats:
+            stats = [
+                st
+                for _, c in _commits(spark, store_path, prior, prior - 1)
+                for st in (c.get("stats") or {}).values()
+            ]
+        return stats[0][_BATCH][0] if stats else None
+    snap = _pin_duration(spark, store_path, duration)
+    target = _next_target(snap)
+    tx_write(
+        rollup_batch(snapshot, duration, *keys).withColumn(_BATCH, F.lit(target)),
+        store_path,
+        mode="overwrite",
+        txn=txn,
+        partition_by=[_BATCH],
     )
-    marker = json.dumps(
-        {"target": target, "sources": live, "reset": rid}
-    ).encode()
-    tmp_p = hadoop_fs(spark, f"{store_path}/_compactions/{seq}.json.tmp")[1]
-    out = fs.create(tmp_p, True)
-    try:
-        out.write(bytearray(marker))
-    finally:
-        out.close()
-    final_p = hadoop_fs(spark, f"{store_path}/_compactions/{seq}.json")[1]
-    if not fs.rename(tmp_p, final_p):
-        raise RuntimeError(f"could not commit reset marker {final_p}")
-    for b in live:
-        fs.delete(
-            hadoop_fs(spark, f"{store_path}/partials/batch={b}")[1], True
-        )
     return target
 
 
 def retired_rollup_ids(spark, store_path: str) -> set:
-    """Batch ids retired by any committed compaction/reset marker —
-    their rows are already merged into a live target, so re-folding
-    one would double-count (and ``upsert_rollup`` refuses it)."""
-    return {
-        s for m in _read_markers(spark, store_path) for s in m["sources"]
-    }
+    """Batch ids retired by a committed compaction or reset — their
+    rows are already merged into a live target, so re-folding one
+    would double-count (and ``upsert_rollup`` refuses it)."""
+    snap = _store_snapshot(spark, store_path)
+    return set() if snap is None else _retired(snap)
 
 
 def vacuum_rollup(spark, store_path: str) -> list[str]:
-    """Garbage-collect dead partial dirs: sources retired by a
-    committed compaction whose target dir exists (normally deleted by
-    compact_rollup itself — this catches the crash-before-GC window).
-    Orphan ``c<n>`` targets from crashed attempts are deliberately NOT
-    deleted: compact_rollup derives its sequence from committed
-    markers only, so the next compaction reuses the same seq and
-    OVERWRITES the orphan — it is self-recycling, and deleting it here
-    would race an in-flight compaction. Returns the deleted batch ids.
-    Pure metadata work; safe to run any time."""
-    from ..sources.sinks import hadoop_fs
+    """Garbage-collect dead partials through ``tx_vacuum``: the files
+    of batches a committed compaction or reset retired, and the staged
+    files of a crashed compaction. Reads never change (only files no
+    snapshot references go), and retired ids stay refused (the txn map
+    survives in the checkpoint). Like ``tx_vacuum``, run it from the
+    maintenance process, not while a fold is between staging and
+    commit. Returns the batch ids whose files it deleted."""
+    from urllib.parse import unquote
 
-    fs, ppath = hadoop_fs(spark, f"{store_path}/partials")
-    if not fs.exists(ppath):
+    from ..sources.txlog import tx_vacuum
+
+    if _store_snapshot(spark, store_path) is None:
         return []
-    dirs = {
-        st.getPath().getName().split("=", 1)[1]
-        for st in fs.listStatus(ppath)
-        if st.isDirectory() and st.getPath().getName().startswith("batch=")
-    }
-    dead: set[str] = set()
-    for m in _read_markers(spark, store_path):
-        # sources of ANY committed marker are dead — including when a
-        # later compaction already deleted this marker's own target
-        dead |= set(m["sources"]) & dirs
-    for b in sorted(dead):
-        fs.delete(hadoop_fs(spark, f"{store_path}/partials/batch={b}")[1], True)
-    return sorted(dead)
-
-
-def _check_duration(spark, store_path: str, duration: str) -> None:
-    """Pin the store's base window duration in a ``_meta.json``
-    sidecar on first write; later writes with a DIFFERENT duration
-    raise — mixing window widths in one partial store would silently
-    corrupt every merged read."""
-    import json
-
-    from ..sources.sinks import hadoop_fs
-
-    _duration_seconds(duration)  # reject unsupported width syntax early
-    fs, mpath = hadoop_fs(spark, f"{store_path}/_meta.json")
-    if fs.exists(mpath):
-        raw = fs.open(mpath)
-        try:
-            data = bytes(
-                spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray(
-                    raw
-                )
-            )
-        finally:
-            raw.close()
-        stored = json.loads(data.decode("utf-8"))["duration"]
-        if stored != duration:
-            raise ValueError(
-                f"rollup store {store_path} was built with duration "
-                f"{stored!r}; refusing to upsert {duration!r} partials "
-                "into it (mixed widths corrupt merged reads). Coarser "
-                "readouts belong at read time: read_rollup(..., "
-                "coarsen=...)."
-            )
-        return
-    out = fs.create(mpath, True)
-    try:
-        out.write(bytearray(json.dumps({"duration": duration}).encode()))
-    finally:
-        out.close()
-
-
-def _store_duration(spark, store_path: str) -> str | None:
-    """The base window duration pinned in the store's _meta.json."""
-    import json
-
-    from ..sources.sinks import hadoop_fs
-
-    fs, mpath = hadoop_fs(spark, f"{store_path}/_meta.json")
-    if not fs.exists(mpath):
-        return None
-    raw = fs.open(mpath)
-    try:
-        data = bytes(
-            spark.sparkContext._jvm.org.apache.commons.io.IOUtils.toByteArray(raw)
-        )
-    finally:
-        raw.close()
-    return json.loads(data.decode("utf-8"))["duration"]
+    return sorted(
+        {
+            unquote(seg.split("=", 1)[1])
+            for f in tx_vacuum(spark, store_path)
+            for seg in f.split("/")
+            if seg.startswith(f"{_BATCH}=")
+        }
+    )
 
 
 _UNIT_SECONDS = {
@@ -734,12 +583,10 @@ _UNIT_SECONDS = {
 }
 
 
-def _duration_seconds(s: str | None) -> int | None:
+def _duration_seconds(s: str) -> int:
     """Parse Spark's '<n> <unit>' window-duration strings to seconds
     (the subset the rollup store accepts — sub-second widths are not
     meaningful for a persisted rollup)."""
-    if s is None:
-        return None
     parts = s.strip().split()
     if len(parts) != 2 or not parts[0].isdigit() or parts[1] not in _UNIT_SECONDS:
         raise ValueError(

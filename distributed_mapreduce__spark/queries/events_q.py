@@ -157,12 +157,13 @@ def rollup_read_parity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Splits ``events`` into three deterministic batches
     (``event_id % 3``), upserts each as 10-minute mergeable partials
-    into a FRESH store (so retries never trip the retired-batch-id
-    guard), compacts the three batch dirs into one, then reads the
-    store coarsened to 30-minute windows. The oracle is a direct
-    30-minute tumbling aggregate over ALL events — parity proves the
-    whole chain (batch split → partial agg → idempotent upsert →
-    crash-safe compaction → read-time coarsening) loses and
+    into a FRESH store (a txlog table; fresh so retries never trip the
+    retired-batch-id guard), compacts the three batches into one
+    target with one conflict-checked rewrite commit, then reads the
+    store's snapshot coarsened to 30-minute windows. The oracle is a
+    direct 30-minute tumbling aggregate over ALL events — parity
+    proves the whole chain (batch split → partial agg → txn-idempotent
+    upsert → compaction commit → read-time coarsening) loses and
     double-counts nothing, bit-exactly. History is never re-scanned:
     each upsert aggregates only its own batch; the read merges
     partials (decimal(38,4) additive) and derives avg with the same

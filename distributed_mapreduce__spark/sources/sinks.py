@@ -14,8 +14,6 @@ so the only user-visible sinks we provide are *result* writers:
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -110,208 +108,6 @@ def write_bucketed_table(
     if path is not None:
         w = w.option("path", path)
     w.saveAsTable(table)
-
-
-def merge_keyed(
-    batch: DataFrame,
-    path: str,
-    key_cols: Sequence[str],
-    partition_cols: Sequence[str] = (),
-    stable_partitions: bool = False,
-) -> None:
-    """MERGE (upsert) ``batch`` into the keyed parquet dataset at
-    ``path``: rows whose key matches an existing row REPLACE it, new
-    keys are appended, untouched rows survive — the incremental-
-    pipeline primitive (the ``incremental_dedup`` story needs "upsert
-    today's survivors into the corpus") when no transactional table
-    format (Delta/Iceberg) is available.
-
-    Plan shape, designed for the partitioned case at scale:
-
-    1. find the touched partitions: the batch's own distinct partition
-       tuples, PLUS any partition holding a PRIOR version of a batch
-       key (a key-column-pruned scan + semi-join — so a key that MOVES
-       partitions is deleted from its old home rather than left as a
-       stale duplicate);
-    2. the touched set (small) broadcast-semi-join-prunes the existing
-       dataset, so only touched partitions are fully read — partition
-       pruning shows up as PartitionFilters;
-    3. existing-minus-batch via LEFT ANTI join on the key (one shuffle
-       on the key, or broadcast when the batch is small — AQE picks);
-    4. union with the batch, localCheckpoint (cuts lineage so the
-       overwrite doesn't re-scan the files it replaces — Spark cannot
-       overwrite a path it is still lazily reading), then dynamic
-       partition overwrite of exactly the touched partitions;
-    5. VACATED partitions — touched, but with zero rows in the merged
-       output (a moved key was its old partition's ONLY row) — are
-       deleted explicitly: dynamic overwrite only rewrites partitions
-       PRESENT in the output, so without this step the stale row would
-       silently survive as a duplicate key. The diff costs one
-       distinct over the (already checkpointed) merged partition
-       columns vs the small touched set.
-
-    Unpartitioned datasets merge with a FULL rewrite staged through a
-    sibling temp directory + renames — the in-place overwrite would
-    delete the old files before the job that needs them is
-    fault-tolerant (localCheckpoint blocks are not replicated; losing
-    an executor mid-overwrite would lose data). The swap order is
-    crash-safe: write ``<path>._merge_tmp`` → rename the live dataset
-    aside to ``<path>._merge_old`` → rename tmp into place → delete
-    old. Both datasets exist on disk at every instant; if a crash
-    between the renames leaves ``path`` absent, recover with
-    :func:`recover_unpartitioned_merge` (renames the COMPLETED tmp
-    into place, or the old dataset back if tmp is gone). Partition
-    anything you merge into repeatedly. Re-running the same merge is
-    idempotent. ``batch`` must be unique per key — pick survivors
-    first (``url_dedup`` / ``top_k_per_group``) if it isn't; with
-    duplicate keys the result would keep all of them.
-
-    ``stable_partitions=True`` is the scale knob for step 1: it skips
-    the whole-dataset key scan when the caller GUARANTEES a key's
-    partition value never changes (e.g. partitioned by a hash or other
-    pure function of the key — the dedup-index-by-doc_id shape). The
-    migration scan is column-pruned (keys + partition values only) but
-    still touches every partition's footers and key pages; with the
-    guarantee it is pure waste. With the flag set, a key that DOES
-    move partitions silently duplicates — that is the contract
-    violation, not a merge bug.
-    """
-    spark = batch.sparkSession
-    keys = list(key_cols)
-    parts = list(partition_cols)
-
-    fs, hpath = hadoop_fs(spark, path)
-    if not fs.exists(hpath):
-        # a missing live dataset PLUS staging leftovers means a prior
-        # unpartitioned merge crashed mid-swap: treating that as a
-        # fresh dataset would write batch-only data (silently dropping
-        # every pre-crash row) and the next merge's stale-staging
-        # delete would then destroy the only complete copy
-        tmp = hadoop_fs(spark, path.rstrip("/") + "._merge_tmp")[1]
-        old = hadoop_fs(spark, path.rstrip("/") + "._merge_old")[1]
-        if fs.exists(tmp) or fs.exists(old):
-            raise RuntimeError(
-                f"merge_keyed: no dataset at {path} but staging dirs "
-                "from an interrupted merge exist — run "
-                "recover_unpartitioned_merge(spark, path) first"
-            )
-        if parts:
-            batch.write.partitionBy(*parts).parquet(path)
-        else:
-            batch.write.parquet(path)
-        return
-
-    existing = spark.read.parquet(path)
-    batch_keys = batch.select(*keys).distinct()
-    if parts:
-        # partitions the batch writes into, plus (unless the caller
-        # guarantees partition-stable keys) any partition holding a
-        # prior version of a batch key (keys+parts scan is column-
-        # pruned; the old row must be dropped from its OLD partition
-        # when the key's partition value changed)
-        touched = batch.select(*parts)
-        if not stable_partitions:
-            touched = touched.unionByName(
-                existing.select(*keys, *parts).join(batch_keys, keys, "left_semi")
-                .select(*parts)
-            )
-        touched = touched.distinct()
-        existing = existing.join(F.broadcast(touched), parts, "left_semi")
-    keep = existing.join(batch_keys, keys, "left_anti")
-    merged = keep.unionByName(batch)
-    if parts:
-        merged_ck = merged.localCheckpoint()
-        # the touched set must materialize BEFORE the overwrite: its
-        # plan reads the pre-merge files the overwrite replaces
-        touched_vals = (
-            None
-            if stable_partitions
-            else {tuple(r) for r in touched.collect()}
-        )
-        overwrite_partitions(merged_ck, path, *parts)
-        if touched_vals is not None:
-            # step 5: delete touched-but-vacated partitions (dynamic
-            # overwrite never rewrites a partition absent from the
-            # output). Under stable_partitions a key can't vacate its
-            # partition, so the diff is skipped with the scan.
-            written = {
-                tuple(r) for r in merged_ck.select(*parts).distinct().collect()
-            }
-            for vals in sorted(
-                touched_vals - written, key=lambda t: tuple(map(str, t))
-            ):
-                fs.delete(_partition_path(spark, path, parts, vals), True)
-    else:
-        # staged rewrite: the tmp write reads the live dataset safely;
-        # then three fast metadata ops swap it in with both datasets
-        # on disk at every instant (crash-safe — see docstring)
-        tmp = hadoop_fs(spark, path.rstrip("/") + "._merge_tmp")[1]
-        old = hadoop_fs(spark, path.rstrip("/") + "._merge_old")[1]
-        merged.write.mode("overwrite").parquet(str(tmp))
-        fs.delete(old, True)  # stale leftover from a prior crash
-        _rename_or_raise(fs, hpath, old)
-        _rename_or_raise(fs, tmp, hpath)
-        fs.delete(old, True)
-
-
-def _rename_or_raise(fs, src, dst) -> None:
-    """Hadoop FileSystem.rename reports failure by RETURNING FALSE, not
-    raising; continuing past a failed swap rename would move the next
-    dir INSIDE a still-existing destination and corrupt the dataset."""
-    if not fs.rename(src, dst):
-        raise RuntimeError(
-            f"merge swap rename failed: {src} -> {dst} (destination "
-            "exists or filesystem refused) — dataset left as-is; run "
-            "recover_unpartitioned_merge to inspect/repair"
-        )
-
-
-def _partition_path(spark, base: str, cols: Sequence[str], vals: Sequence):
-    """Hadoop Path of one hive-style partition directory
-    (``base/col1=v1/col2=v2``), escaping values the way Spark's writer
-    does (falls back to str() if the internal escape helper moves)."""
-    jvm = spark._jvm
-    esc = jvm.org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName
-    try:
-        esc("probe")  # a missing class surfaces as a non-callable py4j package
-    except Exception:  # noqa: BLE001
-        esc = str
-    segs = [
-        f"{c}={'__HIVE_DEFAULT_PARTITION__' if v is None else esc(str(v))}"
-        for c, v in zip(cols, vals)
-    ]
-    return jvm.org.apache.hadoop.fs.Path("/".join([base.rstrip("/")] + segs))
-
-
-def recover_unpartitioned_merge(spark, path: str) -> str:
-    """Recover an unpartitioned :func:`merge_keyed` interrupted between
-    its swap renames. Returns what was done: ``'intact'`` (live dataset
-    present — only stale staging dirs were cleaned), ``'rolled_forward'``
-    (the completed ``._merge_tmp`` renamed into place), or
-    ``'rolled_back'`` (no tmp — the ``._merge_old`` dataset restored).
-
-    Safe to call unconditionally; raises if no dataset exists in any of
-    the three locations."""
-    fs, hpath = hadoop_fs(spark, path)
-    tmp = hadoop_fs(spark, path.rstrip("/") + "._merge_tmp")[1]
-    old = hadoop_fs(spark, path.rstrip("/") + "._merge_old")[1]
-    if fs.exists(hpath):
-        # a crash AFTER the tmp→path rename can leave ._merge_old; a
-        # crash during the tmp write can leave a partial ._merge_tmp —
-        # with the live dataset in place both are stale staging state
-        fs.delete(tmp, True)
-        fs.delete(old, True)
-        return "intact"
-    if fs.exists(tmp):
-        _rename_or_raise(fs, tmp, hpath)
-        fs.delete(old, True)
-        return "rolled_forward"
-    if fs.exists(old):
-        _rename_or_raise(fs, old, hpath)
-        return "rolled_back"
-    raise FileNotFoundError(
-        f"no dataset at {path}, {tmp}, or {old} — nothing to recover"
-    )
 
 
 def write_training_shards(

@@ -237,7 +237,8 @@ def _refuse_mor(snap: "_Snapshot", path: str, op: str) -> None:
 
 
 def _check_append_schema(
-    df: DataFrame, path: str, schema_mode: str
+    df: DataFrame, path: str, schema_mode: str,
+    snap: "_Snapshot | None" = None,
 ) -> "int | None":
     """Schema-on-write (the Delta contract): an append whose schema
     differs from the table's is refused by default — a reader using
@@ -252,15 +253,17 @@ def _check_append_schema(
     whenever the log has advanced past this anchor, so a concurrent
     overwrite that retypes a column between the pre-stage check and
     the commit race cannot slip a mixed-type file set past
-    enforcement (the commit-time metadata re-check Delta does)."""
+    enforcement (the commit-time metadata re-check Delta does).
+    ``snap`` is the caller's current snapshot, when it holds one."""
     if schema_mode not in ("enforce", "merge"):
         raise ValueError(
             f"schema_mode must be enforce|merge, got {schema_mode!r}"
         )
-    try:
-        snap = _replay(df.sparkSession, path)
-    except FileNotFoundError:
-        return None  # first commit defines the schema
+    if snap is None:
+        try:
+            snap = _replay(df.sparkSession, path)
+        except FileNotFoundError:
+            return None  # first commit defines the schema
     current = snap.schema
     if current is None:
         return snap.version  # pre-schema-recording: nothing to enforce
@@ -844,17 +847,20 @@ def _transform_literal(pf: _PartField, v):
 
 
 def _path_partition_stats(
-    files: "list[str]", fields: "list[_PartField]"
+    files: "list[str]", fields: "list[_PartField]", idents=frozenset()
 ) -> dict:
-    """[v, v] stats for TRANSFORM partition fields, parsed from the
-    placed relative paths — the directory chain is authoritative (one
-    value per leaf dir) and costs ZERO I/O; identity fields keep
-    coming from the typed data read-back pass. bucket/integral-
-    truncate values store as ints (matching the prune side's math);
-    everything else as the exact directory string (hive-unescaped,
-    same convention as _collect_stats' key fix)."""
+    """[v, v] stats for TRANSFORM partition fields and the identity
+    fields named in ``idents``, parsed from the placed relative paths
+    — the directory chain is authoritative (one value per leaf dir)
+    and costs ZERO I/O; other identity fields keep coming from the
+    typed data read-back pass. bucket/integral-truncate values store
+    as ints (matching the prune side's math); everything else as the
+    exact directory string (hive-unescaped, same convention as
+    _collect_stats' key fix)."""
     by_name = {
-        pf.name: pf for pf in fields if pf.transform != "identity"
+        pf.name: pf
+        for pf in fields
+        if pf.transform != "identity" or pf.name in idents
     }
     if not by_name:
         return {}
@@ -1397,12 +1403,29 @@ def _collect_stats(
     fields = _parse_partition_spec(
         snap.partition_by if snap is not None else None
     )
+    # a STRING identity partition column's typed value is its
+    # hive-unescaped directory value: its [v, v] comes from the paths,
+    # and a commit whose stats are only such columns runs no job
+    types = {
+        _field_phys(f): f["type"]
+        for f in json.loads(snap.schema)["fields"]
+    } if snap is not None and snap.schema else {}
+    idents = {
+        pf.name
+        for pf in fields
+        if pf.transform == "identity" and types.get(pf.name) == "string"
+    }
+    path_stats = _path_partition_stats(files, fields, idents)
     data_cols: "set[str]" = set()
     for c in cols:
+        if c in idents:
+            continue
         pf = _parse_derived_name(c)
         if pf is None:
             (pf,) = _parse_partition_spec([c])
         data_cols.add(pf.source)
+    if not data_cols:
+        return path_stats
     aggs = []
     cols = sorted(data_cols)
     # round 16 (VERDICT r15 #5): for unpartitioned commits, ride the
@@ -1447,7 +1470,7 @@ def _collect_stats(
             c: [_json_stat(r[f"__lo_{c}"]), _json_stat(r[f"__hi_{c}"])]
             for c in cols
         }
-    for f, ent in _path_partition_stats(files, fields).items():
+    for f, ent in path_stats.items():
         out.setdefault(f, {}).update(ent)
     return out
 
@@ -1837,10 +1860,14 @@ def tx_write(
                 f"partition names; rename them"
             )
     checked_at = (
-        _check_append_schema(df, path, schema_mode)
+        _check_append_schema(df, path, schema_mode, snap0)
         if mode == "append"
         else None
     )
+    if not table_exists:
+        # the claim loop looks for ``txn`` only above the anchor, whose
+        # txn map must have been checked (snap0's was, above)
+        checked_at = None
     if table_exists:
         _check_constraints(
             df, snap0.properties, path, f"tx_write(mode={mode!r})"
@@ -3954,7 +3981,12 @@ def _commit_rewrite(
                 )
         return payload
 
-    return _commit(spark, path, build, txn, max_retries)
+    # ``snap`` is the caller's txn-checked plan snapshot (see
+    # _mutation_prelude), so the claim loop checks only the commits
+    # after it
+    return _commit(
+        spark, path, build, txn, max_retries, checked_at=snap.version
+    )
 
 
 def _rewrite_stats(

@@ -1063,24 +1063,42 @@ def _commit_with_retries(
     version race, including the one that took our version, can never
     invalidate them unseen (the commit-time metadata conflict re-check
     Delta does). ``build_payload`` may raise to refuse a commit whose
-    per-attempt checks fail."""
+    per-attempt checks fail.
+
+    ``txn`` is looked up in the commits above ``checked_at`` only: a
+    caller passing an anchor has already checked the txn map of the
+    snapshot at it. Without an anchor, or when those commits are no
+    longer all in the log (vacuum truncated it), the whole log is
+    folded."""
     fs, p = _log_fs(spark, path)
     anchor = -1 if checked_at is None else checked_at
+    txn_seen = checked_at
     for _ in range(max_retries):
-        if txn is not None and (
-            prior := _committed_txns(spark, path).get(txn)
-        ) is not None:
-            # a concurrent retry of the SAME txn won the race; our
-            # staged files are orphans until tx_vacuum
-            return prior, False
+        listing = _list_commits(spark, path)
         # max over commits AND checkpoints: after tx_vacuum truncates
         # the log, the surviving checkpoint still pins the version
         # counter (restarting at 0 would order new commits BEFORE it)
-        versions = [v for v, _ in _list_commits(spark, path)]
-        next_v = (max(versions) + 1) if versions else 0
-        if revalidate is not None and versions and max(versions) > anchor:
+        versions = [v for v, _ in listing]
+        top = max(versions) if versions else -1
+        if txn is not None:
+            above = None if txn_seen is None else range(txn_seen + 1, top + 1)
+            if above is None or not {
+                v for v, kind in listing if kind == "commit"
+            }.issuperset(above):
+                prior = _committed_txns(spark, path).get(txn)
+            else:
+                prior = next((v for v in above if _load(
+                    spark, path, f"{v:0{_PAD}d}.json"
+                ).get("txn") == txn), None)
+            if prior is not None:
+                # a concurrent retry of the SAME txn won the race; our
+                # staged files are orphans until tx_vacuum
+                return prior, False
+            txn_seen = top
+        next_v = top + 1
+        if revalidate is not None and versions and top > anchor:
             revalidate()
-            anchor = max(versions)
+            anchor = top
         payload = build_payload(next_v)
         if fs.publish(
             f"{p}/_txlog/{next_v:0{_PAD}d}.json",

@@ -12,8 +12,9 @@ per-arrival cost.
 
 Scale shape:
 
-- The index is (vec_id, bucket, embedding, vnorm) parquet — built in
-  one corpus pass. Per batch, the work is: bucket the batch (planes
+- The index is a (vec_id, bucket, embedding, vnorm) txlog table
+  (sources/txlog.py) — built in one corpus pass, upserted by
+  ``tx_merge``, read by snapshot. Per batch, the work is: bucket the batch (planes
   are a broadcast constant), expand ids-only probes (two longs per
   row), equi-join on ``bucket`` against the index, score candidates
   exactly, window top-k per query. Candidate volume ≈ batch_size ×
@@ -27,16 +28,14 @@ Scale shape:
   checkpoint replay needs for effectively-exactly-once output.
 - Hyperplanes are md5-derived pure functions of (n_planes, dim)
   (operators/similarity.py:hyperplanes), so the index only persists
-  those two ints (a sibling ``._ann_meta`` parquet — outside the data
-  directory so maintenance swaps cannot orphan it); batch and corpus
-  bucketing agree by construction across restarts and even engines.
+  those two ints (a sibling ``._ann_meta`` parquet, written once per
+  build); batch and corpus bucketing agree by construction across
+  restarts and even engines.
 
 Swap notes for a real deployment: the arrival source here is any
 Structured Streaming reader (files in tests; Kafka via
-``spark.readStream.format("kafka")`` where a broker exists), and the
-index store would be a transactional table (Delta/Iceberg) if the
-corpus itself also grows — see sources/sinks.py:merge_keyed for the
-maintenance path.
+``spark.readStream.format("kafka")`` where a broker exists); a growing
+corpus folds in through :func:`upsert_ann_index`.
 """
 
 from __future__ import annotations
@@ -54,19 +53,19 @@ def build_ann_index(
     dim: int = 64,
     vec_col: str = "embedding",
 ) -> int:
-    """One corpus pass → persisted ANN index at ``index_path``:
-    (vec_id, bucket, embedding, vnorm) parquet plus a 1-row sidecar
-    parquet at ``index_path + "._ann_meta"`` pinning (n_planes, dim).
-    The sidecar is a SIBLING, not a subdirectory: index maintenance
-    (:func:`upsert_ann_index` → merge_keyed) swaps the whole data
-    directory, and metadata must survive that swap. Returns the
-    resolved n_planes (log-N sized unless pinned by the caller)."""
+    """One corpus pass → persisted ANN index at ``index_path``: a
+    (vec_id, bucket, embedding, vnorm) txlog table written by one
+    overwrite commit, plus a 1-row sidecar parquet at
+    ``index_path + "._ann_meta"`` pinning (n_planes, dim) — a sibling,
+    outside the table directory. Returns the resolved n_planes (log-N
+    sized unless pinned by the caller)."""
     from ..operators.similarity import (
         hyperplanes,
         lsh_buckets,
         resolve_n_planes,
         with_norm,
     )
+    from ..sources.txlog import tx_write
 
     spark = corpus.sparkSession
     if n_planes is None:
@@ -76,7 +75,7 @@ def build_ann_index(
     indexed = normed.join(
         lsh_buckets(corpus, planes, vec_col=vec_col), "vec_id"
     ).select("vec_id", "bucket", F.col(vec_col).alias("embedding"), "vnorm")
-    indexed.write.mode("overwrite").parquet(index_path)
+    tx_write(indexed, index_path, mode="overwrite")
     local_frame(
         spark, [(n_planes, dim)], "n_planes int, dim int"
     ).write.mode("overwrite").parquet(_meta_path(index_path))
@@ -176,16 +175,14 @@ def stream_topk_against_index(
     Returns the started StreamingQuery; drive with
     ``processAllAvailable()`` in tests.
 
-    CONCURRENCY CONTRACT with :func:`upsert_ann_index`: index rows are
-    re-read per batch (so merged-in vectors become visible), but the
-    unpartitioned merge swap briefly renames the data directory — a
-    micro-batch that lists the index in that window fails and kills
-    the query. Run maintenance between batches (stop/start, or a
-    trigger gap), exactly as one would coordinate any parquet
-    swap-rewrite with its readers; a transactional table format is the
-    no-coordination upgrade path."""
+    The index is re-read per batch as a snapshot (``tx_read``), so
+    vectors merged in by :func:`upsert_ann_index` become visible at the
+    next batch, and a batch planned before an upsert commits keeps
+    reading the files of its own snapshot — maintenance needs no
+    coordination with the stream."""
     def _process(batch_df: DataFrame, batch_id: int) -> None:
         from ..sources.sinks import overwrite_partitions
+        from ..sources.txlog import tx_read
 
         spark = batch_df.sparkSession
         if batch_df.isEmpty():
@@ -197,7 +194,7 @@ def stream_topk_against_index(
         # cost is one tiny 1-row read per batch; correctness under
         # rebuilds is worth it.
         n_planes, dim = load_ann_meta(spark, index_path)
-        index = spark.read.parquet(index_path)
+        index = tx_read(spark, index_path)
         out = topk_against_index(
             batch_df,
             index,
@@ -228,19 +225,16 @@ def upsert_ann_index(
     log-N sizing rule is applied at build time, not here; rebuild via
     :func:`build_ann_index` when the corpus outgrows its plane count).
 
-    Delegates storage to ``sources/sinks.merge_keyed`` on ``vec_id``:
-    an updated vector replaces its old row (stale buckets cannot
-    linger), new ids append, untouched rows are not rewritten beyond
-    merge_keyed's documented unpartitioned swap. The composition a
-    growing corpus needs alongside :func:`stream_topk_against_index`:
-    score arrivals against the index, then fold the arrivals in.
-
-    DO NOT run concurrently with an active stream over the same
-    index: the merge's directory swap has a brief rename window that
-    fails a reader listing the path mid-swap (see the concurrency
-    contract on :func:`stream_topk_against_index`)."""
+    One ``tx_merge`` on ``vec_id`` (``new_vecs`` holds at most one row
+    per id): an updated vector replaces its old row (stale buckets
+    cannot linger), new ids append, and only the files whose id range
+    can hold a merged id are rewritten. The merge records no change
+    feed (nothing reads the index's). The composition a growing corpus
+    needs alongside :func:`stream_topk_against_index`: score arrivals
+    against the index, then fold the arrivals in — safe while the
+    stream runs, whose reads are snapshots."""
     from ..operators.similarity import hyperplanes, lsh_buckets, with_norm
-    from ..sources.sinks import merge_keyed
+    from ..sources.txlog import tx_merge
 
     spark = new_vecs.sparkSession
     n_planes, dim = load_ann_meta(spark, index_path)
@@ -250,4 +244,4 @@ def upsert_ann_index(
         .join(lsh_buckets(new_vecs, planes, vec_col=vec_col), "vec_id")
         .select("vec_id", "bucket", F.col(vec_col).alias("embedding"), "vnorm")
     )
-    merge_keyed(rows, index_path, key_cols=["vec_id"])
+    tx_merge(rows, index_path, "vec_id", cdf=False)

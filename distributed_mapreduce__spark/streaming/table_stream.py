@@ -440,7 +440,8 @@ def rollup_view_available_now(
     the additive store nets them out; no history rescan, ever.)
 
     Each source version becomes one idempotent store batch
-    (``batch_id='v<N>'``, dynamic-partition overwrite), cursor
+    (``batch_id='v<N>'``, one append under txn ``rollup:v<N>`` —
+    a replay re-derives the same rows and is a no-op), cursor
     persisted after the fold — the same crash calculus as
     :func:`pipe_available_now`. Delete versions use the change feed's
     ``preimage=True`` arm: retraction needs the deleted rows' window
@@ -452,8 +453,8 @@ def rollup_view_available_now(
     ONE signed fold (``fold_rollup_cdf``), so even a crash replay
     never exposes a half-applied merge to readers. A source OVERWRITE
     (including RESTORE) becomes an atomic store RESET
-    (``reset_rollup``): one marker commit retires every prior batch
-    and reveals the new snapshot's partials — readers never see
+    (``reset_rollup``): one overwrite commit of the store retires
+    every prior batch and reveals the new snapshot's partials — readers never see
     empty, doubled, or half-reset state, and incremental maintenance
     resumes on top. The invariant (pinned by tests) is
     ``read_rollup(store) == full recompute over tx_read(src)`` after

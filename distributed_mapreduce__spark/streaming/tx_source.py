@@ -845,8 +845,10 @@ class TxTableStreamWriter(DataSourceStreamArrowWriter):
         self._partition_by = view.snap.partition_by or []
         self.rt = _row_tracking_on(props)
         #: the log version these checks hold at — the claim loop
-        #: re-runs them once the log moves past it
+        #: re-runs them once the log moves past it, and looks for a
+        #: batch's txn only above it (``txns`` is the map below it)
         self.checked_at = view.snap.version
+        self.txns = dict(view.snap.txns)
 
     # -- executors --------------------------------------------------
     def write(self, iterator) -> _SinkCommitMessage:
@@ -1014,10 +1016,12 @@ class TxTableStreamWriter(DataSourceStreamArrowWriter):
                 )
             return payload
 
-        version, published = _commit_with_retries(
-            None, self.path, build, txn, 20,
-            revalidate=revalidate, checked_at=self.checked_at,
-        )
+        version, published = None, False
+        if txn not in self.txns:
+            version, published = _commit_with_retries(
+                None, self.path, build, txn, 20,
+                revalidate=revalidate, checked_at=self.checked_at,
+            )
         if not published:
             # replayed batch after a crash between the table commit
             # and Spark's checkpoint commit: the first attempt won —
@@ -1026,6 +1030,7 @@ class TxTableStreamWriter(DataSourceStreamArrowWriter):
             return
         # nothing landed between the checks and this commit
         self.checked_at = version
+        self.txns[txn] = version
 
     def abort(self, messages, batchId: int) -> None:
         self._drop_staged(messages)

@@ -105,23 +105,23 @@ def stream_rollup(
     writer: str = "s",
 ):
     """Continuously fold an event stream into the incremental rollup
-    store (operators/timeseries.upsert_rollup) via ``foreachBatch``:
-    batch N's window partials land under ``batch=<writer><N>`` with
-    dynamic partition overwrite, so the engine's retry of a failed
-    batch (same batch id, per the checkpoint contract) REPLACES the
-    partial instead of double-counting — effectively-exactly-once
-    aggregates over an unbounded stream, with the state in storage,
-    not memory (the streaming-incremental-dedup posture).
+    store (operators/timeseries.upsert_rollup, a txlog table) via
+    ``foreachBatch``: batch N's window partials commit under txn
+    ``rollup:<writer><N>``, so the engine's retry of a failed batch
+    (same batch id, per the checkpoint contract) is a no-op instead of
+    a double count — effectively-exactly-once aggregates over an
+    unbounded stream, with the state in storage, not memory (the
+    streaming-incremental-dedup posture).
 
     **Writer contract (one stream per prefix):** batch numbering comes
     from each stream's OWN checkpoint, so two concurrent streams
-    sharing one store and one prefix would both write ``batch=s0``,
-    ``batch=s1``, ... — dynamic partition overwrite would make them
-    silently clobber each other's partials. Each stream therefore
-    CLAIMS its ``writer`` prefix in ``_writers/<writer>.json`` (atomic
-    tmp+rename, recording its checkpoint path) before starting; a
-    second stream with a different checkpoint asking for a claimed
-    prefix raises loudly instead of corrupting the store. A restart of
+    sharing one store and one prefix would both fold ``s0``, ``s1``,
+    ... — the second stream's batches would be silently dropped as
+    replays. Each stream therefore CLAIMS its ``writer`` prefix as the
+    store property ``rollup.writer.<writer>`` (one txn-guarded commit
+    recording its checkpoint path) before starting; a second stream
+    with a different checkpoint asking for a claimed prefix raises
+    loudly instead of losing batches. A restart of
     the SAME stream (same checkpoint) re-enters its claim and resumes
     idempotently. Fan-in from multiple streams is supported by giving
     each a distinct ``writer`` — ``read_rollup`` merges partials

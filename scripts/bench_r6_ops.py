@@ -49,6 +49,7 @@ from distributed_mapreduce__spark.operators.substring_dedup import (  # noqa: E4
 )
 from distributed_mapreduce__spark.session import build_session  # noqa: E402
 from distributed_mapreduce__spark.sources.tables import load_table  # noqa: E402
+from distributed_mapreduce__spark.sources.txlog import tx_read  # noqa: E402
 from distributed_mapreduce__spark.streaming.similarity import (  # noqa: E402
     build_ann_index,
     topk_against_index,
@@ -88,7 +89,7 @@ def measure(spark, sf_dir: str, tmp: str) -> dict[str, float]:
     out["ann_build"] = round(time.perf_counter() - t0, 3)
 
     queries = emb.orderBy("vec_id").limit(1000)
-    index = spark.read.parquet(idx_path)
+    index = tx_read(spark, idx_path)
     _, dim = (n_planes, 64)
     t0 = time.perf_counter()
     _noop(topk_against_index(queries, index, n_planes, dim, k=10, probe_radius=1))

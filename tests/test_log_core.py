@@ -80,6 +80,28 @@ def test_log_fold_and_claim_loop_live_in_one_place():
     assert not _package_hits(r"O_EXCL")
 
 
+def test_stores_commit_only_through_the_log():
+    """The rollup store and the ANN index are txlog tables: no bespoke
+    commit protocol is left outside ``sources/txlog*`` — no compaction
+    markers, writer sidecars, merge staging dirs or py4j stream drains
+    — and the only other ``.rename(`` publishes the pipe cursor."""
+    from distributed_mapreduce__spark.streaming import table_stream
+
+    def outside(pattern):
+        return {
+            h for h in _package_hits(pattern)
+            if not re.fullmatch(r"sources/txlog\w*\.py", h[0])
+        }
+
+    for pattern in (
+        r"_compactions", r"_writers/", r"_merge_tmp", r"merge_keyed",
+        r"IOUtils\.toByteArray",
+    ):
+        assert not outside(pattern), pattern
+    cursor = _lines_of(table_stream.save_cursor, r"\.rename\(")
+    assert cursor and outside(r"\.rename\(") == cursor
+
+
 def test_mutation_conflict_rules_live_in_one_commit_body():
     """Every data-changing mutation — copy-on-write rewrites and
     deletion-vector DELETE/UPDATE alike — commits through
@@ -181,10 +203,14 @@ class _CountingFS(txlog_core._LocalPlannerFS):
 #: reads, checkpoint reads). Counted through the core's local FS
 #: object, so they hold on any box.
 LOG_READ_PINS = {
-    "append": (3, 4, 2),
-    "pipe_tick": (6, 10, 4),
+    "append": (2, 2, 1),
+    "pipe_tick": (4, 6, 2),
     "update": (2, 3, 1),
     "merge": (2, 5, 1),
+    # one version later than "merge", so its replay reads one more
+    # commit above the checkpoint; the txn check itself reads nothing
+    # more while the log has not moved past the merge's snapshot
+    "merge_txn": (2, 6, 1),
 }
 
 
@@ -216,6 +242,8 @@ def test_log_reads_pinned(spark, tmp_path, monkeypatch):
     fs.take()
     tx_merge(rows(0, 5, "m"), src, "id")
     got["merge"] = fs.take()
+    tx_merge(rows(0, 5, "n"), src, "id", txn="m2")
+    got["merge_txn"] = fs.take()
     got = {
         k: (v["list"], v["commit"], v["checkpoint"]) for k, v in got.items()
     }

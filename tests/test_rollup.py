@@ -1,8 +1,9 @@
-"""Incremental rollup store (operators/timeseries.py): batch-by-batch
-upserts must equal the full recompute exactly, retried batches must not
-double-count, compaction must preserve the rollup and be crash-safe at
-both windows (uncommitted target ignored; committed marker retires
-sources even before they are deleted)."""
+"""Incremental rollup store (operators/timeseries.py, a txlog table):
+batch-by-batch upserts must equal the full recompute exactly, retried
+batches must not double-count, and compaction must preserve the rollup
+— a crash before its commit changes no read, a fold committed while it
+runs stays counted, and the ids it retires stay retired through later
+compactions and vacuum."""
 
 from __future__ import annotations
 
@@ -10,10 +11,14 @@ import pytest
 from pyspark.sql import functions as F
 
 from distributed_mapreduce__spark.operators.timeseries import (
+    _batches,
+    _store_snapshot,
     compact_rollup,
     read_rollup,
+    retired_rollup_ids,
     tumbling,
     upsert_rollup,
+    vacuum_rollup,
 )
 from distributed_mapreduce__spark.sources.tables import load_table
 
@@ -32,6 +37,29 @@ def _snapshot(spark, store):
         (r.window_start, r.event_type): (r.n_events, r.sum_value, r.avg_value)
         for r in read_rollup(spark, store, KEYS).collect()
     }
+
+
+def _live(spark, store):
+    """Live batch ids, from the store's log alone."""
+    return sorted(_batches(_store_snapshot(spark, store)))
+
+
+def _recompute(parts):
+    full = parts[0]
+    for p in parts[1:]:
+        full = full.unionByName(p)
+    return {
+        (r.window_start, r.event_type): (r.n_events, r.sum_value, r.avg_value)
+        for r in tumbling(full, "1 hour", *KEYS).collect()
+    }
+
+
+class _Crash(Exception):
+    pass
+
+
+def _crash():
+    raise _Crash("process died before the commit published")
 
 
 def test_incremental_equals_full_recompute(spark, batches, tmp_path):
@@ -58,8 +86,6 @@ def test_retried_batch_is_idempotent(spark, batches, tmp_path):
 
 
 def test_compaction_preserves_and_bounds(spark, batches, tmp_path):
-    import os
-
     parts, _ = batches
     store = str(tmp_path / "roll")
     for i, b in enumerate(parts):
@@ -68,8 +94,8 @@ def test_compaction_preserves_and_bounds(spark, batches, tmp_path):
     target = compact_rollup(spark, store, KEYS)
     assert target == "c0"
     assert _snapshot(spark, store) == before
-    live = sorted(os.listdir(f"{store}/partials"))
-    assert [d for d in live if d.startswith("batch=")] == ["batch=c0"]
+    assert _live(spark, store) == ["c0"]
+    assert retired_rollup_ids(spark, store) == {"0", "1", "2"}
     # nothing left to compact
     assert compact_rollup(spark, store, KEYS) is None
     # further batches still merge on top of the compacted base
@@ -78,39 +104,52 @@ def test_compaction_preserves_and_bounds(spark, batches, tmp_path):
     assert after != before and set(after) >= set(before)
 
 
-def test_crash_windows(spark, batches, tmp_path):
-    """Window 1: compacted dir exists, marker never landed → reads
-    ignore the orphan (no double count). Window 2: marker landed,
-    sources not yet deleted → reads use the target and ignore
-    sources."""
-    import json
-    import os
-
+def test_crash_windows(
+    spark, batches, tmp_path, during_publish
+):
+    """A compaction that dies after staging its merged files but before
+    its commit publishes leaves every read, the live batches and the
+    retired set as they were; its staged files are debris vacuum
+    removes, and the next compaction commits normally."""
     parts, _ = batches
     store = str(tmp_path / "roll")
     for i, b in enumerate(parts[:2]):
         upsert_rollup(b, store, "1 hour", KEYS, batch_id=str(i))
     before = _snapshot(spark, store)
 
-    # window 1: orphan target, no marker
-    tgt = compact_rollup(spark, store, KEYS)
-    [mfile] = [
-        f for f in os.listdir(f"{store}/_compactions") if f.endswith(".json")
-    ]  # (the local Hadoop FS also writes .crc sidecars)
-    os.rename(f"{store}/_compactions/{mfile}", f"{store}/marker.bak")
-    # sources were deleted by the successful compaction — restore them
+    during_publish(_crash)
+    with pytest.raises(_Crash):
+        compact_rollup(spark, store, KEYS)
+    assert _snapshot(spark, store) == before
+    assert _live(spark, store) == ["0", "1"]
+    assert retired_rollup_ids(spark, store) == set()
+    # the ids are still live: a replay of either is a txn no-op
+    upsert_rollup(parts[0], store, "1 hour", KEYS, batch_id="0")
+    assert _snapshot(spark, store) == before
+
+    assert vacuum_rollup(spark, store) == ["c0"]  # the staged target
+    assert _snapshot(spark, store) == before
+    assert compact_rollup(spark, store, KEYS) == "c0"
+    assert _snapshot(spark, store) == before
+    assert _live(spark, store) == ["c0"]
+
+
+def test_fold_inside_compaction_window_stays_counted(
+    spark, batches, tmp_path, during_publish
+):
+    """A fold that commits while a compaction is in flight (inside its
+    publish window, so the compaction retries on the moved log) stays
+    live: the compaction removes exactly the files it read."""
+    parts, _ = batches
+    store = str(tmp_path / "roll")
     for i, b in enumerate(parts[:2]):
         upsert_rollup(b, store, "1 hour", KEYS, batch_id=str(i))
-    assert os.path.isdir(f"{store}/partials/batch={tgt}")
-    assert _snapshot(spark, store) == before  # orphan target ignored
-
-    # window 2: marker committed, sources still on disk
-    os.rename(f"{store}/marker.bak", f"{store}/_compactions/{mfile}")
-    marker = json.load(open(f"{store}/_compactions/{mfile}"))
-    assert marker["target"] == tgt
-    for b in marker["sources"]:
-        assert os.path.isdir(f"{store}/partials/batch={b}")  # not GC'd
-    assert _snapshot(spark, store) == before  # sources ignored, target used
+    during_publish(
+        lambda: upsert_rollup(parts[2], store, "1 hour", KEYS, batch_id="2")
+    )
+    assert compact_rollup(spark, store, KEYS) == "c0"
+    assert _live(spark, store) == ["2", "c0"]
+    assert _snapshot(spark, store) == _recompute(parts)
 
 
 def test_reserved_namespace_guard(spark, batches, tmp_path):
@@ -175,42 +214,37 @@ def test_retired_batch_id_refused(spark, batches, tmp_path):
     upsert_rollup(parts[0], store, "1 hour", KEYS, batch_id="fresh")
 
 
-def test_vacuum_deletes_only_dead_dirs(spark, batches, tmp_path):
-    """Vacuum removes committed-retired sources (the crash-before-GC
-    leftovers), spares orphan targets (self-recycled by the next
-    compaction, possibly in flight) and live batches, and never
-    changes what reads see."""
-    import shutil
-
-    from distributed_mapreduce__spark.operators.timeseries import (
-        vacuum_rollup,
-    )
+def test_vacuum_deletes_only_dead_dirs(spark, batches, tmp_path, during_publish):
+    """Vacuum removes the files of retired batches and a crashed
+    compaction's staged target, never a live file, and never changes
+    what reads see; a retired id is still refused after it."""
+    import os
 
     parts, _ = batches
     store = str(tmp_path / "roll")
     for i, b in enumerate(parts[:2]):
         upsert_rollup(b, store, "1 hour", KEYS, batch_id=str(i))
-    compact_rollup(spark, store, KEYS)  # retires 0,1 -> c0 (and GCs them)
+    compact_rollup(spark, store, KEYS)  # retires 0,1 -> c0
     upsert_rollup(parts[2], store, "1 hour", KEYS, batch_id="live")
-    # resurrect a retired source dir (simulating a crash before GC)
-    shutil.copytree(
-        f"{store}/partials/batch=live", f"{store}/partials/batch=0"
-    )
-    # an orphan target from a crashed later attempt (no marker)
-    shutil.copytree(f"{store}/partials/batch=live", f"{store}/partials/batch=c1")
+    during_publish(_crash)
+    with pytest.raises(_Crash):
+        compact_rollup(spark, store, KEYS)  # stages c1, never commits
 
     before = _snapshot(spark, store)
+    live_files = sorted(_store_snapshot(spark, store).eps)
     deleted = vacuum_rollup(spark, store)
-    assert deleted == ["0"]  # ONLY the retired source
+    assert deleted == ["0", "1", "c1"]  # retired sources + staged debris
     assert _snapshot(spark, store) == before
+    assert sorted(_store_snapshot(spark, store).eps) == live_files
+    assert all(os.path.exists(f"{store}/{f}") for f in live_files)
+    assert vacuum_rollup(spark, store) == []
+    with pytest.raises(ValueError, match="retired"):
+        upsert_rollup(parts[0], store, "1 hour", KEYS, batch_id="0")
 
-    # the orphan is recycled (overwritten) by the next real compaction,
-    # which targets the same seq its crashed predecessor used
     upsert_rollup(parts[0], store, "1 hour", KEYS, batch_id="more")
-    target = compact_rollup(spark, store, KEYS)
-    assert target == "c1"
+    assert compact_rollup(spark, store, KEYS) == "c1"
     assert _snapshot(spark, store) != before  # 'more' merged in
-    assert vacuum_rollup(spark, store) == []  # compaction GC'd its sources
+    assert vacuum_rollup(spark, store) == ["c0", "live", "more"]
 
 
 def test_extract_links_and_domain_ranks(spark):
@@ -265,33 +299,28 @@ def test_extract_links_and_domain_ranks(spark):
 
 
 def test_chain_compaction_never_resurrects_sources(spark, batches, tmp_path):
-    """The reproduced round-6 review bug: crash-before-GC leftovers
-    followed by a SECOND compaction (which deletes the first target)
-    must not resurrect the first compaction's sources — a committed
-    marker retires its sources forever, and vacuum still GCs them."""
-    import shutil
-
-    from distributed_mapreduce__spark.operators.timeseries import (
-        vacuum_rollup,
-    )
-
+    """A second compaction (which retires the first target) must not
+    bring back the first compaction's sources: their ids stay retired
+    — refused, skipped by reads — through both compactions and the
+    vacuum that deletes their files."""
     parts, _ = batches
     store = str(tmp_path / "roll")
     for i, b in enumerate(parts[:2]):
         upsert_rollup(b, store, "1 hour", KEYS, batch_id=str(i))
     truth_01 = _snapshot(spark, store)
-    compact_rollup(spark, store, KEYS)  # c0 <- {0,1}, GCs 0,1
-    # crash-before-GC: resurrect the source dirs on disk
+    compact_rollup(spark, store, KEYS)  # c0 <- {0,1}
     upsert_rollup(parts[2], store, "1 hour", KEYS, batch_id="2")
-    shutil.copytree(f"{store}/partials/batch=2", f"{store}/partials/batch=0")
-    shutil.copytree(f"{store}/partials/batch=2", f"{store}/partials/batch=1")
-    truth_all = _snapshot(spark, store)  # 0,1 retired -> c0 + 2 only
-    # second compaction: c1 <- {c0, 2}; deletes c0
-    compact_rollup(spark, store, KEYS)
-    assert _snapshot(spark, store) == truth_all  # no resurrection
-    deleted = vacuum_rollup(spark, store)
-    assert set(deleted) == {"0", "1"}  # leftovers GC'd despite c0 gone
+    truth_all = _snapshot(spark, store)
+    assert compact_rollup(spark, store, KEYS) == "c1"  # c1 <- {c0, 2}
+    assert _live(spark, store) == ["c1"]
+    assert _snapshot(spark, store) == truth_all == _recompute(parts)
+    assert retired_rollup_ids(spark, store) == {"0", "1", "2"}
+    for bid in ("0", "1"):
+        with pytest.raises(ValueError, match="retired"):
+            upsert_rollup(parts[0], store, "1 hour", KEYS, batch_id=bid)
+    assert vacuum_rollup(spark, store) == ["0", "1", "2", "c0"]
     assert _snapshot(spark, store) == truth_all
+    assert retired_rollup_ids(spark, store) == {"0", "1", "2"}
     assert truth_all != truth_01
 
 

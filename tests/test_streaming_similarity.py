@@ -12,6 +12,7 @@ import math
 import pytest
 from pyspark.sql import functions as F
 
+from distributed_mapreduce__spark.sources.txlog import tx_read
 from distributed_mapreduce__spark.streaming.similarity import (
     build_ann_index,
     load_ann_meta,
@@ -110,7 +111,7 @@ def _index(spark, tmp, corpus_vecs):
 def test_meta_roundtrip_and_index_schema(spark, tmp_path, corpus_vecs):
     path = _index(spark, tmp_path, corpus_vecs)
     assert load_ann_meta(spark, path) == (N_PLANES, DIM)
-    cols = set(spark.read.parquet(path).columns)
+    cols = set(tx_read(spark, path).columns)
     assert cols == {"vec_id", "bucket", "embedding", "vnorm"}
 
 
@@ -125,9 +126,9 @@ def test_upsert_ann_index_updates_and_appends(spark, tmp_path, corpus_vecs):
     upsert_ann_index(
         spark.createDataFrame(list(changes.items()), _VECS), path
     )
-    # meta survives the merge swap; one row per id; id 5 replaced
+    # meta survives the merge; one row per id; id 5 replaced
     assert load_ann_meta(spark, path) == (N_PLANES, DIM)
-    idx = spark.read.parquet(path)
+    idx = tx_read(spark, path)
     assert idx.count() == 7
     assert idx.filter(F.col("vec_id") == 5).count() == 1
     updated = {**corpus_vecs, **changes}
@@ -147,6 +148,31 @@ def test_upsert_ann_index_updates_and_appends(spark, tmp_path, corpus_vecs):
         assert gs == pytest.approx(ws, abs=1e-12)
 
 
+def test_index_read_planned_before_upsert_keeps_its_snapshot(
+    spark, tmp_path, corpus_vecs
+):
+    """A ``tx_read`` of the index planned before ``upsert_ann_index``
+    commits still returns the pre-upsert rows afterwards: the read
+    holds its snapshot's file list, and the merge commits new files
+    instead of swapping the directory under it."""
+    from distributed_mapreduce__spark.streaming.similarity import (
+        upsert_ann_index,
+    )
+
+    path = _index(spark, tmp_path, corpus_vecs)
+    planned = tx_read(spark, path)
+    pre = sorted((r.vec_id, r.bucket) for r in tx_read(spark, path).collect())
+    upsert_ann_index(
+        spark.createDataFrame(
+            [(5, _f32([-1.0, 0.05, 0.12, 0.0])), (7, _f32([0.0, 0.1, 0.0, 1.0]))],
+            _VECS,
+        ),
+        path,
+    )
+    assert sorted((r.vec_id, r.bucket) for r in planned.collect()) == pre
+    assert tx_read(spark, path).count() == len(pre) + 1
+
+
 @pytest.mark.parametrize("probe_radius", [0, 1, 2])
 def test_batch_core_matches_python_replay(spark, tmp_path, corpus_vecs, probe_radius):
     path = _index(spark, tmp_path, corpus_vecs)
@@ -157,7 +183,7 @@ def test_batch_core_matches_python_replay(spark, tmp_path, corpus_vecs, probe_ra
     }
     qdf = spark.createDataFrame(list(queries.items()), _VECS)
     got_rows = topk_against_index(
-        qdf, spark.read.parquet(path), N_PLANES, DIM, k=3, probe_radius=probe_radius
+        qdf, tx_read(spark, path), N_PLANES, DIM, k=3, probe_radius=probe_radius
     ).collect()
     got = {}
     for r in sorted(got_rows, key=lambda r: (r.query_id, -r.score, r.neighbor_id)):
