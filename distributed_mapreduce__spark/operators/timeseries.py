@@ -182,7 +182,7 @@ def _claim(spark, store_path: str, key: str, value: str, txn: str):
     if snap is None or key not in snap.properties:
         meta = {"action": "meta", "add": [], "remove": [], "txn": txn,
                 "partition_by": [_BATCH], "properties": {key: value}}
-        _commit(spark, store_path, lambda v: {"version": v, **meta}, txn, 20)
+        _commit(spark, store_path, lambda v: {"version": v, **meta}, txn)
         snap = _replay(spark, store_path)
     return snap.properties[key], snap
 

@@ -7,9 +7,11 @@ The design is the catalog-commit shape (Iceberg REST-catalog
 multi-table commits; Delta's coordinated-commits direction), rebuilt
 on this module's own primitives:
 
-1. **Stage + provisionally commit per table.** Each participant gets a
-   normal optimistic log commit (same version race, same claimers)
-   whose payload carries ``{"multi": {"coordinator", "txid"}}``.
+1. **Stage + provisionally commit per table.** Each participant runs
+   the single-table body of its verb — ``tx_write``'s (``txlog._write``)
+   for an append or overwrite, ``txlog._merge`` for a merge — so it
+   commits through the same claim loop and re-checks as that verb; its
+   payload only adds ``{"multi": {"coordinator", "txid"}}``.
    Provisional commits occupy a version but are INVISIBLE to readers
    (``txlog._snapshot_files`` skips them while unresolved).
 2. **Publish ONE coordinator record.** The transaction's atomic commit
@@ -37,18 +39,24 @@ truncates the log nor deletes provisional files while one is pending
 — an aborted transaction's files become ordinary vacuum debris.
 
 100 TB posture: the coordinator record is one KB-sized JSON per
-transaction; participants pay exactly what a plain ``tx_write`` pays
-(driver-side renames + small JSON I/O, data moves executor-side).
+transaction; an append or overwrite participant pays exactly what a
+plain ``tx_write(txn=)`` pays, a merge participant what ``tx_merge``
+pays (driver-side renames + small JSON I/O, data moves executor-side).
 Readers pay one existence probe per UNRESOLVED commit in replay
 range, and terminal resolutions are cached process-wide.
 
 Scope: ``append`` (default), ``overwrite``, and ``merge`` per
-participant (``modes=``; merge since round 11). Overwrite carries
-single-table overwrite's own semantics — a whole-snapshot
-replacement, last-writer-wins, no conflict check to lose — made
-atomic across tables by the same coordinator record; replay applies
-the reset at the commit's version position once resolved, so no
-reader ever sees table A's new snapshot with table B's old one.
+participant (``modes=``; merge since round 11). Append and overwrite
+are ``tx_write`` with its whole contract: schema-on-write, the
+table's partitioning, column mapping, CHECK constraints, row-id bases
+on row-tracked tables, writer-feature stamps, and the re-check of all
+of these when a concurrent commit takes the participant's version.
+Overwrite carries single-table overwrite's own semantics — a
+whole-snapshot replacement, last-writer-wins, no conflict check to
+lose — made atomic across tables by the same coordinator record;
+replay applies the reset at the commit's version position once
+resolved, so no reader ever sees table A's new snapshot with table
+B's old one.
 
 ``merge`` runs the exact single-table MERGE body per participant
 (stats-pruned copy-on-write upsert, CDF sidecar per the table's
@@ -85,21 +93,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from .sinks import hadoop_fs
 from .txlog import (
-    _apply_column_mapping,
-    _check_append_schema,
-    _check_constraints,
-    _check_writer_features,
-    _collect_stats,
-    _commit,
-    _committed_txns,
     _merge,
     _multi_record_path,
     _pending_multi,
-    _phys_map,
     _read_record,
-    _replay,
-    _Snapshot,
-    _stage_and_place,
+    _write,
     _write_atomic,
 )
 
@@ -113,7 +111,6 @@ def tx_multi(
     coordinator: str,
     txn: str | None = None,
     stats_cols=None,
-    max_retries: int = 20,
     modes: "dict[str, str] | None" = None,
     merge_keys: "dict[str, str | list[str]] | None" = None,
     merge_clauses: "dict[str, dict] | None" = None,
@@ -128,8 +125,8 @@ def tx_multi(
     half-done table commits and republishing is a no-op; omit it and
     a fresh txid is drawn (a retry after a mid-flight crash would
     then leave the first attempt pending until aborted).
-    ``stats_cols`` records per-file [min,max] in each participant's
-    commit, same as :func:`~.txlog.tx_write`.
+    ``stats_cols`` is :func:`~.txlog.tx_write`'s, applied to each
+    append or overwrite participant.
 
     ``modes`` maps a table path to ``'append'`` (default),
     ``'overwrite'``, or ``'merge'`` — e.g. atomically replacing a
@@ -188,110 +185,41 @@ def tx_multi(
         return dict(rec["tables"])  # idempotent replay of a success
 
     table_txn = f"multi:{txid}"
+    marker = {"multi": {"coordinator": coordinator, "txid": txid}}
     versions: dict[str, int] = {}
     # deterministic participant order so concurrent retries of the
     # same txn converge instead of deadlocking on different prefixes
     for path in sorted(writes):
         mode = (modes or {}).get(path, "append")
-        if mode == "merge":
-            # the one MERGE body: its prelude replays the table, returns
-            # the version of a table_txn a crashed attempt committed and
-            # checks writer features; it validates, prunes, stages and
-            # writes the CDF sidecar. Only the commit differs: it
-            # carries the multi marker, so it stays invisible until the
-            # coordinator record lands. No clauses: the upsert
-            cl = (merge_clauses or {}).get(path)
-            clauses = [None] * 3 if cl is None else [
-                list(cl.get(k) or []) for k in (
-                    "when_matched", "when_not_matched",
-                    "when_not_matched_by_source",
-                )
-            ]
-            marker = {"multi": {"coordinator": coordinator, "txid": txid}}
-            try:
-                versions[path] = _merge(
-                    writes[path], path, merge_keys[path], table_txn, None,
-                    *clauses, extra=marker, max_retries=max_retries,
-                )
-            except FileNotFoundError as e:
-                raise FileNotFoundError(
-                    f"modes[{path!r}]='merge' but the table does not "
-                    f"exist; merge needs live rows to upsert into ({e})"
-                ) from e
+        # each participant runs the single-table body of its verb and
+        # differs only in its commit, which carries the multi marker
+        # and so stays invisible until the coordinator record lands.
+        # Both bodies return the version of a table_txn a crashed
+        # attempt committed
+        if mode != "merge":
+            versions[path] = _write(
+                writes[path], path, mode, table_txn, stats_cols,
+                extra=marker,
+            )
             continue
-        if (prior := _committed_txns(spark, path).get(table_txn)) is not None:
-            versions[path] = prior  # resumed from a crashed attempt
-            continue
-        part_by = None
+        # no clauses: the upsert
+        cl = (merge_clauses or {}).get(path)
+        clauses = [None] * 3 if cl is None else [
+            list(cl.get(k) or []) for k in (
+                "when_matched", "when_not_matched",
+                "when_not_matched_by_source",
+            )
+        ]
         try:
-            psnap = _replay(spark, path)
-        except FileNotFoundError:
-            psnap = None
-        if psnap is not None:
-            # same writer-feature + CHECK-constraint guards as every
-            # single-table write
-            _check_writer_features(psnap.properties, path)
-            _check_constraints(
-                writes[path], psnap.properties, path,
-                f"tx_multi participant ({mode})",
+            versions[path] = _merge(
+                writes[path], path, merge_keys[path], table_txn, None,
+                *clauses, extra=marker,
             )
-        if mode == "append":
-            # same schema-on-write + partition-inheritance contract as
-            # tx_write (txlog.py); overwrites reset layout like tx_write
-            _check_append_schema(writes[path], path, "enforce")
-            part_by = psnap.partition_by if psnap is not None else None
-        schema_json = writes[path].schema.json()
-        stage_df = writes[path]
-        if psnap is not None and _phys_map(psnap.schema):
-            # column-mapped participant: stage under PHYSICAL names,
-            # record the logical schema (same contract as tx_write)
-            stage_df, schema_json = _apply_column_mapping(
-                writes[path], psnap.schema
-            )
-        added = _stage_and_place(stage_df, path, part_by)
-        stat_cols = set(stats_cols or [])
-        if stat_cols:
-            # stats key on PHYSICAL names on mapped tables (identity
-            # otherwise — same rule as tx_write)
-            pm = _phys_map(schema_json)
-            stat_cols = {pm.get(c, c) for c in stat_cols}
-        if part_by:
-            stat_cols.update(part_by)
-        pseudo = _Snapshot(
-            eps={}, mor=[], dv=[], blooms=[], version=-1, schema=schema_json,
-            evolved=False, properties={}, partition_by=part_by,
-            stats={}, txns={},
-        )
-        stats = (
-            _collect_stats(
-                spark, path, added, sorted(stat_cols),
-                pseudo if part_by else None,
-            )
-            if stat_cols and added
-            else None
-        )
-        def build(
-            next_v: int, added=added, stats=stats, mode=mode,
-            schema_json=schema_json, part_by=part_by,
-        ) -> dict:
-            payload = {
-                "version": next_v,
-                "action": mode,
-                "add": added,
-                "remove": [],
-                "txn": table_txn,
-                "multi": {"coordinator": coordinator, "txid": txid},
-                "schema": schema_json,
-            }
-            if part_by:
-                payload["partition_by"] = part_by
-            if stats:
-                payload["stats"] = stats
-            return payload
-
-        versions[path] = _commit(
-            spark, path, build, table_txn, max_retries
-        )
+        except FileNotFoundError as e:
+            raise FileNotFoundError(
+                f"modes[{path!r}]='merge' but the table does not "
+                f"exist; merge needs live rows to upsert into ({e})"
+            ) from e
 
     # the atomic commit point: one put-if-absent record resolves every
     # participant's provisional commit at once

@@ -166,7 +166,6 @@ def _commit(
     path: str,
     build_payload,
     txn: str | None,
-    max_retries: int,
     revalidate=None,
     checked_at: "int | None" = None,
 ) -> int:
@@ -184,7 +183,7 @@ def _commit(
         return payload
 
     version, published = _commit_with_retries(
-        spark, path, stamped, txn, max_retries,
+        spark, path, stamped, txn,
         revalidate=revalidate, checked_at=checked_at,
     )
     if published and (version + 1) % CHECKPOINT_EVERY == 0:
@@ -237,8 +236,7 @@ def _refuse_mor(snap: "_Snapshot", path: str, op: str) -> None:
 
 
 def _check_append_schema(
-    df: DataFrame, path: str, schema_mode: str,
-    snap: "_Snapshot | None" = None,
+    df: DataFrame, path: str, schema_mode: str, snap: "_Snapshot | None",
 ) -> "int | None":
     """Schema-on-write (the Delta contract): an append whose schema
     differs from the table's is refused by default — a reader using
@@ -254,16 +252,14 @@ def _check_append_schema(
     overwrite that retypes a column between the pre-stage check and
     the commit race cannot slip a mixed-type file set past
     enforcement (the commit-time metadata re-check Delta does).
-    ``snap`` is the caller's current snapshot, when it holds one."""
+    ``snap`` is the table's current snapshot, None when the table does
+    not exist yet."""
     if schema_mode not in ("enforce", "merge"):
         raise ValueError(
             f"schema_mode must be enforce|merge, got {schema_mode!r}"
         )
     if snap is None:
-        try:
-            snap = _replay(df.sparkSession, path)
-        except FileNotFoundError:
-            return None  # first commit defines the schema
+        return None  # first commit defines the schema
     current = snap.schema
     if current is None:
         return snap.version  # pre-schema-recording: nothing to enforce
@@ -297,7 +293,6 @@ def tx_set_properties(
     path: str,
     props: dict,
     txn: str | None = None,
-    max_retries: int = 20,
 ) -> int:
     """SET/UNSET table properties (the Delta TBLPROPERTIES shape): a
     metadata-only ``meta`` commit carrying a key-delta — given keys
@@ -328,7 +323,7 @@ def tx_set_properties(
             "properties": dict(props),
         }
 
-    return _commit(spark, path, build, txn, max_retries)
+    return _commit(spark, path, build, txn)
 
 
 def tx_properties(
@@ -344,7 +339,6 @@ def tx_set_partitioning(
     spark: SparkSession,
     path: str,
     partition_by: "Sequence[str]",
-    max_retries: int = 20,
 ) -> int:
     """PARTITION EVOLUTION as a metadata operation (Iceberg's ALTER
     TABLE ... [de]PARTITIONED BY, applied to this format): change the
@@ -432,7 +426,7 @@ def tx_set_partitioning(
             payload["properties"] = delta
         return payload
 
-    return _commit(spark, path, build, None, max_retries)
+    return _commit(spark, path, build, None)
 
 
 def tx_constraints(spark: SparkSession, path: str) -> "dict[str, str]":
@@ -446,7 +440,6 @@ def tx_add_constraint(
     path: str,
     name: str,
     expr: str,
-    max_retries: int = 20,
 ) -> int:
     """ADD CONSTRAINT (Delta's ``ALTER TABLE ADD CONSTRAINT name CHECK
     (expr)``): record a CHECK constraint every future write must
@@ -497,11 +490,11 @@ def tx_add_constraint(
     delta = _writer_feature_delta(snap.properties, {"constraints"})
     if delta:
         props.update(delta)
-    return tx_set_properties(spark, path, props, max_retries=max_retries)
+    return tx_set_properties(spark, path, props)
 
 
 def tx_drop_constraint(
-    spark: SparkSession, path: str, name: str, max_retries: int = 20
+    spark: SparkSession, path: str, name: str
 ) -> int:
     """DROP CONSTRAINT: remove a CHECK constraint (unset its
     property). The ``constraints`` writer feature stays stamped —
@@ -510,7 +503,7 @@ def tx_drop_constraint(
     if name not in tx_constraints(spark, path):
         raise KeyError(f"no constraint {name!r} on table {path}")
     return tx_set_properties(
-        spark, path, {f"constraint.{name}": None}, max_retries=max_retries
+        spark, path, {f"constraint.{name}": None}
     )
 
 
@@ -601,7 +594,6 @@ def tx_require_writer_features(
     spark: SparkSession,
     path: str,
     features: "Sequence[str]",
-    max_retries: int = 20,
 ) -> int:
     """Explicitly require writer features on a table (union-merged
     into the ``writer.features`` property via a meta commit). Raises
@@ -993,7 +985,6 @@ def _apply_column_mapping(
 
 def _mapping_commit(
     spark, path: str, snap: "_Snapshot", new_schema_json: str,
-    max_retries: int,
 ) -> int:
     """Commit a logical-schema REPLACEMENT (rename/drop): a meta
     commit whose ``schema_replace`` swaps the recorded schema without
@@ -1017,7 +1008,7 @@ def _mapping_commit(
             payload["properties"] = delta
         return payload
 
-    return _commit(spark, path, build, None, max_retries)
+    return _commit(spark, path, build, None)
 
 
 def _mapping_prereqs(spark, path: str, op: str) -> "_Snapshot":
@@ -1048,7 +1039,6 @@ def tx_rename_column(
     path: str,
     old: str,
     new: str,
-    max_retries: int = 20,
 ) -> int:
     """ALTER TABLE RENAME COLUMN as a METADATA operation (Delta's
     column mapping): one commit, zero rewrites, on a 100 TB table as
@@ -1093,7 +1083,7 @@ def tx_rename_column(
         name = new if f["name"] == old else f["name"]
         fields.append({**f, "name": name, "metadata": meta})
     return _mapping_commit(
-        spark, path, snap, json.dumps({**d, "fields": fields}), max_retries
+        spark, path, snap, json.dumps({**d, "fields": fields})
     )
 
 
@@ -1101,7 +1091,6 @@ def tx_drop_column(
     spark: SparkSession,
     path: str,
     name: str,
-    max_retries: int = 20,
 ) -> int:
     """ALTER TABLE DROP COLUMN as a METADATA operation: the field
     leaves the logical schema; its bytes stay in the files (readable
@@ -1145,16 +1134,28 @@ def tx_drop_column(
         meta.setdefault("phys", f["name"])  # freeze physical identity
         fields.append({**f, "metadata": meta})
     return _mapping_commit(
-        spark, path, snap, json.dumps({**d, "fields": fields}), max_retries
+        spark, path, snap, json.dumps({**d, "fields": fields})
     )
 
 
 def _stage_and_place(
     df: DataFrame, path: str, partition_by: "Sequence[str] | None" = None
 ) -> list[str]:
+    """Stage ``df`` into ``data/``: :func:`_stage_into` for data files."""
+    return _stage_into(df, path, "data", partition_by)
+
+
+def _stage_into(
+    df: DataFrame, path: str, subdir: str,
+    partition_by: "Sequence[str] | None" = None,
+) -> list[str]:
     """Write ``df`` invisibly under _staging, then rename its part
-    files into data/ under fresh UUID names. Returns the placed
-    relative paths.
+    files into ``subdir`` under fresh UUID names. Returns the placed
+    relative paths. Data files go to ``data/``; sidecars (``_deletes``/
+    ``_dv``/``_cdf``/``_bloom``) to their own directory, never
+    ``data/``: sidecar schemas must never leak into schema recovery or
+    the data-file sweep. A crash before the commit leaves
+    unreferenced files ``tx_vacuum`` sweeps.
 
     With ``partition_by``, the staging write is hive-layout
     (``partitionBy``) and each leaf file keeps its partition
@@ -1177,7 +1178,7 @@ def _stage_and_place(
         writer = writer.partitionBy(*[pf.name for pf in fields])
     writer.parquet(stage_dir)
     fs, sdir = hadoop_fs(spark, stage_dir)
-    fs.mkdirs(hadoop_fs(spark, f"{path}/data")[1])
+    fs.mkdirs(hadoop_fs(spark, f"{path}/{subdir}")[1])
     added: list[str] = []
 
     def place(d, rel: str) -> None:
@@ -1190,12 +1191,12 @@ def _stage_and_place(
                 continue
             if not name.endswith(".parquet"):
                 continue
-            dest_rel = f"data/{rel}{uuid.uuid4().hex}.parquet"
+            dest_rel = f"{subdir}/{rel}{uuid.uuid4().hex}.parquet"
             dest = hadoop_fs(spark, f"{path}/{dest_rel}")[1]
             if rel:
                 fs.mkdirs(dest.getParent())
             if not fs.rename(st.getPath(), dest):
-                raise RuntimeError(f"could not place data file {dest_rel}")
+                raise RuntimeError(f"could not place file {dest_rel}")
             added.append(dest_rel)
 
     place(sdir, "")
@@ -1203,44 +1204,18 @@ def _stage_and_place(
     return added
 
 
-def _stage_sidecars(df: DataFrame, path: str, subdir: str) -> list[str]:
-    """Stage ``df`` invisibly under ``_staging/``, then rename its part
-    files into the named sidecar directory (``_deletes``/``_dv``/
-    ``_cdf``/``_bloom``) under fresh UUID names — NOT ``data/``:
-    sidecar schemas must never leak into schema recovery or the
-    data-file sweep. Returns the placed relative paths. A crash before
-    the commit leaves unreferenced files ``tx_vacuum`` sweeps."""
-    spark = df.sparkSession
-    stage_dir = f"{path}/_staging/{uuid.uuid4().hex}"
-    df.write.mode("overwrite").parquet(stage_dir)
-    fs, sdir = hadoop_fs(spark, stage_dir)
-    fs.mkdirs(hadoop_fs(spark, f"{path}/{subdir}")[1])
-    placed = []
-    for st in fs.listStatus(sdir):
-        if not st.getPath().getName().endswith(".parquet"):
-            continue
-        name = f"{uuid.uuid4().hex}.parquet"
-        if not fs.rename(
-            st.getPath(), hadoop_fs(spark, f"{path}/{subdir}/{name}")[1]
-        ):
-            raise RuntimeError(f"could not place {subdir} file {name}")
-        placed.append(f"{subdir}/{name}")
-    fs.delete(sdir, True)
-    return placed
-
-
 def _stage_deletes(keys: DataFrame, path: str) -> list[str]:
     """Stage a merge-on-read tombstone's key set under ``_deletes/``.
     Delete key sets are small by use-case; coalesce(1) keeps the
     read-side broadcast a single KB-scale file."""
-    return _stage_sidecars(keys.coalesce(1), path, "_deletes")
+    return _stage_into(keys.coalesce(1), path, "_deletes")
 
 
 def _stage_dv(pos: DataFrame, path: str) -> list[str]:
     """Stage a deletion vector's (``_file``, ``_pos``) pairs under
     ``_dv/``. A DV is KB-scale by use-case (positions, not rows);
     coalesce(1) keeps the read-side broadcast a single file."""
-    return _stage_sidecars(
+    return _stage_into(
         pos.select("_file", "_pos").coalesce(1), path, "_dv"
     )
 
@@ -1250,7 +1225,7 @@ def _stage_cdf(rows: DataFrame, path: str) -> list[str]:
     under ``_cdf/``. Cost is bounded by the rewrite itself: the change
     rows are a subset of the touched files' rows plus the updates,
     both already in flight."""
-    return _stage_sidecars(rows, path, "_cdf")
+    return _stage_into(rows, path, "_cdf")
 
 
 def _json_stat(v):
@@ -1576,7 +1551,7 @@ def _collect_blooms(
             "bits",
         )
     )
-    return _stage_sidecars(grouped.coalesce(1), path, "_bloom")
+    return _stage_into(grouped.coalesce(1), path, "_bloom")
 
 
 #: session-scoped cache of PARSED bloom sidecars keyed by
@@ -1703,7 +1678,6 @@ def tx_write(
     path: str,
     mode: str = "append",
     txn: str | None = None,
-    max_retries: int = 20,
     stats_cols: "Sequence[str] | None" = None,
     schema_mode: str = "enforce",
     partition_by: "Sequence[str] | None" = None,
@@ -1770,6 +1744,24 @@ def tx_write(
     recorded [min, max]. Transform layouts stamp reader level 3 and
     the ``partition-transforms`` writer feature, so older builds
     refuse instead of surfacing placement metadata as data."""
+    return _write(
+        df, path, mode, txn, stats_cols, schema_mode, partition_by,
+        bloom_cols, bloom_bits, bloom_k,
+    )
+
+
+def _write(
+    df: DataFrame, path: str, mode: str, txn: str | None,
+    stats_cols: "Sequence[str] | None", schema_mode: str = "enforce",
+    partition_by: "Sequence[str] | None" = None,
+    bloom_cols: "Sequence[str] | None" = None,
+    bloom_bits: int = _BLOOM_BITS, bloom_k: int = _BLOOM_K,
+    extra: "dict | None" = None,
+) -> int:
+    """The one write body: :func:`tx_write` and a ``tx_multi`` append
+    or overwrite participant (``extra`` carries its ``multi`` marker,
+    which keeps the commit provisional until the coordinator record
+    lands)."""
     if mode not in ("append", "overwrite"):
         raise ValueError(f"mode must be append|overwrite, got {mode!r}")
     if _ROW_ID in df.columns:
@@ -1859,15 +1851,13 @@ def tx_write(
                 f"columns {clash} collide with reserved derived "
                 f"partition names; rename them"
             )
+    # the claim loop looks for ``txn`` only above the anchor, whose
+    # txn map must have been checked (snap0's was, above)
     checked_at = (
         _check_append_schema(df, path, schema_mode, snap0)
         if mode == "append"
         else None
     )
-    if not table_exists:
-        # the claim loop looks for ``txn`` only above the anchor, whose
-        # txn map must have been checked (snap0's was, above)
-        checked_at = None
     if table_exists:
         _check_constraints(
             df, snap0.properties, path, f"tx_write(mode={mode!r})"
@@ -1985,6 +1975,7 @@ def tx_write(
             payload["blooms"] = bloom_meta
         if rt_counts is not None:
             payload["row_bases"] = _fresh_row_bases(next_v, rt_counts)
+        payload.update(extra or {})
         return payload
 
     def revalidate() -> None:
@@ -1993,11 +1984,11 @@ def tx_write(
         # concurrent overwrite that retyped a column / changed the
         # partition layout — or a concurrent ADD CONSTRAINT — could
         # slip a non-conforming commit past enforcement
-        props_now = tx_properties(spark, path)
+        now = _replay(spark, path)
         _check_constraints(
-            df, props_now, path, f"tx_write(mode={mode!r})"
+            df, now.properties, path, f"tx_write(mode={mode!r})"
         )
-        if rt_counts is None and added and _row_tracking_on(props_now):
+        if rt_counts is None and added and _row_tracking_on(now.properties):
             raise RuntimeError(
                 f"conflict: row tracking was enabled on {path} while "
                 "this write was in flight — its rows have no id bases; "
@@ -2005,8 +1996,7 @@ def tx_write(
             )
         if mode != "append":
             return
-        _check_append_schema(df, path, schema_mode)
-        now = _replay(spark, path)
+        _check_append_schema(df, path, schema_mode, now)
         if (now.partition_by or None) != (partition_by or None):
             raise RuntimeError(
                 f"conflict: table partitioning at {path} changed to "
@@ -2040,7 +2030,7 @@ def tx_write(
                     )
 
     return _commit(
-        spark, path, build, txn, max_retries,
+        spark, path, build, txn,
         revalidate=revalidate, checked_at=checked_at,
     )
 
@@ -3484,7 +3474,7 @@ def _merge(
     txn: str | None, cdf: "bool | None",
     wm: "list[dict] | None", wnm: "list[dict] | None",
     wnmbs: "list[dict] | None",
-    extra: "dict | None" = None, max_retries: int = 20,
+    extra: "dict | None" = None,
 ) -> int:
     """The one MERGE body: :func:`tx_merge` in both forms, a
     ``tx_multi`` merge participant (``extra`` carries its ``multi``
@@ -3725,7 +3715,6 @@ def _merge(
         return _cow_tail(
             spark, path, snap, txn, cdf, scope if comb else [], "merge",
             split, keys=keys_l, conflict_keys=conflict_keys, extra=extra,
-            max_retries=max_retries,
         )
 
 
@@ -3807,7 +3796,6 @@ def _commit_rewrite(
     txn: str | None,
     action: str,
     *,
-    max_retries: int = 20,
     stats: dict | None = None,
     conflict_keys: "tuple | list[tuple] | None" = None,
     extra: dict | None = None,
@@ -3985,7 +3973,7 @@ def _commit_rewrite(
     # _mutation_prelude), so the claim loop checks only the commits
     # after it
     return _commit(
-        spark, path, build, txn, max_retries, checked_at=snap.version
+        spark, path, build, txn, checked_at=snap.version
     )
 
 
@@ -4815,7 +4803,7 @@ def _fresh_row_bases(next_v: int, counts: "dict[str, int]") -> dict:
 
 
 def tx_enable_row_tracking(
-    spark: SparkSession, path: str, max_retries: int = 20
+    spark: SparkSession, path: str
 ) -> int:
     """Turn on ROW TRACKING: one metadata commit backfills a row-id
     base for every live file (ids for existing rows are assigned as of
@@ -4868,7 +4856,7 @@ def tx_enable_row_tracking(
             )
 
     return _commit(
-        spark, path, build, None, max_retries,
+        spark, path, build, None,
         revalidate=revalidate, checked_at=snap.version,
     )
 
@@ -5180,7 +5168,7 @@ def _cow_tail(
     spark, path: str, snap: _Snapshot, txn: str | None, cdf: bool,
     touched: "list[str]", action: str, split,
     keys: "list[str] | None" = None, conflict_keys=None,
-    extra: "dict | None" = None, max_retries: int = 20,
+    extra: "dict | None" = None,
 ) -> int:
     """Read the ``touched`` files as ``old`` (None when there are
     none), ``split(old)`` them into the rows to write in their place
@@ -5243,7 +5231,6 @@ def _cow_tail(
         )
         return _commit_rewrite(
             spark, path, added, touched, snap, txn, action,
-            max_retries=max_retries,
             stats=_rewrite_stats(spark, path, touched, added, keys, snap),
             blooms=_rewrite_blooms(spark, path, touched, added, snap),
             conflict_keys=conflict_keys,
@@ -5280,7 +5267,7 @@ def _commit_noop(
             **(fields or {}),
         }
 
-    return _commit(spark, path, build, txn, 20)
+    return _commit(spark, path, build, txn)
 
 
 def tx_delete_where(
@@ -5758,7 +5745,6 @@ def tx_restore(
     spark: SparkSession,
     path: str,
     version: "int | None" = None,
-    max_retries: int = 20,
     to_ts: "float | None" = None,
 ) -> int:
     """RESTORE TABLE ... VERSION AS OF: commit a metadata-only
@@ -5847,7 +5833,7 @@ def tx_restore(
             payload["stats"] = stats
         return payload
 
-    return _commit(spark, path, build, None, max_retries)
+    return _commit(spark, path, build, None)
 
 
 def tx_clone(
@@ -5855,7 +5841,6 @@ def tx_clone(
     src: str,
     dst: str,
     version: int | None = None,
-    max_retries: int = 20,
 ) -> int:
     """Shallow clone: create table ``dst`` whose first commit
     REFERENCES ``src``'s live files (as of ``version``) absolutely —

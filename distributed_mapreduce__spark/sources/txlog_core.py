@@ -50,6 +50,9 @@ READER_VERSION = 5
 
 _PAD = 20  # zero-padded version filenames sort lexicographically
 
+#: version races a commit may lose before it gives up
+COMMIT_RETRIES = 20
+
 
 def _read_small(spark, fs, p) -> bytes:
     raw = fs.open(p)
@@ -1044,7 +1047,6 @@ def _commit_with_retries(
     path: str,
     build_payload,
     txn: str | None,
-    max_retries: int,
     revalidate=None,
     checked_at: "int | None" = None,
 ) -> "tuple[int, bool]":
@@ -1073,7 +1075,7 @@ def _commit_with_retries(
     fs, p = _log_fs(spark, path)
     anchor = -1 if checked_at is None else checked_at
     txn_seen = checked_at
-    for _ in range(max_retries):
+    for _ in range(COMMIT_RETRIES):
         listing = _list_commits(spark, path)
         # max over commits AND checkpoints: after tx_vacuum truncates
         # the log, the surviving checkpoint still pins the version
@@ -1107,5 +1109,5 @@ def _commit_with_retries(
             return next_v, True
         # lost the race to another writer — re-read the log, retry
     raise RuntimeError(
-        f"could not commit to {path} after {max_retries} version races"
+        f"could not commit to {path} after {COMMIT_RETRIES} version races"
     )

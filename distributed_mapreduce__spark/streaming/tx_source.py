@@ -1019,7 +1019,7 @@ class TxTableStreamWriter(DataSourceStreamArrowWriter):
         version, published = None, False
         if txn not in self.txns:
             version, published = _commit_with_retries(
-                None, self.path, build, txn, 20,
+                None, self.path, build, txn,
                 revalidate=revalidate, checked_at=self.checked_at,
             )
         if not published:

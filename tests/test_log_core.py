@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 
 import distributed_mapreduce__spark as pkg
 from distributed_mapreduce__spark.sources import txlog, txlog_core
+from distributed_mapreduce__spark.sources.multitx import tx_multi
 from distributed_mapreduce__spark.sources.txlog import (
     _replay,
     tx_add_constraint,
@@ -66,7 +67,7 @@ def test_log_fold_and_claim_loop_live_in_one_place():
         (r'set\(c\["dv_clears"\]\)', txlog_core._replay),
         (r'== "writer\.features"', txlog_core._replay),
         (r"next_v\s*=", txlog_core._commit_with_retries),
-        (r"range\(max_retries\)", txlog_core._commit_with_retries),
+        (r"range\(COMMIT_RETRIES\)", txlog_core._commit_with_retries),
     ):
         allowed = _lines_of(fn, pattern)
         assert allowed, f"{fn.__name__} no longer matches {pattern!r}"
@@ -118,6 +119,19 @@ def test_mutation_conflict_rules_live_in_one_commit_body():
         allowed = _lines_of(txlog._commit_rewrite, pattern)
         assert allowed, f"_commit_rewrite no longer matches {pattern!r}"
         assert _package_hits(pattern) == allowed, pattern
+
+
+def test_multitx_keeps_no_write_body():
+    """``tx_multi``'s append and overwrite participants run
+    ``tx_write``'s body and its merge participants ``_merge``:
+    ``multitx`` stages, collects stats and claims versions nowhere
+    itself."""
+    from distributed_mapreduce__spark.sources import multitx
+
+    src = inspect.getsource(multitx)
+    for name in ("_stage_and_place", "_collect_stats", "_commit",
+                 "_committed_txns"):
+        assert not re.search(rf"\b{name}\(", src), name
 
 
 def _sink(spark, t, ids):
@@ -211,6 +225,9 @@ LOG_READ_PINS = {
     # commit above the checkpoint; the txn check itself reads nothing
     # more while the log has not moved past the merge's snapshot
     "merge_txn": (2, 6, 1),
+    # a one-participant tx_multi append, one version after "merge_txn":
+    # what tx_write(txn=) reads at that version
+    "multi_append": (2, 7, 1),
 }
 
 
@@ -244,6 +261,11 @@ def test_log_reads_pinned(spark, tmp_path, monkeypatch):
     got["merge"] = fs.take()
     tx_merge(rows(0, 5, "n"), src, "id", txn="m2")
     got["merge_txn"] = fs.take()
+    tx_multi(
+        {src: rows(400, 10, "mt")}, str(tmp_path / "cat"), txn="mt1",
+        stats_cols=["id"],
+    )
+    got["multi_append"] = fs.take()
     got = {
         k: (v["list"], v["commit"], v["checkpoint"]) for k, v in got.items()
     }

@@ -593,3 +593,53 @@ def test_multi_merge_conditional_clauses(spark, tmp_path, monkeypatch):
     assert got_a[0] == "crashed" and got_a[1] == "crashed"
     assert 0 not in got_b and got_b[1] == "m1"
     assert tx_multi_pending(spark, a) == []
+
+
+def test_participants_get_row_ids_on_tracked_tables(spark, tmp_path):
+    """Append and overwrite participants run tx_write's body, so on a
+    row-tracked table every row they add gets a distinct, non-NULL
+    ``_row_id`` from its commit's id range."""
+    from distributed_mapreduce__spark.sources.txlog import (
+        tx_enable_row_tracking,
+        tx_scan_with_row_ids,
+    )
+
+    a, b = str(tmp_path / "a"), str(tmp_path / "b")
+    coord = str(tmp_path / "catalog")
+    for t in (a, b):
+        tx_write(_df(spark, 0, 3, "seed"), t)
+        tx_enable_row_tracking(spark, t)
+    tx_multi(
+        {a: _df(spark, 10, 13, "tx"), b: _df(spark, 20, 24, "tx")},
+        coord, txn="rt1", modes={b: "overwrite"},
+    )
+    ids_a = {
+        r.id: r._row_id for r in tx_scan_with_row_ids(spark, a).collect()
+    }
+    ids_b = {
+        r.id: r._row_id for r in tx_scan_with_row_ids(spark, b).collect()
+    }
+    assert sorted(ids_a) == [0, 1, 2, 10, 11, 12]
+    assert sorted(ids_b) == [20, 21, 22, 23]
+    for got in (ids_a, ids_b):
+        assert None not in got.values()
+        assert len(set(got.values())) == len(got)
+
+
+def test_participant_rechecks_constraint_added_while_publishing(
+    spark, tmp_path, during_publish
+):
+    """A CHECK constraint added while a participant is publishing takes
+    the participant's version: its retry re-checks the new constraint
+    and refuses, so none of its violating rows ever becomes visible."""
+    from distributed_mapreduce__spark.sources.txlog import tx_add_constraint
+
+    a = str(tmp_path / "a")
+    coord = str(tmp_path / "catalog")
+    tx_write(_df(spark, 0, 3, "seed"), a)
+    during_publish(lambda: tx_add_constraint(spark, a, "nonneg", "id >= 0"))
+    with pytest.raises(ValueError, match="nonneg"):
+        tx_multi({a: _df(spark, -3, 0, "neg")}, coord, txn="c1")
+    assert _ids(spark, a) == [0, 1, 2]
+    assert tx_multi_pending(spark, a) == []
+    assert [h["action"] for h in tx_history(spark, a)] == ["append", "meta"]
